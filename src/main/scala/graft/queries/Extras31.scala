@@ -94,11 +94,12 @@ object Extras31 {
     // producer threads split the slice odd/even (MPMC), block on the full
     // ring, and are released by the consumer's progress. Every record is
     // delivered exactly once, so the aggregate equals the full input
-    // slice — the thread interleaving cannot show through. (Each refill
-    // cycle costs one micro-batch of fixed scheduling overhead, so the
-    // bench-facing capacity stays coarse; the HARD undersizing proof —
-    // 4096 records through 128 slots — lives in RingSourceSpec, where
-    // the row volume is small enough that 32 wraps stay cheap.)
+    // slice — the thread interleaving cannot show through. (Planning a
+    // batch frees its slots, so the producers refill the ring while that
+    // batch runs and each micro-batch of fixed scheduling overhead
+    // carries up to a full ring; the HARD undersizing proof — 4096
+    // records through 128 slots — lives in RingSourceSpec, where the row
+    // volume is small enough that 32 wraps stay cheap.)
     Qry(
       "q149_ring_backpressure",
       s"""WITH $oracleFirstCte

@@ -1,8 +1,10 @@
 package graft.sources
 
 import java.util
+import java.util.Optional
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
@@ -11,7 +13,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReportsSourceMetrics}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -29,10 +31,25 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * What changes is the execution model: the consumer is not a thread
   * calling `try_dequeue` but the micro-batch engine — each trigger turns
   * the newly-arrived sequence range [start, end) into a batch of input
-  * partitions, and the destructive dequeue (the reference's
-  * consumer-index advance) fires on the trigger AFTER a batch completes
-  * — see RingMicroBatchStream.latestOffset for why neither plan-time nor
-  * commit-time freeing is correct.
+  * partitions, and planning that batch IS the dequeue, as in the
+  * reference: `dequeue` moves the range's rows off the slots into one
+  * ring-held in-flight batch and frees those slots for producers at
+  * once, so they refill the ring while the batch runs. The in-flight
+  * rows are released by `consume` on the trigger AFTER the batch
+  * completes — see RingMicroBatchStream.latestOffset.
+  *
+  * Why an in-flight batch rather than handing the rows out once: the
+  * engine plans the same range several times while executing it
+  * (measured: 6 `planInputPartitions` calls per micro-batch — planning,
+  * explain, metrics), and a restarted query replays its write-ahead
+  * log's last batch. Both are served from the in-flight batch. It lives
+  * on the ring, not on the stream object, so a query restarted in the
+  * same JVM still finds it.
+  *
+  * Memory bound: Spark plans batch N+1 only after the next
+  * `latestOffset` has consumed batch N, so at most one batch is in
+  * flight and a ring holds at most 2 × capacity rows (capacity queued
+  * plus one batch of at most capacity in flight).
   *
   * Concurrency: producers and the planner synchronize on the ring
   * monitor. The reference's lock-free CAS loop buys nanoseconds on a
@@ -46,7 +63,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    `tryEnqueue` succeeds is backpressured by consumer progress
   *    (batch planning frees slots), and every enqueued record is
   *    delivered.
-  *  - drop-oldest: at-most-once. Records evicted before delivery are
+  *  - drop-oldest: at-most-once. Eviction touches only queued rows, so a
+  *    planned row is never evicted: every record is either delivered or
   *    counted in `dropped` — observable, never silent. Offsets only ever
   *    advance; a dropped range reads back as fewer rows, not an error
   *    (matching the reference, where an overwritten slot is simply gone).
@@ -73,21 +91,27 @@ final class GraftRing(
   private val mask = capacity - 1L
   private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
   private val slots = new Array[InternalRow](capacity)
-  // absolute (never-wrapping) sequence numbers: retained rows are
-  // [headSeq, tailSeq); the consumer has destructively consumed
-  // everything below committedSeq
+  // absolute (never-wrapping) sequence numbers: queued rows are
+  // [headSeq, tailSeq); rows below headSeq have left the slots
+  // (dequeued, consumed or evicted); the consumer has released
+  // everything below consumedSeq
   private var headSeq = 0L
   private var tailSeq = 0L
   private var consumedSeq = 0L
   private var droppedCount = 0L
+  // dequeued rows not yet consumed, as runs of consecutive sequence
+  // numbers (first seq, rows) in sequence order. One run per planned
+  // range; a second only when a new query starts on a ring whose
+  // previous query stopped with a batch in flight
+  private val flight = mutable.ArrayBuffer[(Long, Array[InternalRow])]()
 
   /** Non-blocking enqueue. Full ring: reject-new → false (the reference's
-    * `try_enqueue`); drop-oldest → evict the oldest retained row, count
-    * it if it was never delivered, and accept. */
+    * `try_enqueue`); drop-oldest → evict the oldest queued row, count it,
+    * and accept. In-flight rows hold no slot, so they are never evicted. */
   def tryEnqueue(row: Row): Boolean = synchronized {
     if (tailSeq - headSeq == capacity) {
       if (!dropOldest) return false
-      if (headSeq >= consumedSeq) droppedCount += 1
+      droppedCount += 1
       slots((headSeq & mask).toInt) = null
       headSeq += 1
     }
@@ -97,7 +121,7 @@ final class GraftRing(
   }
 
   /** Blocking enqueue for reject-new producers: spin-then-sleep until a
-    * slot frees (consumer commit) or the timeout trips. */
+    * slot frees (the next batch plan dequeues) or the timeout trips. */
   def enqueue(row: Row, timeoutMs: Long = 120000L): Unit = {
     val deadline = System.nanoTime() + timeoutMs * 1000000L
     var spins = 0
@@ -112,35 +136,67 @@ final class GraftRing(
   }
 
   def latest: Long = synchronized(tailSeq)
-  def oldest: Long = synchronized(headSeq)
+  /** The oldest retained row: the in-flight batch's first row, else the
+    * oldest queued one. A stream with no committed offset starts here, so
+    * a query restarted after its first batch failed replays that batch. */
+  def oldest: Long = synchronized(flight.headOption.fold(headSeq)(_._1))
   def committed: Long = synchronized(consumedSeq)
   def dropped: Long = synchronized(droppedCount)
 
+  /** One consistent snapshot for progress reports: `queued` rows in the
+    * slots, `inFlight` rows dequeued but not consumed, `lag` = latest −
+    * committed, and `dropped`. */
+  def metrics: Map[String, Long] = synchronized {
+    Map("queued" -> (tailSeq - headSeq),
+      "inFlight" -> flight.iterator.map(_._2.length.toLong).sum,
+      "lag" -> (tailSeq - consumedSeq),
+      "dropped" -> droppedCount)
+  }
+
+  /** Plan-time dequeue of [from, until) — the reference's `try_dequeue`
+    * for a whole batch. Moves the range's queued rows off the slots into
+    * the in-flight batch, frees those slots for producers at once, and
+    * returns the range's rows. Planning the same range again (the engine
+    * does, several times per batch; so does a restart replaying its last
+    * logged batch) is served from the in-flight batch until `consume`
+    * releases it. Rows evicted by drop-oldest before the first plan are
+    * absent (at-most-once is the declared policy); queued rows below
+    * `from` belong to no batch and are counted in `dropped`. */
+  def dequeue(from: Long, until: Long): Array[InternalRow] = synchronized {
+    val lo = math.max(from, headSeq)
+    val hi = math.min(until, tailSeq)
+    if (lo < hi) {
+      flight += ((lo, Array.tabulate((hi - lo).toInt)(i =>
+        slots(((lo + i) & mask).toInt))))
+      droppedCount += lo - headSeq
+      while (headSeq < hi) {
+        slots((headSeq & mask).toInt) = null
+        headSeq += 1
+      }
+    }
+    flight.iterator.flatMap { case (s, rows) =>
+      def at(seq: Long) = math.min(math.max(seq - s, 0L), rows.length.toLong).toInt
+      rows.slice(at(from), at(until))
+    }.toArray
+  }
+
   /** Destructive consume up to `seq` — the reference's consumer-index
-    * advance. Slots below the consume point are freed for producers.
-    * Called from RingMicroBatchStream.latestOffset once the previous
-    * batch has fully executed, and from the engine's offset commit
-    * (bookkeeping; a monotone no-op by then). */
+    * advance. Releases the in-flight rows below `seq` and frees any
+    * queued slot below it. Called from RingMicroBatchStream.latestOffset
+    * once the previous batch has fully executed, and from the engine's
+    * offset commit (bookkeeping; a monotone no-op by then). */
   def consume(seq: Long): Unit = synchronized {
     consumedSeq = math.max(consumedSeq, math.min(seq, tailSeq))
     while (headSeq < consumedSeq) {
       slots((headSeq & mask).toInt) = null
       headSeq += 1
     }
-  }
-
-  /** Non-destructive copy of the retained rows in [from, until) — rows
-    * already evicted by drop-oldest are absent (at-most-once is the
-    * declared policy). Non-destructive because the engine plans the SAME
-    * batch range several times while executing it (measured: 6 calls per
-    * micro-batch — planning, explain, metrics); the consumer-pointer
-    * advance happens in RingMicroBatchStream.latestOffset instead, once
-    * the engine's single-threaded trigger loop proves the batch is done. */
-  def slice(from: Long, until: Long): Array[InternalRow] = synchronized {
-    val lo = math.max(from, headSeq)
-    val hi = math.min(until, tailSeq)
-    if (hi <= lo) Array.empty[InternalRow]
-    else Array.tabulate((hi - lo).toInt)(i => slots(((lo + i) & mask).toInt))
+    // runs are disjoint and ordered: only the first can straddle the cut
+    flight.filterInPlace { case (s, rows) => s + rows.length > consumedSeq }
+    if (flight.nonEmpty && flight.head._1 < consumedSeq) {
+      val (s, rows) = flight.head
+      flight(0) = (consumedSeq, rows.drop((consumedSeq - s).toInt))
+    }
   }
 }
 
@@ -174,9 +230,9 @@ private[sources] class RingOffset(val seq: Long) extends Offset {
   override def json(): String = seq.toString
 }
 
-/** The planned batch carries its rows: sliced under the ring monitor at
-  * plan time, so the batch content is immune to concurrent drop-oldest
-  * eviction between planning and task execution. Rows are
+/** The planned batch carries its rows: dequeued under the ring monitor
+  * at plan time and held in flight by the ring, so the batch content is
+  * immune to concurrent drop-oldest eviction. Rows are
   * GenericInternalRow (Serializable) — they cross the local task
   * boundary intact. */
 private[sources] case class RingInputPartition(rows: Array[InternalRow])
@@ -193,12 +249,16 @@ private[sources] class RingReaderFactory extends PartitionReaderFactory {
     }
 }
 
+/** The ring as a micro-batch stream. Planning a batch dequeues its range
+  * (producers refill the freed slots while it runs); the next trigger
+  * consumes it. Every progress event carries the ring's `queued`,
+  * `inFlight`, `lag` (latest − committed) and `dropped` counts. */
 private[sources] class RingMicroBatchStream(ringName: String)
-  extends MicroBatchStream {
+  extends MicroBatchStream with ReportsSourceMetrics {
   private def ring = RingRegistry.get(ringName)
 
-  // highest batch end this stream has planned; rows below it are
-  // destructively consumed on the NEXT trigger (see latestOffset)
+  // highest batch end this stream has planned; its in-flight rows are
+  // released on the NEXT trigger (see latestOffset)
   @volatile private var plannedUpTo = -1L
 
   // a stream that starts on a pre-filled drop-oldest ring begins at the
@@ -208,12 +268,11 @@ private[sources] class RingMicroBatchStream(ringName: String)
   /** The engine's trigger loop calls this between batches (and while
     * idle), on its single stream thread — so when it runs, every plan
     * and sink-add of the previously planned range has completed. THAT is
-    * the safe point for the destructive consumer-pointer advance. It
-    * cannot wait for the engine's `commit` instead: commit of batch N is
-    * deferred into the construction of batch N+1, which never happens
-    * when producers are blocked on a full ring waiting for exactly this
-    * free — a deadlock (verified against
-    * MicroBatchExecution.constructNextBatch →
+    * the safe point to release the in-flight batch (its slots were
+    * already freed when it was planned). Waiting for the engine's
+    * `commit` would hold the batch longer: commit of batch N is deferred
+    * into the construction of batch N+1, which happens only once new
+    * data arrives (MicroBatchExecution.constructNextBatch →
     * cleanUpLastExecutedMicroBatch, Spark 4.1). */
   override def latestOffset(): Offset = {
     if (plannedUpTo >= 0) ring.consume(plannedUpTo)
@@ -227,7 +286,7 @@ private[sources] class RingMicroBatchStream(ringName: String)
     val s = start.asInstanceOf[RingOffset].seq
     val e = end.asInstanceOf[RingOffset].seq
     plannedUpTo = math.max(plannedUpTo, e)
-    val rows = ring.slice(s, e)
+    val rows = ring.dequeue(s, e)
     if (rows.isEmpty) Array.empty
     else {
       // fan a large batch out to several read tasks (8192 rows each, ≤4
@@ -241,10 +300,14 @@ private[sources] class RingMicroBatchStream(ringName: String)
   override def createReaderFactory(): PartitionReaderFactory =
     new RingReaderFactory
 
-  // bookkeeping only — planning already consumed the range (see
-  // GraftRing.slice for why commit-time freeing would deadlock)
+  // bookkeeping only — the next latestOffset already released the range,
+  // except after a restart: then this releases the batch the previous
+  // query left in flight
   override def commit(end: Offset): Unit =
     ring.consume(end.asInstanceOf[RingOffset].seq)
+
+  override def metrics(latestConsumedOffset: Optional[Offset]): util.Map[String, String] =
+    ring.metrics.map { case (k, v) => k -> v.toString }.asJava
 
   override def stop(): Unit = ()
 }

@@ -243,9 +243,10 @@ object Streams {
   /** Consume a ring stream into memory while `produce` runs on separate
     * threads, polling until exactly `n` rows have landed. This is the
     * live producer/consumer shape (reject-new producers backpressured by
-    * the consumer's offset commits) that [[runToMemory]] cannot express:
-    * `processAllAvailable` would return between producer bursts and stop
-    * the query before the bus has carried everything.
+    * the consumer: planning a batch frees its slots) that
+    * [[runToMemory]] cannot express: `processAllAvailable` would return
+    * between producer bursts and stop the query before the bus has
+    * carried everything.
     *
     * Synchronized for the same reason as [[runToMemory]]: the
     * shuffle-partition override is session-global state. */
