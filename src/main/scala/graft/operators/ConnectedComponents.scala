@@ -22,18 +22,11 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Cost model per round: one neighbor equi-join (plus a second hop join
   * from round 3) unioned with the label table into one min-aggregate on
-  * the node id, folded into ONE Spark job — the staged frame is lazy, so
-  * the convergence aggregate's action materializes its blocks while
-  * computing the sum (eager staging ran two jobs per round, and on small
-  * graphs per-round job cost dominates the data cost). The label loop
-  * also narrows `spark.sql.shuffle.partitions` to a width derived from
-  * the staged edge leaf's measured bytes ([[Staging.loopShufflePartitions]],
-  * restored on exit): labels are one row per node — a sliver next to
-  * the edge pipeline — and wide shuffles pay pure task-scheduling
-  * overhead per round at fixture scale, while a fixed narrow width
-  * would cap the per-round edge aggregate's reducers at 100 TB. The
-  * driver holds only a per-round label-sum (convergence metric), never
-  * data.
+  * the node id, folded into ONE Spark job. The loop runs on
+  * [[Fixpoint]]: lazy per-round staging measured by one aggregate,
+  * release of the previous round, and a shuffle width derived from the
+  * staged edge leaf's bytes. The driver holds only a per-round
+  * label-sum (convergence metric), never data.
   *
   * Convergence detection is join-free: labels only ever DECREASE
   * (`least(old, …)` per node over a fixed node set), so the exact sum of
@@ -47,9 +40,8 @@ import org.apache.spark.sql.types.DecimalType
   * Failure safety at 100 TB: staging goes through [[Staging.stage]] —
   * executor-local checkpoints by default, reliable checkpoints under
   * `spark.graft.checkpointDir` so a lost executor degrades to a re-read
-  * instead of killing an hours-long job. Each round releases the
-  * previous round's staged blocks; callers running many queries in one
-  * session release the final frame via [[Staging.sweep]].
+  * instead of killing an hours-long job. Callers running many queries
+  * in one session release the final frame via [[Staging.sweep]].
   */
 object ConnectedComponents {
 
@@ -60,7 +52,6 @@ object ConnectedComponents {
     */
   def minLabel(edges: DataFrame, srcCol: String, dstCol: String,
       maxIterations: Int = 20): DataFrame = {
-    val spark = edges.sparkSession
     def now() = System.nanoTime()
     def secs(t0: Long) = f"${(now() - t0) / 1e9}%.2f"
     // materialize the edge list ONCE: `edges` may be an arbitrarily
@@ -81,47 +72,25 @@ object ConnectedComponents {
     // pipeline: one row per document, a few MB even when the corpus is
     // TBs). At the session's 32 shuffle partitions every round pays
     // 32-task scheduling per exchange for slivers of data — measured as
-    // the dominant q74 cost on the driver (round-4 VERDICT #2). The
-    // width is derived from the staged edge leaf's measured size
-    // (floor 8 at fixture scale — the r4-measured sweet spot; grows
-    // linearly with the data at 100x), scoped to the loop and restored
-    // — the caller's downstream plan keeps the session default. AQE may
-    // coalesce further below the chosen width.
-    // width derived from the staged edge leaf's measured bytes, not a
-    // constant: the per-round neighbor join/aggregate is edge-sized,
-    // and 8 reducers at 100 TB would be the one local-mode assumption
-    // left in the loop (r14 verdict #1; guide §2.1/§2.2); AQE is
-    // scope-disabled only in sliver mode (see Staging.withLoopShuffle)
-    Staging.withLoopShuffle(spark, sym) {
+    // the dominant q74 cost on the driver (round-4 VERDICT #2) — so the
+    // loop scope sizes the width from the staged edge leaf instead
+    // (floor 8 at fixture scale, linear in the data at 100x).
+    Fixpoint.scope("connected components", sym) {
       // coalesce: sum over an EMPTY label set (no edges) is NULL, and the
-      // convergence compare must still terminate
+      // convergence compare must still terminate. The node count rides
+      // the same aggregate: it feeds the label table's row-count stats,
+      // so every round's edge-side join sees a real size estimate (a
+      // bare staged LogicalRDD defaults to an unbounded one and the
+      // per-round neighbor join degrades to a sort-merge plan that
+      // re-exchanges the edge leaf every round)
       val sumCol = coalesce(sum(col("component").cast(DecimalType(38, 0))),
         lit(0).cast(DecimalType(38, 0)))
-      // LAZY staging + one aggregate: the first action over the staged
-      // frame materializes its blocks AND computes the convergence sum in
-      // the SAME job. Eager staging ran two jobs per round (materialize,
-      // then sum); per-round fixed job cost is exactly what made q74
-      // 3x slower on the driver than the data volume justifies.
-      val tInit = now()
-      var labels = Staging.stage(
-        sym.select(col("a").as("id")).distinct()
-          .withColumn("component", col("id")),
-        eager = false)
-      // same job also counts the node sliver: the count feeds
-      // stageWithStats below so every round's edge-side join sees a
-      // real size estimate (a bare staged LogicalRDD defaults to an
-      // unbounded one and the per-round neighbor join degrades to a
-      // sort-merge plan that re-exchanges the edge leaf every round)
-      val initRow = labels.agg(sumCol, count(lit(1))).head()
-      var prevSum = initRow.getDecimal(0)
-      val nodeN = initRow.getLong(1)
-      labels = org.apache.spark.sql.GraftSqlBridge
-        .withKnownStats(labels, nodeN)
-      log.info(s"cc: label init ${secs(tInit)}s (n=$nodeN)")
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIterations) {
-        val tRound = now()
+      Fixpoint.iterate("connected components",
+          "maxIterations (graph diameter exceeds it)", maxIterations,
+          sym.select(col("a").as("id")).distinct()
+            .withColumn("component", col("id")),
+          Seq(sumCol, count(lit(1))), _.getLong(1),
+          Some(Fixpoint.unchanged)) { (labels, _, i) =>
         // Union formulation: component_next(id) = min over three label
         // CANDIDATE streams, folded by ONE partial-aggregable groupBy —
         //   own:      (id, my label)
@@ -149,34 +118,12 @@ object ConnectedComponents {
           else sym.select(col("b").as("__k"), col("a").as("__o"))
             .unionByName(labels.select(col("component").as("__k"),
               col("id").as("__o")))
-        val candidates = labels.unionByName(
-          probes.join(labels, col("__k") === col("id"))
-            .select(col("__o").as("id"), col("component")))
-        val next = Staging.stageWithStats(
-          candidates.groupBy(col("id"))
-            .agg(min(col("component")).as("component")),
-          nodeN, eager = false)
-        // one action per round: computes the round's joins, persists the
-        // staged blocks as a side effect of that same computation, and
-        // returns the convergence sum
-        val nextSum = next.agg(sumCol).head().getDecimal(0)
-        Staging.release(labels) // previous round's blocks
-        labels = next
-        converged = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
-        i += 1
-        log.info(s"cc: round $i ${secs(tRound)}s (converged=$converged)")
-      }
-      Staging.release(sym)
-      log.info(s"connected components converged in $i rounds " +
-        s"(maxIterations=$maxIterations)")
-      // silent truncation would return WRONG labels with no signal —
-      // diameter-heavy graphs must fail loudly, not corrupt downstream
-      if (!converged)
-        throw new IllegalStateException(
-          s"connected components did not converge within $maxIterations " +
-            "iterations; raise maxIterations (graph diameter exceeds it)")
-      labels
+        labels.unionByName(
+            probes.join(labels, col("__k") === col("id"))
+              .select(col("__o").as("id"), col("component")))
+          .groupBy(col("id"))
+          .agg(min(col("component")).as("component"))
+      }._1
     }
   }
 

@@ -33,17 +33,9 @@ import org.apache.spark.sql.types.DecimalType
   * unrolled rounds past the fixed point are provably no-ops because
   * the fixed point is stable).
   *
-  * Loop discipline mirrors [[ConnectedComponents]]/[[LabelProp]]: the
-  * symmetrized edge list is staged EAGERLY once, the value table is a
-  * one-row-per-node sliver staged LAZILY per round with its known row
-  * count ([[Staging.stageWithStats]]) so Catalyst broadcasts it into
-  * the edge join while it fits and flips to a shuffled join at scale;
-  * the loop narrows shuffle width (values are a sliver next to the
-  * edge pipeline) and restores it on exit. Convergence detection is
-  * join-free: values only ever DECREASE, so the exact DECIMAL(38,0)
-  * sum of all values is strictly monotone until the fixed point — an
-  * unchanged sum IS convergence (the [[ConnectedComponents]] trick;
-  * never an accumulator, which task retries would double-count).
+  * The loop runs on [[Fixpoint]] with join-free convergence: values
+  * only ever DECREASE, so an unchanged DECIMAL(38,0) value sum IS the
+  * fixed point.
   *
   * Per-round cost at 100 TB: the only edge-sized stages are the value
   * join and the per-node sort window (both key-partitioned and
@@ -53,8 +45,8 @@ import org.apache.spark.sql.types.DecimalType
   * diameter-LIKE, not degeneracy-bounded: on a long path the endpoint
   * 1-values propagate inward one hop per round (~n/2 rounds), so
   * capacity planning should budget O(diameter) rounds. maxIterations
-  * defaults generously for that reason; exceeding it fails loudly
-  * (require), never silently returns a non-fixed-point.
+  * defaults generously for that reason; exceeding it fails loudly,
+  * never silently returns a non-fixed-point.
   */
 object Coreness {
 
@@ -71,7 +63,6 @@ object Coreness {
     */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
       maxIterations: Int = 200): DataFrame = {
-    val spark = edges.sparkSession
     def now() = System.nanoTime()
     def secs(t0: Long) = f"${(now() - t0) / 1e9}%.2f"
 
@@ -82,21 +73,15 @@ object Coreness {
     val n = e.select(countDistinct(col("src"))).head().getLong(0)
     log.info(s"coreness: edge staging ${secs(tEdges)}s (n=$n)")
 
-    // data-proportional loop width + sliver-mode AQE scope
-    Staging.withLoopShuffle(spark, e) {
-      val sumCol = coalesce(sum(col("v").cast(DecimalType(38, 0))),
-        lit(0).cast(DecimalType(38, 0)))
+    Fixpoint.scope("coreness", e) {
+      val wDesc = Window.partitionBy(col("node")).orderBy(col("nv").desc)
       // v0 = degree (every node in a symmetrized edge list appears as
       // src, so the degree groupBy IS the node table)
-      var vals = Staging.stageWithStats(
-        e.groupBy(col("src").as("id")).agg(count(lit(1)).as("v")),
-        n, eager = false)
-      var prevSum = vals.agg(sumCol).head().getDecimal(0)
-      val wDesc = Window.partitionBy(col("node")).orderBy(col("nv").desc)
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIterations) {
-        val tRound = now()
+      Fixpoint.iterate("coreness", "maxIterations", maxIterations,
+          e.groupBy(col("src").as("id")).agg(count(lit(1)).as("v")),
+          Seq(coalesce(sum(col("v").cast(DecimalType(38, 0))),
+            lit(0).cast(DecimalType(38, 0)))),
+          _ => n, Some(Fixpoint.unchanged)) { (vals, _, _) =>
         // H-index of the neighbor multiset, over the per-node VALUE
         // HISTOGRAM instead of the raw neighbor list: for ranks
         // a..cum of a distinct value v (descending order), max over
@@ -109,27 +94,14 @@ object Coreness {
         // instead of one row per neighbor (guide §2.3). Values are
         // distinct per node after the groupBy, so the ordered
         // window's RANGE frame equals ROWS.
-        val next = Staging.stageWithStats(
-          e.join(vals, col("dst") === col("id"))
-            .select(col("src").as("node"), col("v").as("nv"))
-            .groupBy(col("node"), col("nv"))
-            .agg(count(lit(1)).as("cnt"))
-            .withColumn("cum", sum(col("cnt")).over(wDesc))
-            .groupBy(col("node").as("id"))
-            .agg(max(least(col("cum"), col("nv"))).as("v")),
-          n, eager = false)
-        val s = next.agg(sumCol).head().getDecimal(0)
-        Staging.release(vals)
-        vals = next
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-        i += 1
-        log.info(s"coreness: round $i ${secs(tRound)}s (sum=$s)")
-      }
-      require(converged,
-        s"coreness did not converge in $maxIterations rounds")
-      Staging.release(e)
-      vals.select(col("id"), col("v").as("core"))
+        e.join(vals, col("dst") === col("id"))
+          .select(col("src").as("node"), col("v").as("nv"))
+          .groupBy(col("node"), col("nv"))
+          .agg(count(lit(1)).as("cnt"))
+          .withColumn("cum", sum(col("cnt")).over(wDesc))
+          .groupBy(col("node").as("id"))
+          .agg(max(least(col("cum"), col("nv"))).as("v"))
+      }._1.select(col("id"), col("v").as("core"))
     }
   }
 }

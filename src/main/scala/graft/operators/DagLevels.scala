@@ -21,18 +21,14 @@ import org.apache.spark.sql.types.DecimalType
   * sum never settles and the loop FAILS LOUDLY at maxIterations —
   * levels are undefined there, never silently wrong.
   *
-  * Loop discipline mirrors the graph family: edge leaf staged once,
-  * level slivers stats-staged per round, narrowed shuffle width.
+  * The loop runs on [[Fixpoint]].
   */
 object DagLevels {
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** @param edges DAG arcs (srcCol → dstCol)
     * @return (id, lvl) for every node appearing in any arc */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
       maxIterations: Int = 100): DataFrame = {
-    val spark = edges.sparkSession
     val e = Staging.stage(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .filter(col("src") =!= col("dst")).distinct(),
@@ -42,39 +38,20 @@ object DagLevels {
         .unionByName(e.select(col("dst").as("id"))).distinct(),
       eager = true)
     val n = nodes.count()
-    // data-proportional loop width + sliver-mode AQE scope
-    Staging.withLoopShuffle(spark, e) {
-      val sumCol = coalesce(sum(col("lvl").cast(DecimalType(38, 0))),
-        lit(0).cast(DecimalType(38, 0)))
-      var d = Staging.stageWithStats(
-        nodes.withColumn("lvl", lit(0L)), n, eager = false)
-      var prevSum = d.agg(sumCol).head().getDecimal(0)
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIterations) {
+    Fixpoint.scope("DAG levels", e, nodes) {
+      Fixpoint.iterate("DAG levels",
+          "maxIterations (or the input has a cycle)", maxIterations,
+          nodes.withColumn("lvl", lit(0L)),
+          Seq(coalesce(sum(col("lvl").cast(DecimalType(38, 0))),
+            lit(0).cast(DecimalType(38, 0)))),
+          _ => n, Some(Fixpoint.unchanged)) { (d, _, _) =>
         val m = e.join(d.select(col("id").as("__u"), col("lvl").as("__ul")),
             col("src") === col("__u"))
           .groupBy(col("dst")).agg((max(col("__ul")) + 1).as("ml"))
-        val next = Staging.stageWithStats(
-          d.join(m, col("id") === col("dst"), "left_outer")
-            .select(col("id"),
-              greatest(col("lvl"), coalesce(col("ml"), lit(0L)))
-                .as("lvl")),
-          n, eager = false)
-        val s = next.agg(sumCol).head().getDecimal(0)
-        Staging.release(d)
-        d = next
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-        i += 1
-        log.info(s"daglevels: round $i (sum=$s)")
-      }
-      Staging.release(e); Staging.release(nodes)
-      if (!converged)
-        throw new IllegalStateException(
-          s"DAG levels did not converge within $maxIterations rounds " +
-            "— longest path exceeds the bound, or the input has a cycle")
-      d
+        d.join(m, col("id") === col("dst"), "left_outer")
+          .select(col("id"),
+            greatest(col("lvl"), coalesce(col("ml"), lit(0L))).as("lvl"))
+      }._1
     }
   }
 }

@@ -1,0 +1,109 @@
+package graft.operators
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+
+/** The loop skeleton shared by the iterated graph operators
+  * (ConnectedComponents, Scc, PageRank, Coreness, HopDistance,
+  * LabelProp, DagLevels).
+  *
+  * [[scope]] wraps a whole loop: it narrows `spark.sql.shuffle.partitions`
+  * to the width of the loop's staged inputs, restores the session width
+  * and releases those inputs on every exit path. [[iterate]] runs the
+  * rounds: each round stages the caller's step lazily with its known row
+  * count, runs ONE measuring aggregate over it (the action that also
+  * materializes the round's blocks), releases the previous round and
+  * stops on the caller's convergence test or at the round bound. A throw
+  * anywhere in the loop releases the rounds it holds, so a failed loop
+  * leaves no staged blocks pinned until the next sweep.
+  */
+object Fixpoint {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** Run `body` with the shuffle width derived from `inputs`' staged
+    * bytes ([[Staging.loopShufflePartitions]]), logged once. The session
+    * width is restored and every input is released when `body` returns
+    * or throws, so `body` must return a frame that no longer reads them
+    * (a staged round). AQE stays at the session's setting. */
+  def scope[T](op: String, inputs: DataFrame*)(body: => T): T = {
+    val spark = inputs.head.sparkSession
+    val prev = spark.conf.get(ShufflePartitions)
+    try {
+      val width = Staging.loopShufflePartitions(spark, inputs: _*)
+      log.info(s"$op: loop width $width from " +
+        s"${Staging.stagedBytes(spark, inputs: _*)} staged bytes")
+      spark.conf.set(ShufflePartitions, width.toString)
+      body
+    } finally {
+      spark.conf.set(ShufflePartitions, prev)
+      inputs.foreach(Staging.release)
+    }
+  }
+
+  /** Convergence test for monotone loops: the first measured column
+    * (an exact sum that moves every round until the fixed point) is
+    * unchanged. */
+  val unchanged: (Row, Row) => Boolean =
+    (prev, next) => prev.get(0) == next.get(0)
+
+  /** Iterate `step` from `init` to a fixed point.
+    *
+    * @param op        operator name, for logs and the failure message
+    * @param knob      what to raise when the bound is hit
+    * @param maxRounds round bound
+    * @param init      round-0 plan; staged lazily here
+    * @param measure   aggregate columns computed over every staged round
+    *                  (init included) in one action
+    * @param rows      the next round's row count, from the current
+    *                  round's measure (attached as staged statistics)
+    * @param converged `(previous, next)` measures → done; `None` runs
+    *                  exactly `maxRounds` rounds and never throws
+    * @param step      `(current round, its measure, round index from 0)`
+    *                  → next round's plan
+    * @return the last round (staged and still pinned — the caller owns
+    *         it) and its measure
+    */
+  def iterate(op: String, knob: String, maxRounds: Int, init: DataFrame,
+      measure: Seq[Column], rows: Row => Long,
+      converged: Option[(Row, Row) => Boolean])(
+      step: (DataFrame, Row, Int) => DataFrame): (DataFrame, Row) = {
+    def measureOf(df: DataFrame) =
+      df.agg(measure.head, measure.tail: _*).head()
+    var cur = Staging.stage(init, eager = false)
+    var next: DataFrame = null
+    var ok = false
+    try {
+      var s = measureOf(cur)
+      cur = org.apache.spark.sql.GraftSqlBridge.withKnownStats(cur, rows(s))
+      var done = false
+      var i = 0
+      while (!done && i < maxRounds) {
+        val t0 = System.nanoTime()
+        next = Staging.stageWithStats(step(cur, s, i), rows(s),
+          eager = false)
+        val sNext = measureOf(next)
+        Staging.release(cur)
+        cur = next
+        next = null
+        done = converged.exists(_(s, sNext))
+        s = sNext
+        i += 1
+        log.info(f"$op: round $i ${(System.nanoTime() - t0) / 1e9}%.2fs " +
+          s"measure=$s${if (done) " (converged)" else ""}")
+      }
+      // silent truncation would return a non-fixed-point with no signal
+      if (!done && converged.isDefined)
+        throw new IllegalStateException(
+          s"$op did not converge within $maxRounds rounds; raise $knob")
+      ok = true
+      (cur, s)
+    } finally {
+      if (!ok) {
+        if (next != null) Staging.release(next)
+        Staging.release(cur)
+      }
+    }
+  }
+}

@@ -25,10 +25,7 @@ import org.apache.spark.sql.types.DecimalType
   * Rounds to converge = eccentricity of the seed set, small on the
   * short-diameter graphs curation pipelines build.
   *
-  * Loop discipline mirrors [[Coreness]]: edges staged eagerly once,
-  * the (id, dist) sliver staged lazily per round with its known row
-  * count so Catalyst broadcasts it while small and shuffles it at
-  * scale; shuffle width narrowed for the sliver loop and restored.
+  * The loop runs on [[Fixpoint]].
   * Convergence is join-free: the DECIMAL(38,0) sum of
   * coalesce(dist, n + 1) is strictly monotone decreasing until the
   * fixed point (a NULL→k settle and a k→k' improvement both decrease
@@ -48,7 +45,6 @@ object HopDistance {
   def run(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String,
       maxIterations: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
     def now() = System.nanoTime()
     def secs(t0: Long) = f"${(now() - t0) / 1e9}%.2f"
 
@@ -63,50 +59,31 @@ object HopDistance {
     val n = nodes.count()
     log.info(s"hopdist: edge/node staging ${secs(tEdges)}s (n=$n)")
 
-    // data-proportional loop width + sliver-mode AQE scope
-    Staging.withLoopShuffle(spark, e) {
+    Fixpoint.scope("hop distance", e, nodes) {
       // settle metric: sum of coalesce(dist, n+1) — monotone decreasing
       // to the fixed point; n+1 exceeds any reachable distance
-      val sumCol = coalesce(
-        sum(coalesce(col("dist"), lit(n + 1)).cast(DecimalType(38, 0))),
-        lit(0).cast(DecimalType(38, 0)))
-      var d = Staging.stageWithStats(
-        nodes.join(seeds.select(col(seedCol).as("sid")).distinct(),
-            col("id") === col("sid"), "left_outer")
-          .select(col("id"),
-            when(col("sid").isNotNull, lit(0L)).as("dist")),
-        n, eager = false)
-      var prevSum = d.agg(sumCol).head().getDecimal(0)
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIterations) {
-        val tRound = now()
+      Fixpoint.iterate("hop distance", "maxIterations", maxIterations,
+          nodes.join(seeds.select(col(seedCol).as("sid")).distinct(),
+              col("id") === col("sid"), "left_outer")
+            .select(col("id"),
+              when(col("sid").isNotNull, lit(0L)).as("dist")),
+          Seq(coalesce(
+            sum(coalesce(col("dist"), lit(n + 1)).cast(DecimalType(38, 0))),
+            lit(0).cast(DecimalType(38, 0)))),
+          _ => n, Some(Fixpoint.unchanged)) { (d, _, _) =>
         // frontier relaxation: min over in-neighbors' settled distances
         val relax = e.join(d.filter(col("dist").isNotNull),
             col("src") === col("id"))
           .groupBy(col("dst")).agg((min(col("dist")) + 1).as("md"))
-        val next = Staging.stageWithStats(
-          d.join(relax, col("id") === col("dst"), "left_outer")
-            .select(col("id"),
-              // explicit CASE (not least()): NULL-skipping least()
-              // semantics differ across engines, and the oracle must
-              // replay this line exactly
-              when(col("dist").isNull, col("md"))
-                .otherwise(when(col("md") < col("dist"), col("md"))
-                  .otherwise(col("dist"))).as("dist")),
-          n, eager = false)
-        val s = next.agg(sumCol).head().getDecimal(0)
-        Staging.release(d)
-        d = next
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-        i += 1
-        log.info(s"hopdist: round $i ${secs(tRound)}s (sum=$s)")
-      }
-      require(converged,
-        s"hop distance did not converge in $maxIterations rounds")
-      Staging.release(e); Staging.release(nodes)
-      d
+        d.join(relax, col("id") === col("dst"), "left_outer")
+          .select(col("id"),
+            // explicit CASE (not least()): NULL-skipping least()
+            // semantics differ across engines, and the oracle must
+            // replay this line exactly
+            when(col("dist").isNull, col("md"))
+              .otherwise(when(col("md") < col("dist"), col("md"))
+                .otherwise(col("dist"))).as("dist"))
+      }._1
     }
   }
 
@@ -154,7 +131,6 @@ object HopDistance {
       deltaEdges: DataFrame, srcCol: String, dstCol: String,
       seeds: Option[DataFrame] = None, seedCol: String = "id",
       maxIterations: Int = 50): DataFrame = {
-    val spark = standing.sparkSession
     val e = Staging.stage(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct(),
       eager = true)
@@ -167,35 +143,34 @@ object HopDistance {
       .join(standing.select(col("id").as("sid")),
         col("id") === col("sid"), "left_anti")
       .select(col("id"), lit(null).cast("long").as("dist"))
-    // data-proportional loop width + sliver-mode AQE scope
-    Staging.withLoopShuffle(spark, e, de) {
+    Fixpoint.scope("incremental hop distance", e, de) {
       // one staged frame per round: (id, dist, imp) — imp marks the
-      // frontier (rows improved last round); a single count() action
-      // materializes the round AND sizes the frontier. Seeds (when
-      // given) are pinned to dist 0 up front; a seed whose standing
-      // distance was NULL or positive is itself an improvement and
-      // joins the initial frontier.
+      // frontier (rows improved last round); a single aggregate
+      // materializes the round, counts its rows and sizes the
+      // frontier. Seeds (when given) are pinned to dist 0 up front; a
+      // seed whose standing distance was NULL or positive is itself an
+      // improvement and joins the initial frontier.
       val base = standing
         .select(col("id"), col("dist").cast("long").as("dist"))
         .unionByName(newNodes)
-      var d = Staging.stage(
-        seeds match {
-          case Some(s) =>
-            base.join(
-                s.select(col(seedCol).as("__seed")).distinct(),
-                col("id") === col("__seed"), "left_outer")
-              .select(col("id"),
-                when(col("__seed").isNotNull, lit(0L))
-                  .otherwise(col("dist")).as("dist"),
-                (col("__seed").isNotNull &&
-                  (col("dist").isNull || col("dist") > 0)).as("imp"))
-          case None => base.withColumn("imp", lit(false))
-        },
-        eager = true)
-      val n = d.count()
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIterations) {
+      Fixpoint.iterate("incremental hop distance", "maxIterations",
+          maxIterations,
+          seeds match {
+            case Some(s) =>
+              base.join(
+                  s.select(col(seedCol).as("__seed")).distinct(),
+                  col("id") === col("__seed"), "left_outer")
+                .select(col("id"),
+                  when(col("__seed").isNotNull, lit(0L))
+                    .otherwise(col("dist")).as("dist"),
+                  (col("__seed").isNotNull &&
+                    (col("dist").isNull || col("dist") > 0)).as("imp"))
+            case None => base.withColumn("imp", lit(false))
+          },
+          Seq(count(lit(1)),
+            coalesce(sum(when(col("imp"), 1L).otherwise(0L)), lit(0L))),
+          _.getLong(0),
+          Some((_, next) => next.getLong(1) == 0)) { (d, _, i) =>
         // round 0 relaxes across the delta edges (plus the corpus
         // edges leaving seed-pinned frontier nodes, when seeds were
         // given — with no seeds the initial frontier is empty and
@@ -215,28 +190,16 @@ object HopDistance {
               .select(col("id").as("sid"), col("dist").as("sd")),
             col("src") === col("sid"))
           .groupBy(col("dst")).agg((min(col("sd")) + 1).as("md"))
-        val next = Staging.stageWithStats(
-          d.select(col("id"), col("dist"))
-            .join(cand, col("id") === col("dst"), "left_outer")
-            .select(col("id"),
-              when(col("dist").isNull, col("md"))
-                .otherwise(when(col("md") < col("dist"), col("md"))
-                  .otherwise(col("dist"))).as("dist"),
-              (col("md").isNotNull &&
-                (col("dist").isNull || col("md") < col("dist")))
-                .as("imp")),
-          n, eager = false)
-        val fCount = next.filter(col("imp")).count()
-        Staging.release(d)
-        d = next
-        converged = fCount == 0
-        i += 1
-        log.info(s"hopdist-inc: round $i frontier=$fCount")
-      }
-      require(converged,
-        s"incremental hop distance did not converge in $maxIterations")
-      Staging.release(e); Staging.release(de)
-      d.select(col("id"), col("dist"))
+        d.select(col("id"), col("dist"))
+          .join(cand, col("id") === col("dst"), "left_outer")
+          .select(col("id"),
+            when(col("dist").isNull, col("md"))
+              .otherwise(when(col("md") < col("dist"), col("md"))
+                .otherwise(col("dist"))).as("dist"),
+            (col("md").isNotNull &&
+              (col("dist").isNull || col("md") < col("dist")))
+              .as("imp"))
+      }._1.select(col("id"), col("dist"))
     }
   }
 }

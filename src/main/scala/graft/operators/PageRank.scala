@@ -14,18 +14,10 @@ import org.apache.spark.sql.functions._
   * inflow is an order-dependent FP sum). Floor loss is ≤ 1 ppm per
   * in-edge per round, indistinguishable next to tolPpm.
   *
-  * Loop discipline mirrors [[ConnectedComponents]]: the edge+strength
-  * frame is staged EAGERLY once (arbitrary upstream cost), the rank
-  * table is staged LAZILY per round so the convergence aggregate's
-  * action materializes blocks and computes the delta in ONE job, the
-  * previous round's blocks are released as soon as the next is up,
-  * the loop narrows shuffle width (rank table = one row per node, a
-  * sliver next to the edges), and non-convergence throws instead of
-  * returning silently-wrong ranks. Dangling mass (nodes with no
-  * out-edges) is redistributed uniformly each round, which costs the
-  * round a second, trivial aggregate over the already-staged rank
-  * blocks — the scalar is an INPUT to the round, so it cannot fold
-  * into the round's own action.
+  * The loop runs on [[Fixpoint]]; dangling mass (nodes with no
+  * out-edges) is redistributed uniformly each round, and the dangling
+  * flag rides the rank table so each round's one measuring aggregate
+  * also returns the next round's dangling mass.
   *
   * Scale notes (100 TB): the per-round joins shuffle on src then on
   * id — the canonical two-exchange PR step; only (id, rank) rows move
@@ -61,7 +53,6 @@ object PageRank {
       tolPpm: Long = 10L): DataFrame = {
     require(dampingPct > 0 && dampingPct < 100,
       s"dampingPct ($dampingPct) must be in (0, 100)")
-    val spark = edges.sparkSession
     def now() = System.nanoTime()
     def secs(t0: Long) = f"${(now() - t0) / 1e9}%.2f"
 
@@ -99,81 +90,50 @@ object PageRank {
     // width from the staged edge+strength frame's measured bytes: the
     // per-round contribution aggregate's map side is edge-sized, and
     // its reducer count must scale with the graph, not sit at a
-    // local-mode constant (r14 verdict #1; guide §2.1/§2.2); AQE is
-    // scope-disabled only in sliver mode (see Staging.withLoopShuffle)
-    Staging.withLoopShuffle(spark, ew) {
+    // local-mode constant (r14 verdict #1; guide §2.1/§2.2)
+    Fixpoint.scope("pagerank", ew, nodes, dangling) {
       val base = (100L - dampingPct) * Ppm / 100L
       // the dangling flag rides the rank table so each round's single
-      // convergence action can ALSO return the next round's dangling
-      // mass — the separate per-round dangling aggregate (a second
-      // Spark job per round) folds away; round 0's mass is dangCount
-      // × Ppm by construction (every rank starts at Ppm)
-      val dangN = dangling.count()
-      var ranks = Staging.stage(
-        nodes.join(dangling.select(col("id").as("__dg")),
-            col("id") === col("__dg"), "left_outer")
-          .select(col("id"), lit(Ppm).as("r"),
-            col("__dg").isNotNull.as("isd")),
-        eager = false)
-      // materialize round-0 blocks (the delta aggregate needs a prior)
-      ranks.count()
-      var dangSum = dangN * Ppm
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIterations) {
-        val tRound = now()
-        val dangShare = dangSum / math.max(n, 1L)
+      // measuring action also returns the next round's dangling mass;
+      // round 0 (every rank at Ppm, r_prev = r) measures a zero delta
+      // and dangling count × Ppm in the same single job
+      Fixpoint.iterate("pagerank", "maxIterations or loosen tolPpm",
+          maxIterations,
+          nodes.join(dangling.select(col("id").as("__dg")),
+              col("id") === col("__dg"), "left_outer")
+            .select(col("id"), col("__dg").isNotNull.as("isd"),
+              lit(Ppm).as("r_prev"), lit(Ppm).as("r")),
+          Seq(coalesce(max(abs(col("r") - col("r_prev"))), lit(0L)),
+            coalesce(sum(when(col("isd"), col("r"))), lit(0L))),
+          _ => n,
+          if (tolPpm >= 0) Some((_, next) => next.getLong(0) <= tolPpm)
+          else None) { (ranks, prev, _) =>
+        val dangShare = prev.getLong(1) / math.max(n, 1L)
         // exact floor(r*w/tw) without forming r*w (overflow headroom).
         // The rank table is one (id, r) row per node — when the node
         // count is broadcastable, hint it so the EDGE leaf (the frame
-        // that is actually big) is never shuffled per round: a staged
-        // LogicalRDD has no size stats, so without the hint Catalyst
-        // plans a sort-merge join that re-exchanges the edges every
-        // round. At sf-fixture sizes both plans cost about the same
-        // (8 shuffle partitions, edges ~1M rows); the hint is for the
-        // 100x graph, where re-shuffling the edge leaf R times is the
-        // dominant cost. Above the threshold the shuffled join is the
-        // correct plan: at 1e9 nodes the rank sliver no longer fits
-        // an executor.
+        // that is actually big) is never shuffled per round. At
+        // sf-fixture sizes both plans cost about the same (8 shuffle
+        // partitions, edges ~1M rows); the hint is for the 100x graph,
+        // where re-shuffling the edge leaf R times is the dominant
+        // cost. Above the threshold the shuffled join is the correct
+        // plan: at 1e9 nodes the rank sliver no longer fits an
+        // executor.
         val rankSide =
           if (n <= BroadcastNodeLimit) broadcast(ranks) else ranks
         val contrib = ew.join(rankSide, col("src") === col("id"))
           .select(col("dst"),
             expr("(r DIV tw) * w + ((r % tw) * w) DIV tw").as("c"))
           .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-        val next = Staging.stage(
-          ranks.select(col("id"), col("isd"), col("r").as("r_prev"))
-            .join(contrib, col("id") === col("dst"), "left_outer")
-            .select(col("id"), col("isd"), col("r_prev"),
-              coalesce(col("inflow"), lit(0L)).as("inf0"))
-            .select(col("id"), col("isd"), col("r_prev"),
-              (lit(base) +
-                expr(s"($dampingPct * (inf0 + $dangShare)) DIV 100"))
-                .as("r")),
-          eager = false)
-        // ONE action: materializes the round, returns the max delta
-        // AND the next round's dangling mass
-        val row = next
-          .agg(coalesce(max(abs(col("r") - col("r_prev"))), lit(0L)),
-            coalesce(sum(when(col("isd"), col("r"))), lit(0L)))
-          .head()
-        val maxDelta = row.getLong(0)
-        dangSum = row.getLong(1)
-        Staging.release(ranks)
-        ranks = next
-        converged = tolPpm >= 0 && maxDelta <= tolPpm
-        i += 1
-        log.info(s"pagerank: round $i ${secs(tRound)}s " +
-          s"maxDelta=${maxDelta}ppm (converged=$converged)")
-      }
-      Staging.release(ew); Staging.release(nodes); Staging.release(dangling)
-      if (!converged && tolPpm >= 0)
-        throw new IllegalStateException(
-          s"pagerank did not converge within $maxIterations iterations " +
-            s"(tolPpm=$tolPpm); raise maxIterations or loosen tolPpm")
-      if (tolPpm >= 0) log.info(s"pagerank converged in $i rounds")
-      else log.info(s"pagerank completed $i fixed rounds")
-      ranks.select(col("id"), col("r").as("rank_ppm"))
+        ranks.select(col("id"), col("isd"), col("r").as("r_prev"))
+          .join(contrib, col("id") === col("dst"), "left_outer")
+          .select(col("id"), col("isd"), col("r_prev"),
+            coalesce(col("inflow"), lit(0L)).as("inf0"))
+          .select(col("id"), col("isd"), col("r_prev"),
+            (lit(base) +
+              expr(s"($dampingPct * (inf0 + $dangShare)) DIV 100"))
+              .as("r"))
+      }._1.select(col("id"), col("r").as("rank_ppm"))
     }
   }
 
@@ -194,9 +154,7 @@ object PageRank {
     * standard PPR convention; dropping dangling mass would leak it,
     * sending it uniform would dilute personalization). The inflow
     * product uses the same overflow-safe floor(r·w/tw) decomposition
-    * as [[run]]. Loop discipline identical: staged edge leaf, lazy
-    * per-round rank staging + release, broadcast rank sliver below
-    * [[BroadcastNodeLimit]].
+    * as [[run]], on the same [[Fixpoint]] loop.
     */
   def runPersonalized(edges: DataFrame, srcCol: String, dstCol: String,
       wCol: String, seeds: DataFrame, seedCol: String,
@@ -204,7 +162,6 @@ object PageRank {
     require(rounds >= 1, s"rounds ($rounds) must be >= 1")
     require(dampingPct > 0 && dampingPct < 100,
       s"dampingPct ($dampingPct) must be in (0, 100)")
-    val spark = edges.sparkSession
     // staged once — the upstream pipeline was re-executed by the
     // strength self-join and the node derivation (see run())
     val e = Staging.stage(
@@ -232,55 +189,36 @@ object PageRank {
         .join(ew.select(col("src").as("id")).distinct(),
           Seq("id"), "left_anti"),
       eager = true)
-    // data-proportional loop width + sliver-mode AQE scope
-    Staging.withLoopShuffle(spark, ew) {
+    Fixpoint.scope("ppr", ew, nodes, dangling, seedIds) {
       val teleport = (100L - dampingPct) * n * Ppm / (100L * sCnt)
-      // dangling flag rides the rank table (run()'s device): the
-      // per-round materializing count doubles as the dangling-mass
-      // aggregate, folding the second per-round job away. Round 0's
-      // mass: dangling seeds hold n·Ppm DIV s each, others 0.
-      val dangSeedN = dangling.filter(col("isSeed") === 1L).count()
-      var ranks = Staging.stage(
-        nodes.join(dangling.select(col("id").as("__dg")),
-            col("id") === col("__dg"), "left_outer")
-          .select(col("id"), col("isSeed"),
-            when(col("isSeed") === 1L, lit(n * Ppm / sCnt))
-              .otherwise(lit(0L)).as("r"),
-            col("__dg").isNotNull.as("isd")),
-        eager = false)
-      ranks.count()
-      var dangSum = dangSeedN * (n * Ppm / sCnt)
-      var i = 0
-      while (i < rounds) {
-        val dangSeedShare = dangSum / sCnt
+      // dangling flag rides the rank table (run()'s device): each
+      // round's measuring aggregate is the next round's dangling mass.
+      // Round 0's mass (dangling seeds hold n·Ppm DIV s each, others
+      // 0) comes from the same aggregate over the initial table.
+      Fixpoint.iterate("ppr", "rounds", rounds,
+          nodes.join(dangling.select(col("id").as("__dg")),
+              col("id") === col("__dg"), "left_outer")
+            .select(col("id"), col("isSeed"),
+              when(col("isSeed") === 1L, lit(n * Ppm / sCnt))
+                .otherwise(lit(0L)).as("r"),
+              col("__dg").isNotNull.as("isd")),
+          Seq(coalesce(sum(when(col("isd"), col("r"))), lit(0L))),
+          _ => n, None) { (ranks, prev, _) =>
+        val dangSeedShare = prev.getLong(0) / sCnt
         val rankSide =
           if (n <= BroadcastNodeLimit) broadcast(ranks) else ranks
         val contrib = ew.join(rankSide, col("src") === col("id"))
           .select(col("dst"),
             expr("(r DIV tw) * w + ((r % tw) * w) DIV tw").as("c"))
           .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-        val next = Staging.stage(
-          ranks.select(col("id"), col("isSeed"), col("isd"))
-            .join(contrib, col("id") === col("dst"), "left_outer")
-            .select(col("id"), col("isSeed"), col("isd"),
-              (when(col("isSeed") === 1L, lit(teleport)).otherwise(0L) +
-                expr(s"($dampingPct * (coalesce(inflow, 0L) + " +
-                  s"if(isSeed = 1, ${dangSeedShare}L, 0L))) DIV 100")
-              ).as("r")),
-          eager = false)
-        // one action: materializes the round and returns the next
-        // round's dangling mass
-        dangSum = next
-          .agg(coalesce(sum(when(col("isd"), col("r"))), lit(0L)))
-          .head().getLong(0)
-        Staging.release(ranks)
-        ranks = next
-        i += 1
-        log.info(s"ppr: completed round $i")
-      }
-      Staging.release(ew); Staging.release(nodes)
-      Staging.release(dangling); Staging.release(seedIds)
-      ranks.select(col("id"), col("r").as("rank_ppm"))
+        ranks.select(col("id"), col("isSeed"), col("isd"))
+          .join(contrib, col("id") === col("dst"), "left_outer")
+          .select(col("id"), col("isSeed"), col("isd"),
+            (when(col("isSeed") === 1L, lit(teleport)).otherwise(0L) +
+              expr(s"($dampingPct * (coalesce(inflow, 0L) + " +
+                s"if(isSeed = 1, ${dangSeedShare}L, 0L))) DIV 100")
+            ).as("r"))
+      }._1.select(col("id"), col("r").as("rank_ppm"))
     }
   }
 }

@@ -33,6 +33,11 @@ object QualityLr {
   val Eta = 64L
   val Rounds = 8
 
+  /** Largest |eta|·rounds whose score fold fits a long: |w| ≤
+    * eta·rounds·10⁶ and Σ_b x ≤ 10⁶ per doc bound |Σ w·x| by
+    * eta·rounds·10¹² < 2⁶³. */
+  val MaxEtaRounds: Long = Long.MaxValue / 1000000000000L
+
   /** Staged (doc_id, y, b, x) feature leaf from a documents-like frame
     * (doc_id, lang, text): y = 10⁶·[lang = positive], x = bucket token
     * fraction in ppm. Docs with zero tokens have no rows. Caller
@@ -88,9 +93,16 @@ object QualityLr {
     * cross-doc gradient sum goes back through DECIMAL(38,0) (doc
     * counts are unbounded at 100 TB). Integer sums are
     * order-insensitive, truncating DIV matches on long and decimal,
-    * so the trained weights are bit-identical to the two-pass form. */
+    * so the trained weights are bit-identical to the two-pass form.
+    * The long fold is only overflow-free while eta·rounds·10¹² < 2⁶³,
+    * so larger caller-tunable pairs are refused up front
+    * ([[MaxEtaRounds]]). */
   def train(feat: DataFrame, eta: Long = Eta,
       rounds: Int = Rounds, b: Int = B): DataFrame = {
+    require(BigInt(eta).abs * rounds.max(0) <= MaxEtaRounds,
+      s"|eta| ($eta) × rounds ($rounds) must be <= $MaxEtaRounds: " +
+        "|w| <= eta·rounds·10⁶ and Σx <= 10⁶ per doc, so the long " +
+        "score fold overflows past it")
     val spark = feat.sparkSession
     import spark.implicits._
     val docFeat = Staging.stage(

@@ -38,14 +38,8 @@ import org.apache.spark.sql.types.DecimalType
   * directed edges with the same pointer-jumping shortcut — and the
   * hop join stays SOUND under direction because reachability is
   * transitive: f(v) = m means v reaches m, f(m) = k means m reaches
-  * k, so k is a valid (reachable) candidate for v. Loop discipline
-  * mirrors the CC/coreness family: edge leaf staged eagerly per peel
-  * (restricted to active nodes — after the first peel it is
-  * residue-sized, not corpus-sized), label slivers staged lazily with
-  * known row counts ([[Staging.stageWithStats]]) so Catalyst makes
-  * the broadcast-vs-shuffle call itself, narrowed loop shuffle width,
-  * join-free convergence via the strictly-decreasing DECIMAL(38,0)
-  * label sum, per-round stage+release, driver holds sums/counts only.
+  * k, so k is a valid (reachable) candidate for v. The propagation loop
+  * runs on [[Fixpoint]], and the peel loop inside the same loop scope.
   */
 object Scc {
 
@@ -68,8 +62,8 @@ object Scc {
     * decreasing until BOTH sides are fixed. `er` must already be
     * restricted to the node set. Returns ((id, f, b) staged lazily —
     * caller releases — and the number of ASSIGNED nodes (f = b) in the
-    * converged table, which rides the SAME per-round convergence
-    * action so the peel loop needs no separate count job). */
+    * converged table, which rides the SAME per-round measuring
+    * aggregate so the peel loop needs no separate count job). */
   private def minReachBoth(er: DataFrame, nodes: DataFrame,
       nodeCount: Long, maxIterations: Int): (DataFrame, Long) = {
     val dec = DecimalType(38, 0)
@@ -80,14 +74,11 @@ object Scc {
       sum(when(col("f") === col("b"), 1L).otherwise(0L)), lit(0L))
     val idType = nodes.schema("id").dataType
     def nullId = lit(null).cast(idType)
-    var labels = Staging.stageWithStats(
-      nodes.select(col("id"), col("id").as("f"), col("id").as("b")),
-      nodeCount, eager = false)
-    var prevSum = labels.agg(sumCol).head().getDecimal(0)
-    var doneCnt = 0L
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIterations) {
+    val (labels, last) = Fixpoint.iterate("scc propagation",
+        "maxIterations (reachability depth exceeds it)", maxIterations,
+        nodes.select(col("id"), col("id").as("f"), col("id").as("b")),
+        Seq(sumCol, doneCol), _ => nodeCount,
+        Some(Fixpoint.unchanged)) { (labels, _, i) =>
       // ONE direction-tagged edge probe serves both fixpoints (fwd
       // candidates flow dst→src, bwd src→dst): the union is exchange-
       // free, so a round plans 2 joins instead of 4 (with the hop
@@ -125,27 +116,10 @@ object Scc {
               when(!col("__isF"), col("__b2")).otherwise(nullId)
                 .as("b")))
         }
-      val next = Staging.stageWithStats(
-        candidates.groupBy(col("id"))
-          .agg(min(col("f")).as("f"), min(col("b")).as("b")),
-        nodeCount, eager = false)
-      // ONE action: materializes the round, returns the convergence
-      // sum AND the assigned count (free — same aggregate job)
-      val row = next.agg(sumCol, doneCol).head()
-      val s = row.getDecimal(0)
-      doneCnt = row.getLong(1)
-      Staging.release(labels)
-      labels = next
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      i += 1
-      log.info(s"scc: propagation round $i (sum=$s)")
+      candidates.groupBy(col("id"))
+        .agg(min(col("f")).as("f"), min(col("b")).as("b"))
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"directed min-label did not converge within $maxIterations " +
-          "rounds; raise maxIterations (reachability depth exceeds it)")
-    (labels, doneCnt)
+    (labels, last.getLong(1))
   }
 
   /** Condensation edge list for a labeled graph: one arc per pair of
@@ -494,7 +468,6 @@ object Scc {
   def run(edges: DataFrame, srcCol: String, dstCol: String,
       maxPeels: Int = 50, maxIterations: Int = 50,
       edgesClean: Boolean = false): DataFrame = {
-    val spark = edges.sparkSession
     def now() = System.nanoTime()
     def secs(t0: Long) = f"${(now() - t0) / 1e9}%.2f"
 
@@ -505,68 +478,65 @@ object Scc {
       if (edgesClean) renamed
       else renamed.filter(col("src") =!= col("dst")).distinct(),
       eager = true)
-    var active = Staging.stage(
+    val active = Staging.stage(
       e.select(col("src").as("id"))
         .unionByName(e.select(col("dst").as("id"))).distinct(),
       eager = true)
     var activeN = active.count()
     log.info(s"scc: edge/node staging ${secs(tEdges)}s (n=$activeN)")
 
-    // data-proportional loop width + sliver-mode AQE scope
-    // (see Staging.withLoopShuffle)
-    Staging.withLoopShuffle(spark, e) {
+    Fixpoint.scope("scc", e, active) {
       // assignments accumulate across peels as FILTERS over each
       // peel's staged fused label table — no per-peel staging job, no
       // per-peel count job (the assigned count rides minReachBoth's
-      // own convergence action), one final staging of the union. The
-      // fb tables stay pinned until that staging lands, then release.
-      val activeInit = active
+      // own measuring aggregate), one final staging of the union. The
+      // fb tables stay pinned until that staging lands (or the peel
+      // loop throws), then release.
       var assignedParts = List(
         active.filter(lit(false)).select(col("id"), col("id").as("scc")))
       var fbFrames = List.empty[DataFrame]
       var activeDf: DataFrame = active
       val totalN = activeN
       var peel = 0
-      while (activeN > 0 && peel < maxPeels) {
-        val tPeel = now()
-        // the induced subgraph on active nodes. On peel 1 active IS
-        // every endpoint of e by construction, so the restriction is
-        // the identity — skip the two joins and the corpus-sized
-        // restage outright (the released-at-end flag keeps e alive)
-        val er =
-          if (peel == 0) e
-          else Staging.stage(
-            e.join(activeDf.select(col("id").as("__s")),
-                col("src") === col("__s"))
-              .join(activeDf.select(col("id").as("__d")),
-                col("dst") === col("__d"))
-              .select(col("src"), col("dst")),
-            eager = true)
-        // both fixpoints in one loop; a node with f = b = m is in
-        // SCC(m) — a filter on the fused label table, no join
-        val (fb, doneCnt) = minReachBoth(er, activeDf, activeN,
-          maxIterations)
-        // fb is materialized (its last convergence action ran), so the
-        // induced edge leaf can release immediately
-        if (!(er eq e)) Staging.release(er)
-        fbFrames ::= fb
-        assignedParts ::= fb.filter(col("f") === col("b"))
-          .select(col("id"), col("f").as("scc"))
-        activeDf = fb.filter(col("f") =!= col("b")).select(col("id"))
-        log.info(s"scc: peel ${peel + 1} ${secs(tPeel)}s " +
-          s"(assigned $doneCnt, remaining ${activeN - doneCnt})")
-        activeN -= doneCnt
-        peel += 1
-      }
-      if (activeN > 0)
-        throw new IllegalStateException(
-          s"SCC did not finish within $maxPeels peel rounds " +
-            s"($activeN nodes unassigned); raise maxPeels " +
-            "(condensation depth exceeds it)")
-      val assigned = Staging.stage(
-        assignedParts.reduce(_ unionByName _), eager = true)
-      fbFrames.foreach(Staging.release)
-      Staging.release(e); Staging.release(activeInit)
+      val assigned = try {
+        while (activeN > 0 && peel < maxPeels) {
+          val tPeel = now()
+          // the induced subgraph on active nodes. On peel 1 active IS
+          // every endpoint of e by construction, so the restriction is
+          // the identity — skip the two joins and the corpus-sized
+          // restage outright (the scope keeps e alive)
+          val er =
+            if (peel == 0) e
+            else Staging.stage(
+              e.join(activeDf.select(col("id").as("__s")),
+                  col("src") === col("__s"))
+                .join(activeDf.select(col("id").as("__d")),
+                  col("dst") === col("__d"))
+                .select(col("src"), col("dst")),
+              eager = true)
+          // both fixpoints in one loop; a node with f = b = m is in
+          // SCC(m) — a filter on the fused label table, no join. fb is
+          // materialized (its last measuring action ran), so the
+          // induced edge leaf can release as soon as it returns
+          val (fb, doneCnt) =
+            try minReachBoth(er, activeDf, activeN, maxIterations)
+            finally if (!(er eq e)) Staging.release(er)
+          fbFrames ::= fb
+          assignedParts ::= fb.filter(col("f") === col("b"))
+            .select(col("id"), col("f").as("scc"))
+          activeDf = fb.filter(col("f") =!= col("b")).select(col("id"))
+          log.info(s"scc: peel ${peel + 1} ${secs(tPeel)}s " +
+            s"(assigned $doneCnt, remaining ${activeN - doneCnt})")
+          activeN -= doneCnt
+          peel += 1
+        }
+        if (activeN > 0)
+          throw new IllegalStateException(
+            s"SCC did not finish within $maxPeels peel rounds " +
+              s"($activeN nodes unassigned); raise maxPeels " +
+              "(condensation depth exceeds it)")
+        Staging.stage(assignedParts.reduce(_ unionByName _), eager = true)
+      } finally fbFrames.foreach(Staging.release)
       // carry the KNOWN row count (one label per node) so downstream
       // joins against the standing table get a real size estimate —
       // a bare staged LogicalRDD defaults to an unbounded one and

@@ -35,6 +35,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * many queries (Bench, Verify) must call `sweep` between queries, or
   * staged blocks accumulate for the session lifetime (measured as a
   * broad ~1.6x slowdown across 143 bench queries by round 3's judge).
+  *
+  * Iterated loops stage through [[Fixpoint]], which releases each round
+  * as the next lands and takes its shuffle width from the loop inputs'
+  * [[stagedBytes]] ([[loopShufflePartitions]]).
   */
 object Staging {
 
@@ -72,85 +76,65 @@ object Staging {
   }
 
   /** Conf key: target bytes per shuffle partition inside an iterated
-    * loop's narrowed scope (default 64 MB — AQE's own advisory
-    * partition size). Production tuning knob; the LOCAL default keeps
-    * sf-fixture loops at the floor width, so bench numbers stay
-    * comparable across rounds. */
+    * loop's scope (default 64 MB — AQE's own advisory partition size).
+    * A whole number of bytes; anything else fails with an
+    * `IllegalArgumentException` naming this key. Production tuning
+    * knob; the LOCAL default keeps sf-fixture loops at the floor width,
+    * so bench numbers stay comparable across rounds. */
   val LoopTargetBytesKey = "spark.graft.loop.targetPartitionBytes"
 
-  /** Floor for [[loopShufflePartitions]]: sliver loops never narrow
-    * below this (the r4-era measured sweet spot for label/rank tables
-    * on the local fixtures — task-scheduling overhead dominates below
-    * the floor's data volume anyway). */
+  /** Floor for [[loopShufflePartitions]]: loops never narrow below this
+    * (the r4-era measured sweet spot for label/rank tables on the local
+    * fixtures — task-scheduling overhead dominates below the floor's
+    * data volume anyway). */
   val LoopMinPartitions = 8
 
   /** DATA-PROPORTIONAL shuffle width for an iterated loop (guide
-    * §2.1/§2.2): the loops narrow `spark.sql.shuffle.partitions` for
-    * their per-round sliver exchanges, but a CONSTANT width is a
-    * local-mode assumption — the same loop's per-round edge-sized
-    * aggregates (PageRank's contribution groupBy, SCC/CC's neighbor
-    * joins) would fan into that constant number of reducers at 100 TB.
-    * Instead, size the width from the MEASURED bytes of the loop's
-    * staged data-heavy frames: the frames are already eagerly
-    * localCheckpointed, so their materialized block sizes are read
-    * driver-side from the block manager (no extra Spark job), divided
-    * by [[LoopTargetBytesKey]] and clamped to
+    * §2.1/§2.2): the loops set `spark.sql.shuffle.partitions` for their
+    * per-round exchanges ([[Fixpoint.scope]]), and a CONSTANT width
+    * would be a local-mode assumption — the same loop's per-round
+    * edge-sized aggregates (PageRank's contribution groupBy, SCC/CC's
+    * neighbor joins) would fan into that constant number of reducers at
+    * 100 TB. Instead the width is the [[stagedBytes]] of the loop's
+    * eagerly staged frames divided by [[LoopTargetBytesKey]], clamped to
     * [[[LoopMinPartitions]], 65536]. At fixture scale every loop frame
-    * is far below one target block and the width sits at the floor
-    * (bit-identical bench behavior); at 100x/100 TB the width grows
-    * linearly with the staged bytes. AQE's partition coalescing still
-    * applies BELOW the chosen width, so overshooting costs nothing
-    * durable. Frames that are not staged leaves (or not yet
-    * materialized) contribute 0 bytes — callers pass the eagerly
-    * staged frames the loop actually re-joins every round. */
+    * is far below one target block and the width sits at the floor; at
+    * 100x/100 TB it grows linearly with the staged bytes. AQE's
+    * partition coalescing still applies BELOW the chosen width, so
+    * overshooting costs nothing durable. */
   def loopShufflePartitions(spark: SparkSession,
-      staged: DataFrame*): Int = loopShuffleConf(spark, staged: _*)._1
-
-  /** (width, sliverMode) for an iterated loop's narrowed scope.
-    * sliverMode is true when the loop's staged data-heavy frames all
-    * fit inside ONE target block: per-round jobs there are dominated
-    * by fixed driver cost (planning + per-stage scheduling), and
-    * AQE's stage-by-stage re-optimization is pure added latency — a
-    * sliver shuffle has nothing to coalesce and nothing to skew-split.
-    * Callers scope-disable AQE in sliver mode and restore it on exit;
-    * past one target block (any real data volume, and always at
-    * cluster scale) sliverMode is false and AQE stays on. */
-  def loopShuffleConf(spark: SparkSession,
-      staged: DataFrame*): (Int, Boolean) = {
-    val target = spark.conf.getOption(LoopTargetBytesKey)
-      .map(_.toLong).getOrElse(64L * 1024 * 1024).max(1L)
-    // collect every staged leaf under the plan (projections/filters
-    // over a staged frame still see their leaf's bytes); dedup by RDD
-    // id so a self-joined leaf counts once
-    val ids = staged.flatMap(_.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }).toSet
-    val bytes = spark.sparkContext.getRDDStorageInfo
-      .filter(i => ids.contains(i.id))
-      .map(i => i.memSize + i.diskSize).sum
+      staged: DataFrame*): Int = {
+    val target = spark.conf.getOption(LoopTargetBytesKey).fold(
+      64L * 1024 * 1024)(v => v.trim.toLongOption.getOrElse(
+        throw new IllegalArgumentException(
+          s"$LoopTargetBytesKey must be a whole number of bytes, got '$v'")))
+      .max(1L)
+    val bytes = stagedBytes(spark, staged: _*)
     val parts = math.ceil(bytes.toDouble / target).toLong
-    (math.min(math.max(parts, LoopMinPartitions.toLong), 65536L).toInt,
-      bytes < target)
+    math.min(math.max(parts, LoopMinPartitions.toLong), 65536L).toInt
   }
 
-  /** Run `body` under the loop-scope shuffle configuration derived
-    * from the staged frames ([[loopShuffleConf]]): data-proportional
-    * `spark.sql.shuffle.partitions`, and AQE scope-disabled in sliver
-    * mode (see above). Both settings are restored on exit, so the
-    * caller's downstream plan keeps the session defaults. */
-  def withLoopShuffle[T](spark: SparkSession, staged: DataFrame*)(
-      body: => T): T = {
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val (parts, sliver) = loopShuffleConf(spark, staged: _*)
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      if (sliver) spark.conf.set("spark.sql.adaptive.enabled", "false")
-      body
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
+  /** Materialized bytes of every staged leaf under `staged`, read on the
+    * driver with no Spark job. Executor-local checkpoints report their
+    * block sizes to the block manager; reliable checkpoints hold no
+    * blocks, so their size is the length of their checkpoint files.
+    * Projections/filters over a staged frame still see their leaf's
+    * bytes; a leaf reached twice counts once. Unstaged or not yet
+    * materialized frames contribute 0. */
+  private[operators] def stagedBytes(spark: SparkSession,
+      staged: DataFrame*): Long = {
+    val sc = spark.sparkContext
+    val blocks = sc.getRDDStorageInfo
+      .map(i => i.id -> (i.memSize + i.diskSize)).toMap
+    staged.flatMap(_.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }).distinctBy(_.id).map { rdd =>
+      blocks.getOrElse(rdd.id, rdd.getCheckpointFile.fold(0L) { f =>
+        val path = new org.apache.hadoop.fs.Path(f)
+        path.getFileSystem(sc.hadoopConfiguration)
+          .getContentSummary(path).getLength
+      })
+    }.sum
   }
 
   /** [[stage]] + attach a KNOWN row count as LogicalRDD statistics

@@ -1,0 +1,117 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.operators.{Coreness, Fixpoint, Staging}
+
+/** The shared loop skeleton: one measuring action per round, only the
+  * returned round left pinned, and every staged frame released when the
+  * loop fails — by non-convergence or by a throw mid-loop. */
+class FixpointSpec extends SparkTestBase {
+  import spark.implicits._
+
+  private def pinned(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def rddIds(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }
+      .toSet
+
+  private def input(): DataFrame = Staging.stage(
+    spark.range(100).select($"id", ($"id" % 10).as("v")), eager = true)
+
+  // v grows by one each round, so its sum never settles
+  private def growing(d: DataFrame): DataFrame =
+    d.select($"id", ($"v" + 1).as("v"))
+
+  test("an R-round loop runs one measuring action per round") {
+    val funcs = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        funcs.synchronized(funcs += f)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        funcs.synchronized(funcs += s"failed:$f")
+    }
+    val in = input()
+    val rounds = 4
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      Fixpoint.scope("counted", in) {
+        Fixpoint.iterate("counted", "rounds", rounds, in,
+            Seq(sum($"v")), _ => 100L, None)((d, _, _) => growing(d))._1
+      }
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // round 0 plus R rounds: each is staged once and measured once
+    val byFunc = funcs.groupBy(identity).view.mapValues(_.size).toMap
+    assert(byFunc === Map("localCheckpoint" -> (rounds + 1),
+      "head" -> (rounds + 1)), s"executions: $funcs")
+    Staging.sweep(spark)
+  }
+
+  test("only the returned round is still pinned") {
+    val before = pinned()
+    val in = input()
+    val (last, s) = Fixpoint.scope("pinned", in) {
+      Fixpoint.iterate("pinned", "rounds", 3, in, Seq(sum($"v")),
+        _ => 100L, None)((d, _, _) => growing(d))
+    }
+    assert(pinned() -- before === rddIds(last))
+    // 100 rows of v = id % 10 start at sum 450; three rounds add 300
+    assert(s.getLong(0) === 750L)
+    Staging.sweep(spark)
+  }
+
+  test("non-convergence names the operator and knob and pins nothing") {
+    val before = pinned()
+    val in = input()
+    val err = intercept[IllegalStateException] {
+      Fixpoint.scope("toy loop", in) {
+        Fixpoint.iterate("toy loop", "maxToyRounds", 3, in,
+          Seq(sum($"v")), _ => 100L, Some(Fixpoint.unchanged))(
+          (d, _, _) => growing(d))
+      }
+    }
+    assert(err.getMessage.contains("toy loop"), err.getMessage)
+    assert(err.getMessage.contains("maxToyRounds"), err.getMessage)
+    assert((pinned() -- before).isEmpty)
+  }
+
+  test("a throw in round 2 releases its round and inputs and restores " +
+      "the width") {
+    val parts0 = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(parts0 != Staging.LoopMinPartitions.toString)
+    val before = pinned()
+    val in = input()
+    intercept[Exception] {
+      Fixpoint.scope("failing", in) {
+        Fixpoint.iterate("failing", "rounds", 5, in, Seq(sum($"v")),
+          _ => 100L, None) { (d, _, i) =>
+          // round 2's plan stages fine and fails when measured
+          if (i == 1) d.select($"id", raise_error(lit("boom")).as("v"))
+          else growing(d)
+        }
+      }
+    }
+    assert((pinned() -- before).isEmpty)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === parts0)
+  }
+
+  test("Coreness past maxIterations throws IllegalStateException and " +
+      "pins nothing") {
+    // a path needs ~n/2 H-index rounds to settle; one is not enough
+    val path = (1L until 8L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
+      .toDF("a", "b")
+    val before = pinned()
+    val err = intercept[IllegalStateException] {
+      Coreness.run(path, "a", "b", maxIterations = 1)
+    }
+    assert(err.getMessage.contains("coreness"), err.getMessage)
+    assert(err.getMessage.contains("maxIterations"), err.getMessage)
+    assert((pinned() -- before).isEmpty)
+  }
+}

@@ -2,15 +2,16 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Staging
+import graft.operators.{Fixpoint, Staging}
 
 /** Data-proportional loop shuffle width (r14 verdict #1: the iterated
   * loops pinned `shuffle.partitions=8`, a local-mode constant that
   * would cap the per-round edge-sized aggregates at 8 reducers at
   * 100 TB). [[Staging.loopShufflePartitions]] derives the width from
-  * the staged frames' MEASURED block bytes (driver-side read of the
-  * block manager — no extra Spark job): floor at fixture scale, linear
-  * in the data beyond one target block per partition.
+  * the staged frames' MEASURED bytes (block-manager sizes, or checkpoint
+  * file lengths in reliable mode; read on the driver — no extra Spark
+  * job): floor at fixture scale, linear in the data beyond one target
+  * block per partition.
   */
 class LoopPartitionsSpec extends SparkTestBase {
   import spark.implicits._
@@ -51,36 +52,61 @@ class LoopPartitionsSpec extends SparkTestBase {
       === Staging.LoopMinPartitions)
   }
 
-  test("sliver mode flips off once frames exceed one target block") {
-    val e = staged(50000)
-    val key = Staging.LoopTargetBytesKey
-    try {
-      assert(Staging.loopShuffleConf(spark, e)._2,
-        "tiny frame must be sliver mode under the 64 MB default")
-      spark.conf.set(key, "4096")
-      assert(!Staging.loopShuffleConf(spark, e)._2,
-        "frame past one target block must leave sliver mode")
-    } finally spark.conf.unset(key)
-    Staging.release(e)
-  }
-
-  test("withLoopShuffle restores both confs on exit (and on throw)") {
-    val e = staged(1000)
+  test("loop scope restores shuffle.partitions on exit and throw; " +
+      "AQE untouched") {
     val parts0 = spark.conf.get("spark.sql.shuffle.partitions")
     val aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
-    Staging.withLoopShuffle(spark, e) {
+    Fixpoint.scope("scope spec", staged(1000)) {
       assert(spark.conf.get("spark.sql.shuffle.partitions")
         === Staging.LoopMinPartitions.toString)
-      assert(spark.conf.get("spark.sql.adaptive.enabled") === "false")
+      assert(spark.conf.get("spark.sql.adaptive.enabled") === aqe0)
     }
     assert(spark.conf.get("spark.sql.shuffle.partitions") === parts0)
     assert(spark.conf.get("spark.sql.adaptive.enabled") === aqe0)
     intercept[RuntimeException] {
-      Staging.withLoopShuffle(spark, e) { throw new RuntimeException("x") }
+      Fixpoint.scope("scope spec", staged(1000)) {
+        throw new RuntimeException("x")
+      }
     }
     assert(spark.conf.get("spark.sql.shuffle.partitions") === parts0)
     assert(spark.conf.get("spark.sql.adaptive.enabled") === aqe0)
-    Staging.release(e)
+  }
+
+  test("reliable-checkpoint frames size the width from their files") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_")
+    val key = Staging.LoopTargetBytesKey
+    spark.conf.set(Staging.ConfKey, dir.toString)
+    try {
+      // reliable checkpoints hold no executor blocks; their bytes are
+      // the checkpoint files' lengths
+      val e = staged(50000)
+      spark.conf.set(key, "4096")
+      val w = Staging.loopShufflePartitions(spark, e)
+      assert(w > Staging.LoopMinPartitions,
+        s"expected > floor at 4 KB target in reliable mode, got $w")
+    } finally {
+      spark.conf.unset(key)
+      spark.conf.unset(Staging.ConfKey)
+      Staging.sweep(spark)
+    }
+  }
+
+  test("a malformed target-bytes conf fails naming the key") {
+    val key = Staging.LoopTargetBytesKey
+    val parts0 = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(key, "64MB")
+    try {
+      val err = intercept[IllegalArgumentException] {
+        graft.operators.DagLevels.run(
+          Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), "src", "dst")
+      }
+      assert(err.getClass === classOf[IllegalArgumentException])
+      assert(err.getMessage.contains(key), err.getMessage)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === parts0)
+    } finally {
+      spark.conf.unset(key)
+      Staging.sweep(spark)
+    }
   }
 
   test("multiple staged frames sum their bytes") {

@@ -50,6 +50,20 @@ class QualityLrSpec extends SparkTestBase {
     Staging.sweep(spark)
   }
 
+  test("eta·rounds past the long-fold bound is refused, naming both") {
+    assert(BigInt(QualityLr.Eta) * QualityLr.Rounds <= QualityLr.MaxEtaRounds)
+    val docs = Seq((1L, "en", "alpha beta"), (2L, "de", "rot blau"))
+      .toDF("doc_id", "lang", "text")
+    val feat = QualityLr.features(docs)
+    assert(QualityLr.train(feat).count() === QualityLr.B.toLong)
+    val err = intercept[IllegalArgumentException] {
+      QualityLr.train(feat, eta = QualityLr.MaxEtaRounds, rounds = 2)
+    }
+    assert(err.getMessage.contains("eta") &&
+      err.getMessage.contains("rounds"), err.getMessage)
+    Staging.sweep(spark)
+  }
+
   test("gated fixture claim: learned beats the q34 heuristic at sf0.001") {
     val row = SparkEntry.queries("q351_quality_auc")(
       spark, "/root/testdata/sf0.001").collect()(0)
