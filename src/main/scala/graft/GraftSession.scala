@@ -15,6 +15,14 @@ object GraftSession {
 
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
+  /** Spark's checkpoint-manager key and the engine's manager for it:
+    * local streaming checkpoints write through java.nio instead of
+    * Hadoop's process-spawning local filesystem. Test sessions set the
+    * same pair, so the streaming specs run the production path. */
+  val CheckpointManager: (String, String) =
+    graft.streaming.LocalCheckpointFileManager.ConfKey ->
+      classOf[graft.streaming.LocalCheckpointFileManager].getName
+
   def build(appName: String = "graft"): SparkSession = {
     // getOrCreate ignores configs once a session exists — return the live
     // session up front instead of minting a fresh warehouse temp dir (and
@@ -54,6 +62,7 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh_").toString)
       .config("spark.ui.enabled", "false")
+      .config(CheckpointManager._1, CheckpointManager._2)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

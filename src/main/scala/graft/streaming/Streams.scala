@@ -190,11 +190,16 @@ object Streams {
     val spark = df.sparkSession
     val table = s"graft_stream_${nameCounter.incrementAndGet()}"
     // Fixture streams carry a few hundred thousand rows through a handful
-    // of micro-batches; 32 shuffle partitions means 32 state stores each
-    // paying per-batch snapshot/commit file IO for a sliver of state. 8
-    // keeps the run parallel while quartering the fixed state overhead —
-    // scoped to THIS stream only (restored after), so batch queries keep
-    // the session default. A real deployment sizes this to state volume.
+    // of micro-batches; 32 shuffle partitions means 32 state stores, each
+    // a task that loads and commits its sliver of state every batch. A
+    // store's commit is small-file IO: about 2 ms per store and batch
+    // through LocalCheckpointFileManager, 96 ms through Hadoop's local
+    // filesystem, which spawned chmod/readlink processes (perfbench
+    // ring_vwap, 4 stores, 4 cores). The fixed per-store cost is now the
+    // task itself rather than the commit. 8 keeps the run parallel while
+    // quartering that cost — scoped to THIS stream only (restored after),
+    // so batch queries keep the session default. A real deployment sizes
+    // this to state volume.
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "8")

@@ -22,6 +22,7 @@ object SparkTestBase {
       // the injected strategy/rules/functions need them here too
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.CheckpointManager._1, GraftSession.CheckpointManager._2)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
