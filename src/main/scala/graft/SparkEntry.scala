@@ -5,40 +5,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * The query catalog is assembled from per-wave modules; each entry pairs
-  * the Spark implementation with its DuckDB oracle (when SQL-expressible).
+  * The query catalog is assembled from one module per domain; each entry
+  * pairs the Spark implementation with its DuckDB oracle (when
+  * SQL-expressible).
   */
 object SparkEntry {
 
-  // A flat varargs Seq keeps the compiler tree shallow: the previous
-  // 155-term ++ chain overflowed scalac's CleanUp-phase stack.
   private def catalog: Seq[Qry] = Seq(
     Relational.all, TimeSeries.all, Text.all, Embeddings.all, Streaming.all, Wire.all,
-    MultimodalQ.all, Extras.all, Extras2.all, Extras3.all, Extras4.all, Extras5.all,
-    Extras6.all, Extras7.all, Extras8.all, Extras9.all, Extras10.all, Extras11.all,
-    Extras12.all, Extras13.all, Extras14.all, Extras15.all, Extras16.all, Extras17.all,
-    Extras18.all, Extras19.all, Extras20.all, Extras21.all, Extras22.all, Extras23.all,
-    Extras24.all, Extras25.all, Extras26.all, Extras27.all, Extras28.all, Extras29.all,
-    Extras30.all, Extras31.all, Extras32.all, Extras33.all, Extras34.all, Extras35.all,
-    Extras36.all, Extras37.all, Extras38.all, Extras39.all, Extras40.all, Extras41.all,
-    Extras42.all, Extras43.all, Extras44.all, Extras45.all, Extras46.all, Extras47.all,
-    Extras48.all, Extras49.all, Extras50.all, Extras51.all, Extras52.all, Extras53.all,
-    Extras54.all, Extras55.all, Extras56.all, Extras57.all, Extras58.all, Extras59.all,
-    Extras60.all, Extras61.all, Extras62.all, Extras63.all, Extras64.all, Extras65.all,
-    Extras66.all, Extras67.all, Extras68.all, Extras69.all, Extras70.all, Extras71.all,
-    Extras72.all, Extras73.all, Extras74.all, Extras75.all, Extras76.all, Extras77.all,
-    Extras78.all, Extras79.all, Extras80.all, Extras81.all, Extras82.all, Extras83.all,
-    Extras84.all, Extras85.all, Extras86.all, Extras87.all, Extras88.all, Extras89.all,
-    Extras90.all, Extras91.all, Extras92.all, Extras93.all, Extras94.all, Extras95.all,
-    Extras96.all, Extras97.all, Extras98.all, Extras99.all, Extras100.all, Extras101.all,
-    Extras102.all, Extras103.all, Extras104.all, Extras105.all, Extras106.all, Extras107.all,
-    Extras108.all, Extras109.all, Extras110.all, Extras111.all, Extras112.all, Extras113.all,
-    Extras114.all, Extras115.all, Extras116.all, Extras117.all, Extras118.all, Extras119.all,
-    Extras120.all, Extras121.all, Extras122.all, Extras123.all, Extras124.all, Extras125.all,
-    Extras126.all, Extras127.all, Extras128.all, Extras129.all, Extras130.all, Extras131.all,
-    Extras132.all, Extras133.all, Extras134.all, Extras135.all, Extras136.all, Extras137.all,
-    Extras138.all, Extras139.all, Extras140.all, Extras141.all, Extras142.all, Extras143.all,
-    Extras144.all
+    MultimodalQ.all, Graph.all, Quality.all, Sketches.all, Statistics.all
   ).flatten
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

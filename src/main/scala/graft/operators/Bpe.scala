@@ -66,7 +66,8 @@ object Bpe {
     * symbols, leftmost non-overlapping `replace` pairs (1,2)(4,5)…
     * while the greedy fold pairs (1,2)(3,4)… — a different
     * SEGMENTATION that a later merge can turn into different counts.
-    * The catalog artifact enforces that precondition (Extras47). */
+    * The catalog artifact enforces that precondition (q182 in
+    * queries/Text.scala). */
   def encodeWord(w: Column, merges: Seq[(String, String)]): Column =
     merges.foldLeft(chars(w)) {
       case (s, (a, b)) => applyMerge(s, a, b)

@@ -10,8 +10,8 @@ import org.apache.spark.sql.types.LongType
   * gain-based vocabulary prune, and the iterated TRAINER that loops
   * E/M + prune under the Bpe.trainMerges loop discipline.
   *
-  * Model (q239's, shared verbatim with the queries::Extras75 oracle
-  * stack): piece inventory = every corpus character + the top
+  * Model (q239's, shared verbatim with its oracle stack in
+  * queries/Text.scala): piece inventory = every corpus character + the top
   * [[Unigram.TopBigrams]] character bigrams; piece weights =
   * floor(1e6·ln(count/total)) — BIGINT log-probs, so every downstream
   * comparison is exact integer arithmetic (the only float op is the

@@ -5,9 +5,8 @@ package graft.queries
   * CSV/JSON): one write per (sfDir, kind) key even when Verify and
   * Bench both run in the same session, reclaimed by a recursive
   * shutdown hook (deleteOnExit cannot remove non-empty directories —
-  * the leak an advisor round flagged). Extracted from the identical
-  * per-file copies in Extras18/Extras42 (review-pass lesson: one
-  * implementation, several call sites). */
+  * the leak deleteOnExit would leave). One implementation for the
+  * call sites in Wire and Relational. */
 private[queries] object RoundTrip {
 
   private val rtDirs =

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.RingRegistry
 
@@ -123,56 +124,30 @@ object Streams {
     * `value < n` bounds the sink exactly; rows past the cutoff are
     * discarded by the stream itself, so the poll loop terminates as soon
     * as the first n indices have flowed through. Timestamps are dropped:
-    * they are wall-clock and would make the result nondeterministic.
-    *
-    * Synchronized for the same reason as [[runToMemory]]: the
-    * shuffle-partition override is session-global state. */
+    * they are wall-clock and would make the result nondeterministic. */
   def boundedRate(spark: SparkSession, n: Long,
-      rowsPerSecond: Int = 50000): DataFrame = synchronized {
-    val table = s"graft_rate_${nameCounter.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      val src = spark.readStream.format("rate")
-        .option("rowsPerSecond", rowsPerSecond.toString)
-        .option("numPartitions", "4")
-        .load()
-        .filter(col("value") < n)
-        .select(col("value"))
-      val q = src.writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try {
-        val deadline = System.nanoTime() + 120L * 1000L * 1000 * 1000
-        while (spark.table(table).count() < n) {
-          if (System.nanoTime() > deadline)
-            throw new IllegalStateException(
-              s"bounded rate read did not reach $n rows in 120s")
-          Thread.sleep(50)
-        }
-      } finally q.stop()
-      val sink = spark.table(table)
-      spark.createDataFrame(sink.collectAsList(), sink.schema)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.catalog.dropTempView(table)
-    }
+      rowsPerSecond: Int = 50000): DataFrame = {
+    val src = spark.readStream.format("rate")
+      .option("rowsPerSecond", rowsPerSecond.toString)
+      .option("numPartitions", "4")
+      .load()
+      .filter(col("value") < n)
+      .select(col("value"))
+    toMemory(src, "graft_rate", "append") { (_, table) =>
+      val deadline = System.nanoTime() + 120L * 1000L * 1000 * 1000
+      while (spark.table(table).count() < n) {
+        if (System.nanoTime() > deadline)
+          throw new IllegalStateException(
+            s"bounded rate read did not reach $n rows in 120s")
+        Thread.sleep(50)
+      }
+    }._1
   }
 
   /** Start `df` into an in-memory table, process everything available,
-    * stop, and return the materialized result. The memory-sink temp view
-    * is dropped before returning (its rows are re-wrapped as a local
-    * relation — same driver-resident data the sink already held, without
-    * pinning one sink table per invocation for the session lifetime).
-    *
-    * Synchronized: the shuffle-partition override below is session-global
-    * state — two concurrent calls could interleave set/restore and leave
-    * the session on the temporary value. (Batch queries on other threads
-    * of the SAME session would still observe the temporary value while a
-    * stream materializes; the engine's entry points are sequential, so
-    * that exposure is accepted and documented rather than worked around.)
-    */
+    * stop, and return the materialized result. */
   def runToMemory(df: DataFrame, outputMode: String): DataFrame =
-    synchronized { runToMemoryImpl(df, outputMode)._1 }
+    runToMemoryWithDrops(df, outputMode)._1
 
   /** [[runToMemory]] + the run's observability row: the total
     * `numRowsDroppedByWatermark` across every state operator and
@@ -183,38 +158,53 @@ object Streams {
     * PREDICTS it from the synthesis parameters. */
   def runToMemoryWithDrops(df: DataFrame, outputMode: String)
       : (DataFrame, Long) =
-    synchronized { runToMemoryImpl(df, outputMode) }
+    toMemory(df, "graft_stream", outputMode) { (q, _) =>
+      q.processAllAvailable()
+      q.recentProgress.flatMap(_.stateOperators)
+        .map(_.numRowsDroppedByWatermark).sum
+    }
 
-  private def runToMemoryImpl(df: DataFrame, outputMode: String)
-      : (DataFrame, Long) = {
+  /** The one memory-sink runner behind every harness here: start `df`
+    * into a fresh memory-sink table, let `await(query, table)` decide
+    * when the run is complete, stop the query, and return the sink's
+    * rows with await's result. The rows are re-wrapped as a local
+    * relation and the sink's temp view is dropped, also on failure — the
+    * same driver-resident data the sink already held, without pinning
+    * one sink table per run for the session lifetime.
+    *
+    * Shuffle width: fixture streams carry a few hundred thousand rows
+    * through a handful of micro-batches; 32 shuffle partitions means 32
+    * state stores, each a task that loads and commits its sliver of
+    * state every batch. A store's commit is small-file IO: about 2 ms per
+    * store and batch through LocalCheckpointFileManager, 96 ms through
+    * Hadoop's local filesystem, which spawned chmod/readlink processes
+    * (perfbench ring_vwap, 4 stores, 4 cores). The fixed per-store cost
+    * is now the task itself rather than the commit. 8 keeps the run
+    * parallel while quartering that cost — scoped to THIS stream only
+    * (restored after), so batch queries keep the session default. A real
+    * deployment sizes this to state volume.
+    *
+    * Synchronized: the shuffle-partition override is session-global
+    * state — two concurrent runs could interleave set/restore and leave
+    * the session on the temporary value. (Batch queries on other threads
+    * of the SAME session would still observe the temporary value while a
+    * stream materializes; the engine's entry points are sequential, so
+    * that exposure is accepted and documented rather than worked
+    * around.) */
+  private def toMemory[A](df: DataFrame, prefix: String, outputMode: String)(
+      await: (StreamingQuery, String) => A): (DataFrame, A) = synchronized {
     val spark = df.sparkSession
-    val table = s"graft_stream_${nameCounter.incrementAndGet()}"
-    // Fixture streams carry a few hundred thousand rows through a handful
-    // of micro-batches; 32 shuffle partitions means 32 state stores, each
-    // a task that loads and commits its sliver of state every batch. A
-    // store's commit is small-file IO: about 2 ms per store and batch
-    // through LocalCheckpointFileManager, 96 ms through Hadoop's local
-    // filesystem, which spawned chmod/readlink processes (perfbench
-    // ring_vwap, 4 stores, 4 cores). The fixed per-store cost is now the
-    // task itself rather than the commit. 8 keeps the run parallel while
-    // quartering that cost — scoped to THIS stream only (restored after),
-    // so batch queries keep the session default. A real deployment sizes
-    // this to state volume.
+    val table = s"${prefix}_${nameCounter.incrementAndGet()}"
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "8")
       val q = df.writeStream.outputMode(outputMode)
         .format("memory").queryName(table).start()
-      val dropped =
-        try { q.processAllAvailable()
-          q.recentProgress.flatMap(_.stateOperators)
-            .map(_.numRowsDroppedByWatermark).sum
-        } finally q.stop()
+      val done = try await(q, table) finally q.stop()
       val sink = spark.table(table)
-      (spark.createDataFrame(sink.collectAsList(), sink.schema), dropped)
+      (spark.createDataFrame(sink.collectAsList(), sink.schema), done)
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      // also on failure — orphaned sink tables pin rows in the driver
       spark.catalog.dropTempView(table)
     }
   }
@@ -229,21 +219,11 @@ object Streams {
     * drop-oldest rings, where the delivered count is timing-dependent by
     * design — the caller asserts conservation invariants, not a count. */
   def drainRingUntilQuiet(spark: SparkSession, ring: String)(
-      produce: => Unit): DataFrame = synchronized {
-    val table = s"graft_ring_quiet_${nameCounter.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = ringStream(spark, ring).writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try { produce; q.processAllAvailable() } finally q.stop()
-      val sink = spark.table(table)
-      spark.createDataFrame(sink.collectAsList(), sink.schema)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.catalog.dropTempView(table)
-    }
-  }
+      produce: => Unit): DataFrame =
+    toMemory(ringStream(spark, ring), "graft_ring_quiet", "append") { (q, _) =>
+      produce
+      q.processAllAvailable()
+    }._1
 
   /** Consume a ring stream into memory while `produce` runs on separate
     * threads, polling until exactly `n` rows have landed. This is the
@@ -251,47 +231,31 @@ object Streams {
     * the consumer: planning a batch frees its slots) that
     * [[runToMemory]] cannot express: `processAllAvailable` would return
     * between producer bursts and stop the query before the bus has
-    * carried everything.
-    *
-    * Synchronized for the same reason as [[runToMemory]]: the
-    * shuffle-partition override is session-global state. */
+    * carried everything. */
   def drainRingUntil(spark: SparkSession, ring: String, n: Long)(
-      produce: => Unit): DataFrame = synchronized {
-    val table = s"graft_ring_sink_${nameCounter.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = ringStream(spark, ring).writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      @volatile var producedOk = false
-      val producer = new Thread(() => { produce; producedOk = true },
-        s"ring-producer-$table")
-      producer.setDaemon(true)
-      try {
-        producer.start()
-        val deadline = System.nanoTime() + 120L * 1000L * 1000 * 1000
-        while (spark.table(table).count() < n) {
-          // a dead stream or dead producer would otherwise poll blind
-          // to the deadline
-          q.exception.foreach(throw _)
-          if (!producer.isAlive && !producedOk)
-            throw new IllegalStateException(
-              "ring producer died before enqueueing all records " +
-                "(enqueue timeout?) — drain cannot complete")
-          if (System.nanoTime() > deadline)
-            throw new IllegalStateException(
-              s"ring drain did not reach $n rows in 120s")
-          Thread.sleep(20)
-        }
-      } finally {
-        q.stop()
-        producer.join(10000)
+      produce: => Unit): DataFrame = {
+    @volatile var producedOk = false
+    val producer = new Thread(() => { produce; producedOk = true })
+    producer.setDaemon(true)
+    // joined only after the query has stopped
+    try toMemory(ringStream(spark, ring), "graft_ring_sink", "append") { (q, table) =>
+      producer.setName(s"ring-producer-$table")
+      producer.start()
+      val deadline = System.nanoTime() + 120L * 1000L * 1000 * 1000
+      while (spark.table(table).count() < n) {
+        // a dead stream or dead producer would otherwise poll blind
+        // to the deadline
+        q.exception.foreach(throw _)
+        if (!producer.isAlive && !producedOk)
+          throw new IllegalStateException(
+            "ring producer died before enqueueing all records " +
+              "(enqueue timeout?) — drain cannot complete")
+        if (System.nanoTime() > deadline)
+          throw new IllegalStateException(
+            s"ring drain did not reach $n rows in 120s")
+        Thread.sleep(20)
       }
-      val sink = spark.table(table)
-      spark.createDataFrame(sink.collectAsList(), sink.schema)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.catalog.dropTempView(table)
-    }
+    }._1
+    finally producer.join(10000)
   }
 }

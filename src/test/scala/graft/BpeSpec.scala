@@ -117,7 +117,7 @@ class BpeSpec extends SparkTestBase {
     // encodeWord is exact for SELF-PAIR merges too — greedy pairs
     // (1,2)(3,4), leaving the tail symbol. (The q182 ORACLE's
     // fixpoint-replace formulation is NOT — which is why the catalog
-    // artifact requires left != right; see Extras47.)
+    // artifact requires left != right; see q182.)
     val self = Seq("aaaaa").toDF("w")
       .select(Bpe.encodeWord(col("w"), Seq("a" -> "a")).as("e"))
       .collect().head.getSeq[String](0).toVector

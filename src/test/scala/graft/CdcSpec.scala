@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.Extras67
+import graft.queries.Text
 
 /** The CDC hallmark, pinned: a single-token edit at a document's HEAD
   * leaves almost every chunk intact (content-defined boundaries
@@ -25,7 +25,7 @@ class CdcSpec extends SparkTestBase {
       (2L, text2, "en", "src_b", text2.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = Extras67.all.find(_.name == "q227_cdc_chunks").get
+    val rows = Text.all.find(_.name == "q227_cdc_chunks").get
       .fn(spark, dir)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(3)))).toMap

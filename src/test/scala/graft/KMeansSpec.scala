@@ -115,7 +115,7 @@ class KMeansSpec extends SparkTestBase {
         (($"vec_id" % 8)).as("cid"),
         Vectors.toDouble($"embedding").as("v"))
       .withColumn("nr", Vectors.norm($"v"))
-    val plan = graft.queries.Extras138.intraCellEdges(va)
+    val plan = graft.queries.Quality.intraCellEdges(va)
       .queryExecution.executedPlan.toString
     assert("(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \\[ca".r
         .findFirstIn(plan).isDefined,

@@ -21,7 +21,7 @@ class QualityLrSpec extends SparkTestBase {
       .groupBy($"sm")
       .agg(sum(when($"y" > 0, 1L).otherwise(0L)).as("pos"),
         sum(when($"y" > 0, 0L).otherwise(1L)).as("neg"))
-    graft.queries.Extras94.aucTail(g).collect()(0).getAs[Long]("auc_ppm")
+    graft.queries.Quality.aucTail(g).collect()(0).getAs[Long]("auc_ppm")
   }
 
   test("separable corpus trains to near-perfect AUC") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, TextOps}
-import graft.queries.Extras63
+import graft.queries.{Sketches, Text}
 import graft.sources.Tables
 
 /** Pins for the sixty-third wave.
@@ -27,7 +27,7 @@ class SimJoinSpec extends SparkTestBase {
 
   test("q219: prefix filter is lossless vs brute-force join at t=0.5") {
     import spark.implicits._
-    val got = Extras63.all.find(_.name == "q219_prefix_simjoin").get
+    val got = Text.all.find(_.name == "q219_prefix_simjoin").get
       .fn(spark, sf)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
 
@@ -51,7 +51,7 @@ class SimJoinSpec extends SparkTestBase {
   }
 
   test("q220: HLL estimate is within sketch error on the merged row") {
-    val all = Extras63.all.find(_.name == "q220_hll_cardinality").get
+    val all = Sketches.all.find(_.name == "q220_hll_cardinality").get
       .fn(spark, sf).filter(col("source") === "ALL").head()
     val est = all.getAs[Long]("est_milli") / 1000.0
     val exact = all.getAs[Long]("exact")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{Extras84, Extras99}
+import graft.queries.Text
 
 /** q261's island semantics, pinned on a crafted corpus: the merged
   * duplicate spans must be EXACTLY the maximal >=W-token regions that
@@ -29,7 +29,7 @@ class SubstringDedupSpec extends SparkTestBase {
       .map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = Extras84.all.find(_.name == "q261_substring_dedup").get
+    val out = Text.all.find(_.name == "q261_substring_dedup").get
       .fn(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(2), r.getLong(3)))).toMap
     // doc1 owns every first occurrence: nothing removed
@@ -58,7 +58,7 @@ class SubstringDedupSpec extends SparkTestBase {
       .map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = Extras99.all.find(_.name == "q290_delta_substring_dedup")
+    val rows = Text.all.find(_.name == "q290_delta_substring_dedup")
       .get.fn(spark, dir).collect()
     // only delta docs appear
     assert(rows.map(_.getLong(0)).toSet == Set(3L),

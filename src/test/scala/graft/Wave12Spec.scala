@@ -21,7 +21,7 @@ class Wave12Spec extends SparkTestBase {
     // [[10, 0], [0, 10]]: chi2 = N = 20 (ppm 2e7), dof = 1, V^2 = 1
     val counts = Seq(("a", "x", 10L), ("b", "y", 10L))
       .toDF("source", "lang", "o")
-    val out = graft.queries.Extras116.chiSquareTail(counts)
+    val out = graft.queries.Statistics.chiSquareTail(counts)
       .collect().map(r => ((r.getString(0), r.getString(1)),
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
           r.getLong(6), r.getLong(7)))).toMap
@@ -41,7 +41,7 @@ class Wave12Spec extends SparkTestBase {
     // o(i,j) = r_i * c_j / N exactly -> every cell contribution 0
     val counts = Seq(("a", "x", 4L), ("a", "y", 8L),
       ("b", "x", 2L), ("b", "y", 4L)).toDF("source", "lang", "o")
-    val rows = graft.queries.Extras116.chiSquareTail(counts).collect()
+    val rows = graft.queries.Statistics.chiSquareTail(counts).collect()
     assert(rows.forall(_.getLong(4) === 0L)) // cell_chi2_ppm
     assert(rows.forall(_.getLong(5) === 0L)) // total
   }
@@ -68,7 +68,7 @@ class Wave12Spec extends SparkTestBase {
     // border at (1, 1) [5] adjacent to A; noise at (5, 5) [3]
     val cells = Seq((0L, 0L, 40L), (0L, 1L, 35L), (10L, 0L, 50L),
       (1L, 1L, 5L), (5L, 5L, 3L)).toDF("cx", "cy", "n")
-    val out = graft.queries.Extras118.densityTail(cells)
+    val out = graft.queries.Statistics.densityTail(cells)
       .collect().map(r => ((r.getLong(0), r.getLong(1)),
         (r.getInt(3), if (r.isNullAt(4)) None else Some(r.getLong(4)))))
       .toMap

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.Extras62
+import graft.queries.Text
 
 /** Contract pins for the sixty-second wave (q217 HTML extraction,
   * q218 Bloom decontamination).
@@ -28,7 +28,7 @@ class WebExtractSpec extends SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
 
   private def q(name: String) =
-    Extras62.all.find(_.name == name).get.fn(spark, sf)
+    Text.all.find(_.name == name).get.fn(spark, sf)
 
   test("q217: entity escaping round-trips markup-looking text") {
     import spark.implicits._
@@ -39,7 +39,7 @@ class WebExtractSpec extends SparkTestBase {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // the other tables aren't touched by q217; documents alone suffices
-    val row = Extras62.all.find(_.name == "q217_html_extract").get
+    val row = Text.all.find(_.name == "q217_html_extract").get
       .fn(spark, dir).select("text_chars", "n_tags", "n_links").head()
     // which hash-chosen link tail did this text get? (same h60 % 3 as
     // the query — recompute it independently here)
