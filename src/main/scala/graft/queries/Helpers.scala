@@ -62,9 +62,11 @@ private[queries] object Helpers {
 
   // ---- document hash leaves ---------------------------------------------
   // h60 = the first 60 bits of md5(text): the seed every synthesized
-  // binary fixture derives its fields from, in both engines
-  private val h60 =
-    expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)").as("h60")
+  // binary fixture derives its fields from, in both engines (the oracle
+  // SQL spells it CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT))
+  val h60Seed =
+    expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
+  private val h60 = h60Seed.as("h60")
 
   /** (doc_id, h60) */
   def h60Of(spark: SparkSession, dir: String) =

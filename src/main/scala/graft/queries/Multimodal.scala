@@ -13,8 +13,8 @@ import graft.sources.Tables
 import graft.streaming.Streams
 
 import Helpers.{be16, be16Unmasked, be24, be32, be64, bytesLit, h60Of,
-  h60TextCharsOf, h60TextOf, le16Hex, le16Unmasked, le32Hex, one, u16be,
-  u16le, u32be, u32le, u8}
+  h60Seed, h60TextCharsOf, h60TextOf, le16Hex, le16Unmasked, le32Hex, one,
+  u16be, u16le, u32be, u32le, u8}
 
 /** Multimodal pipeline queries: each document's UTF-8 payload becomes a
   * REAL BMP object (hash-derived dimensions written into a spec-correct
@@ -67,8 +67,7 @@ object MultimodalQ {
       be32("ts"), be32("dur"))
     docs
       .select(col("doc_id"),
-        expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-          .as("h60"))
+        h60Seed.as("h60"))
       .withColumn("pick", expr("CAST(h60 % 6 AS INT)"))
       .withColumn("corrupt", expr("h60 % 10 = 0"))
       .withColumn("w", expr("CAST(1 + (h60 DIV 6) % 4096 AS INT)"))
@@ -219,8 +218,7 @@ object MultimodalQ {
         u32be("ts"), u32be("dur"))
       docs
         .select(col("doc_id"),
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h60"))
+          h60Seed.as("h60"))
         .withColumn("pick", expr("CAST(h60 % 10 AS INT)"))
         .withColumn("corrupt", expr("h60 % 11 = 0"))
         .withColumn("w", expr("1 + (h60 DIV 10) % 4096"))
@@ -419,8 +417,7 @@ object MultimodalQ {
         expr("CAST(text AS BINARY)"))
       Tables(spark, dir).documents
         .select($"doc_id", $"text",
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h60"))
+          h60Seed.as("h60"))
         .withColumn("w", expr("CAST(64 + h60 % 193 AS INT)"))
         .withColumn("hgt", expr("CAST(64 + (h60 DIV 193) % 193 AS INT)"))
         .withColumn("blob", blob)
@@ -448,8 +445,7 @@ object MultimodalQ {
       import spark.implicits._
       Tables(spark, dir).documents
         .select($"doc_id".as("media_id"),
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("checksum"))
+          h60Seed.as("checksum"))
         .select($"media_id", $"checksum",
           explode(sequence(lit(0),
             expr("CAST(checksum % 7 AS INT)"))).as("frame_idx"))
@@ -481,13 +477,9 @@ object MultimodalQ {
         |  CAST(MIN(w) AS BIGINT) AS min_w, CAST(MAX(h) AS BIGINT) AS max_h
         |FROM d GROUP BY 1, 2""".stripMargin) { (spark, dir) =>
       import spark.implicits._
-      val hexpr = expr(
-        "cast(conv(substring(md5(text), 1, 15), 16, 10) as bigint)")
-      val m = Tables(spark, dir).documents
-        .select((lit(64L) + hexpr % 193).as("w"),
-          (lit(64L) + expr(
-            "cast(conv(substring(md5(text), 1, 15), 16, 10) as bigint)" +
-              " div 193") % 193).as("h"))
+      val m = Tables(spark, dir).documents.select(h60Seed.as("h60"))
+        .select((lit(64L) + $"h60" % 193).as("w"),
+          (lit(64L) + expr("h60 div 193") % 193).as("h"))
       m.select($"w", $"h",
           when($"w" >= $"h", lit(128L))
             .otherwise(expr("(w * 128) div h")).as("tw"),
@@ -557,8 +549,7 @@ object MultimodalQ {
       GraftFunctions.register(spark)
       Tables(spark, dir).documents
         .select($"doc_id",
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h60"))
+          h60Seed.as("h60"))
         .withColumn("w", expr("CAST(64 + h60 % 1921 AS INT)"))
         .withColumn("h", expr("CAST(64 + (h60 DIV 1921) % 1081 AS INT)"))
         .withColumn("bpp", element_at(
@@ -658,8 +649,7 @@ object MultimodalQ {
       GraftFunctions.register(spark)
       Tables(spark, dir).documents
         .select($"doc_id",
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h60"))
+          h60Seed.as("h60"))
         .withColumn("w", expr("CAST(1 + h60 % 4096 AS INT)"))
         .withColumn("ht", expr("CAST(1 + (h60 DIV 4096) % 4096 AS INT)"))
         .withColumn("depth", expr("CAST(8 + 8 * (h60 % 2) AS INT)"))
@@ -750,8 +740,7 @@ object MultimodalQ {
       GraftFunctions.register(spark)
       Tables(spark, dir).documents
         .select($"doc_id",
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h60"))
+          h60Seed.as("h60"))
         .withColumn("nch", element_at(
           array(Seq(1, 2, 6, 8).map(lit): _*),
           expr("CAST(h60 % 4 AS INT)") + 1))
@@ -866,8 +855,7 @@ object MultimodalQ {
         ascii("junkjnk"), expr("le_encode_u8(0)"))
       Tables(spark, dir).documents
         .select($"doc_id",
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h60"))
+          h60Seed.as("h60"))
         .withColumn("layout", expr("CAST(h60 % 3 AS INT)"))
         .withColumn("nch", element_at(
           array(Seq(1, 2, 6, 8).map(lit): _*),
@@ -973,8 +961,7 @@ object MultimodalQ {
       GraftFunctions.register(spark)
       Tables(spark, dir).documents
         .select($"doc_id",
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h60"))
+          h60Seed.as("h60"))
         .withColumn("layout", expr("CAST(h60 % 3 AS INT)"))
         .withColumn("sof",
           expr("CAST(CASE (h60 DIV 3) % 2 WHEN 0 THEN 192 ELSE 194 END" +
@@ -1038,8 +1025,7 @@ object MultimodalQ {
       GraftFunctions.register(spark)
       Tables(spark, dir).documents
         .select($"doc_id",
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h60"))
+          h60Seed.as("h60"))
         .withColumn("w", expr("CAST(1 + (h60 DIV 2) % 65535 AS INT)"))
         .withColumn("hgt", expr("CAST(1 + (h60 DIV 131070) % 65535 AS INT)"))
         .withColumn("blob", concat(
@@ -1107,8 +1093,7 @@ object MultimodalQ {
       GraftFunctions.register(spark)
       Tables(spark, dir).documents
         .select($"doc_id",
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h60"))
+          h60Seed.as("h60"))
         .withColumn("layout", expr("CAST(h60 % 3 AS INT)"))
         .withColumn("ts", element_at(
           array(Seq(600, 1000, 44100, 90000).map(lit): _*),
@@ -1248,8 +1233,7 @@ object MultimodalQ {
         when(col("ver") === 0, mvhd0).otherwise(mvhd1))
       Tables(spark, dir).documents
         .select(col("doc_id"),
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h60"))
+          h60Seed.as("h60"))
         .withColumn("ver", expr("CAST(h60 % 2 AS INT)"))
         .withColumn("nkids", expr("CAST((h60 DIV 2) % 3 AS INT)"))
         .withColumn("corrupt", expr("h60 % 11 = 0"))
@@ -1988,8 +1972,7 @@ object MultimodalQ {
         .otherwise(okK(2))
       Tables(spark, dir).documents
         .select($"doc_id", $"text",
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h"))
+          h60Seed.as("h"))
         .withColumn("c", expr("h % 5"))
         .withColumn("k", expr("1 + (h div 5) % 3"))
         .withColumn("full3", okK(2))
@@ -2031,8 +2014,7 @@ object MultimodalQ {
         concat((0 until k).map(member) :+ zeros: _*))
       val archives = Tables(spark, dir).documents
         .select($"doc_id", $"text",
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h"))
+          h60Seed.as("h"))
         .withColumn("k", expr("1 + (h div 7) % 3"))
         .withColumn("b",
           when($"k" === 1, okK(0)).when($"k" === 2, okK(1))
@@ -2092,8 +2074,7 @@ object MultimodalQ {
         .otherwise(okK(2))
       Tables(spark, dir).documents
         .select($"doc_id", $"text",
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h"))
+          h60Seed.as("h"))
         .withColumn("c", expr("h % 5"))
         .withColumn("k", expr("1 + (h div 5) % 3"))
         .withColumn("zfull3", okK(2))
@@ -2127,8 +2108,7 @@ object MultimodalQ {
       graft.functions.GraftFunctions.register(spark)
       val stream = Streams.fileStream(spark, dir, "documents")
         .select(col("doc_id"), col("text"),
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h60"))
+          h60Seed.as("h60"))
       Streams.runToMemory(manifestOf(stream), "complete")
     }
   )

@@ -13,7 +13,7 @@ import graft.operators.{Bpe, ConnectedComponents, Dedup, Pii, Staging, Stats,
 import graft.sources.Tables
 import graft.streaming.Streams
 
-import Helpers.{TrainBound, ValBound, bytesLit, h60Of, one}
+import Helpers.{TrainBound, ValBound, bytesLit, h60Of, h60Seed, one}
 
 /** Text-analysis + deduplication surface over the `documents` fixture
   * (LLM-data-pipeline operators, BASELINE.json): exact dedup, token
@@ -2892,8 +2892,7 @@ object Text {
       }
       Tables(spark, dir).documents
         .select(col("doc_id"), col("text"),
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h60"))
+          h60Seed.as("h60"))
         .withColumn("b", blob)
         .select(col("doc_id"),
           when(expr("substring(b, 1, 3)") === bytesLit("EFBBBF"), "utf8")
@@ -2975,8 +2974,7 @@ object Text {
         .otherwise(concat(t, bytesLit("EDA080")))
       val agg = Streams.fileStream(spark, dir, "documents")
         .select(col("doc_id"), col("text"),
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)")
-            .as("h60"))
+          h60Seed.as("h60"))
         .withColumn("b", blob)
         .select(
           when(expr("substring(b, 1, 3)") === bytesLit("EFBBBF"), "utf8")

@@ -9,7 +9,7 @@ import graft.functions.GraftFunctions
 import graft.operators.{Bpe, ConnectedComponents, DagLevels, Dedup, Scc, Staging, TextOps, Vectors}
 import graft.sources.{ArrowIpc, Tables}
 
-import Helpers.{fixtureMemo, one}
+import Helpers.{fixtureMemo, h60Seed, one}
 
 /** Wire-format fidelity: the reference's records are per-field
   * little-endian byte blobs packed by producers and decoded by consumers
@@ -248,9 +248,7 @@ object Wire {
       //   1: inflate bound one byte below the payload -> bomb guard
       //   2: first magic byte overwritten -> not a gzip stream
       Tables(spark, dir).documents
-        .select($"doc_id", $"text",
-          expr("CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)" +
-            " % 7").cast("int").as("cls"))
+        .select($"doc_id", $"text", (h60Seed % 7).cast("int").as("cls"))
         .withColumn("blob", expr("gzip_compress(CAST(text AS BINARY))"))
         .withColumn("mutated",
           when($"cls" === 0, expr("substring(blob, 1, length(blob) - 8)"))
@@ -297,9 +295,9 @@ object Wire {
       import spark.implicits._
       graft.functions.GraftFunctions.register(spark)
       Tables(spark, dir).documents
-        .select($"doc_id", $"text",
-          expr("(CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)" +
-            " DIV 7) % 7").cast("int").as("cls"))
+        .select($"doc_id", $"text", h60Seed.as("h60"))
+        .withColumn("cls", expr("(h60 DIV 7) % 7").cast("int"))
+        .drop("h60")
         .withColumn("blob", expr("zstd_compress(CAST(text AS BINARY))"))
         .withColumn("mutated",
           when($"cls" === 0, expr("substring(blob, 1, length(blob) - 6)"))

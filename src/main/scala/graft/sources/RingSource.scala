@@ -38,6 +38,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * rows are released by `consume` on the trigger AFTER the batch
   * completes — see RingMicroBatchStream.latestOffset.
   *
+  * A planned partition is a sequence range, not rows: each read task
+  * reads its [from, until) from the in-flight batch through `inFlight`,
+  * the way a Structured Streaming source is a replayable log addressed
+  * by offsets. Rows never travel inside the physical plan, so no
+  * closure check or task binary Java-serializes a batch's rows.
+  *
   * Why an in-flight batch rather than handing the rows out once: the
   * engine plans the same range several times while executing it
   * (measured: 6 `planInputPartitions` calls per micro-batch — planning,
@@ -76,9 +82,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Scale shape: one ring is one partition's worth of bus; a production
   * deployment shards N rings behind N source partitions (the
   * `planInputPartitions` split below already fans a large range out to
-  * multiple read tasks). This class is the single-process transport the
-  * sandbox supports; on a cluster the same source contract binds to a
-  * real broker client.
+  * multiple read tasks). Deployment consequence of range partitions: a
+  * partition must be read in the JVM that owns the ring. That is the
+  * engine's only deployment — GraftSession runs `local[N]` and
+  * RingRegistry is process-wide — and a partition read anywhere else
+  * fails loudly (RingReaderFactory). On a cluster the same offset-range
+  * contract binds to a broker client, as Spark's Kafka source does.
   */
 final class GraftRing(
     val name: String,
@@ -156,13 +165,15 @@ final class GraftRing(
   /** Plan-time dequeue of [from, until) — the reference's `try_dequeue`
     * for a whole batch. Moves the range's queued rows off the slots into
     * the in-flight batch, frees those slots for producers at once, and
-    * returns the range's rows. Planning the same range again (the engine
-    * does, several times per batch; so does a restart replaying its last
-    * logged batch) is served from the in-flight batch until `consume`
-    * releases it. Rows evicted by drop-oldest before the first plan are
-    * absent (at-most-once is the declared policy); queued rows below
-    * `from` belong to no batch and are counted in `dropped`. */
-  def dequeue(from: Long, until: Long): Array[InternalRow] = synchronized {
+    * returns the range's in-flight rows as runs of consecutive sequence
+    * numbers (first seq, rows), in sequence order. Planning the same
+    * range again (the engine does, several times per batch; so does a
+    * restart replaying its last logged batch) moves nothing and returns
+    * the same runs until `consume` releases them. Rows evicted by
+    * drop-oldest before the first plan are absent (at-most-once is the
+    * declared policy); queued rows below `from` belong to no batch and
+    * are counted in `dropped`. */
+  def dequeue(from: Long, until: Long): Seq[(Long, Int)] = synchronized {
     val lo = math.max(from, headSeq)
     val hi = math.min(until, tailSeq)
     if (lo < hi) {
@@ -175,8 +186,19 @@ final class GraftRing(
       }
     }
     flight.iterator.flatMap { case (s, rows) =>
+      val a = math.max(from, s)
+      val b = math.min(until, s + rows.length)
+      Option.when(a < b)((a, (b - a).toInt))
+    }.toSeq
+  }
+
+  /** The in-flight rows of [from, until), in sequence order — the read
+    * path of a planned partition. Empty once `consume` has released the
+    * range. */
+  def inFlight(from: Long, until: Long): Array[InternalRow] = synchronized {
+    flight.iterator.flatMap { case (s, rows) =>
       def at(seq: Long) = math.min(math.max(seq - s, 0L), rows.length.toLong).toInt
-      rows.slice(at(from), at(until))
+      rows.iterator.slice(at(from), at(until))
     }.toArray
   }
 
@@ -218,7 +240,8 @@ object RingRegistry {
 
   def get(name: String): GraftRing = {
     val r = rings.get(name)
-    require(r != null, s"no ring named '$name' — create it before reading")
+    require(r != null, s"no ring named '$name' in this JVM — create it " +
+      "before reading; graft-ring partitions are read in the JVM that owns the ring")
     r
   }
 
@@ -230,29 +253,43 @@ private[sources] class RingOffset(val seq: Long) extends Offset {
   override def json(): String = seq.toString
 }
 
-/** The planned batch carries its rows: dequeued under the ring monitor
-  * at plan time and held in flight by the ring, so the batch content is
-  * immune to concurrent drop-oldest eviction. Rows are
-  * GenericInternalRow (Serializable) — they cross the local task
-  * boundary intact. */
-private[sources] case class RingInputPartition(rows: Array[InternalRow])
-  extends InputPartition
+/** A planned slice of a batch: the sequence range [from, until) of ring
+  * `ring`, whose `rows` in-flight rows `dequeue` moved off the slots at
+  * plan time. It carries no rows, so it serializes to well under a
+  * kilobyte whatever the batch size; the reader takes the rows from the
+  * ring's in-flight batch, which holds them, immune to drop-oldest
+  * eviction, until the next trigger consumes the range. */
+private[sources] case class RingInputPartition(
+    ring: String, from: Long, until: Long, rows: Int) extends InputPartition
 
+/** Reads a partition's range from the in-flight batch of the ring it
+  * names, resolved through RingRegistry in the executing JVM — so it
+  * must run in the ring's JVM. A read that finds fewer in-flight rows
+  * than were planned (the range was already consumed, or a same-named
+  * ring of another JVM) throws rather than return a short batch. */
 private[sources] class RingReaderFactory extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val part = p.asInstanceOf[RingInputPartition]
+    val rows = RingRegistry.get(part.ring).inFlight(part.from, part.until)
+    if (rows.length < part.rows)
+      throw new IllegalStateException(
+        s"ring '${part.ring}' holds ${rows.length} of the ${part.rows} " +
+          s"in-flight rows planned for [${part.from}, ${part.until}): the " +
+          "range was consumed before it was read, or the ring is not this JVM's")
     new PartitionReader[InternalRow] {
-      private val rows = p.asInstanceOf[RingInputPartition].rows
       private var i = -1
       override def next(): Boolean = { i += 1; i < rows.length }
       override def get(): InternalRow = rows(i)
       override def close(): Unit = ()
     }
+  }
 }
 
 /** The ring as a micro-batch stream. Planning a batch dequeues its range
-  * (producers refill the freed slots while it runs); the next trigger
-  * consumes it. Every progress event carries the ring's `queued`,
-  * `inFlight`, `lag` (latest − committed) and `dropped` counts. */
+  * (producers refill the freed slots while it runs) and splits it into
+  * sequence-range partitions; the next trigger consumes it. Every
+  * progress event carries the ring's `queued`, `inFlight`, `lag`
+  * (latest − committed) and `dropped` counts. */
 private[sources] class RingMicroBatchStream(ringName: String)
   extends MicroBatchStream with ReportsSourceMetrics {
   private def ring = RingRegistry.get(ringName)
@@ -286,14 +323,22 @@ private[sources] class RingMicroBatchStream(ringName: String)
     val s = start.asInstanceOf[RingOffset].seq
     val e = end.asInstanceOf[RingOffset].seq
     plannedUpTo = math.max(plannedUpTo, e)
-    val rows = ring.dequeue(s, e)
-    if (rows.isEmpty) Array.empty
+    val runs = ring.dequeue(s, e)
+    val n = runs.map(_._2).sum
+    if (n == 0) Array.empty
     else {
       // fan a large batch out to several read tasks (8192 rows each, ≤4
-      // slices — one ring is one bus partition; see the scale note)
-      val nSlices = math.min(4, 1 + (rows.length - 1) / 8192)
-      val per = (rows.length + nSlices - 1) / nSlices
-      rows.grouped(per).map(RingInputPartition(_): InputPartition).toArray
+      // slices — one ring is one bus partition; see the scale note). A
+      // slice never spans two runs; there are two only when a new query's
+      // first range also covers a batch a stopped query left in flight
+      val nSlices = math.min(4, 1 + (n - 1) / 8192)
+      val per = (n + nSlices - 1) / nSlices
+      runs.iterator.flatMap { case (first, k) =>
+        Iterator.range(0, k, per).map { i =>
+          val rows = math.min(per, k - i)
+          RingInputPartition(ringName, first + i, first + i + rows, rows): InputPartition
+        }
+      }.toArray
     }
   }
 

@@ -5,12 +5,18 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkConf
+import org.apache.spark.serializer.JavaSerializer
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.connector.catalog.SupportsRead
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.{GraftRing, RingRegistry}
+import graft.sources.{GraftRing, RingRegistry, RingSourceProvider}
 import graft.streaming.Streams
 
 /** The in-process MPMC ring-buffer bus behind the `graft-ring` source
@@ -19,15 +25,36 @@ import graft.streaming.Streams
   * (`/root/reference/src/memory/low_latency_mpmc_ring.rs:36-135`).
   * Pins the full contract: power-of-two capacity, reject-new vs
   * drop-oldest overflow, plan-time dequeue with a ring-held in-flight
-  * batch, destructive consume on the next trigger, MPMC exactly-once
-  * delivery under live backpressure and across a restart, and the
-  * observable drop counter. */
+  * batch, destructive consume on the next trigger, partitions that are
+  * sequence ranges read from that batch, MPMC exactly-once delivery
+  * under live backpressure and across a restart, and the observable
+  * drop counter. */
 class RingSourceSpec extends SparkTestBase {
 
   private val schema = StructType(Seq(
     StructField("k", StringType), StructField("v", LongType)))
 
   private def row(i: Long): Row = Row(s"k${i % 3}", i)
+
+  /** The ring's micro-batch stream as Spark's engine builds it. */
+  private def ringStream(ring: String): MicroBatchStream =
+    new RingSourceProvider().getTable(schema, Array.empty, Map("ring" -> ring).asJava)
+      .asInstanceOf[SupportsRead].newScanBuilder(CaseInsensitiveStringMap.empty())
+      .build().toMicroBatchStream("unused")
+
+  /** Plan the stream's next batch, as a trigger does: `latestOffset`
+    * (which releases the previously planned batch), then the plan. */
+  private def planNext(stream: MicroBatchStream, start: Long): Array[InputPartition] =
+    stream.planInputPartitions(
+      stream.deserializeOffset(start.toString), stream.latestOffset())
+
+  private def read(stream: MicroBatchStream, parts: Array[InputPartition]): Seq[Long] = {
+    val factory = stream.createReaderFactory()
+    parts.toSeq.flatMap { p =>
+      val r = factory.createReader(p)
+      Iterator.continually(r).takeWhile(_.next()).map(_.get().getLong(1)).toSeq
+    }
+  }
 
   test("capacity must be a power of two (the reference's contract)") {
     intercept[IllegalArgumentException] {
@@ -116,7 +143,9 @@ class RingSourceSpec extends SparkTestBase {
     val ring = RingRegistry.create("rs_dequeue", schema, 8, dropOldest = false)
     try {
       (0L until 8L).foreach(i => assert(ring.tryEnqueue(row(i))))
-      val planned = ring.dequeue(0, 8).map(_.getLong(1)).toSeq
+      val runs = ring.dequeue(0, 8)
+      assert(runs === Seq((0L, 8)))
+      val planned = ring.inFlight(0, 8).map(_.getLong(1)).toSeq
       assert(planned === (0L until 8L))
       // the producers refill the whole ring while the batch is in flight,
       // before the consumer has committed anything
@@ -126,11 +155,14 @@ class RingSourceSpec extends SparkTestBase {
       assert(ring.metrics ===
         Map("queued" -> 8L, "inFlight" -> 8L, "lag" -> 16L, "dropped" -> 0L))
       // the engine plans a batch several times: same range, same rows
-      assert(ring.dequeue(0, 8).map(_.getLong(1)).toSeq === planned)
+      assert(ring.dequeue(0, 8) === runs)
+      assert(ring.inFlight(0, 8).map(_.getLong(1)).toSeq === planned)
       ring.consume(8)
       assert(ring.metrics("inFlight") === 0)
       assert(ring.dequeue(0, 8).isEmpty)
-      assert(ring.dequeue(8, 16).map(_.getLong(1)).toSeq === (8L until 16L))
+      assert(ring.inFlight(0, 8).isEmpty)
+      assert(ring.dequeue(8, 16) === Seq((8L, 8)))
+      assert(ring.inFlight(8, 16).map(_.getLong(1)).toSeq === (8L until 16L))
     } finally RingRegistry.remove("rs_dequeue")
   }
 
@@ -200,5 +232,129 @@ class RingSourceSpec extends SparkTestBase {
         s"delivered=$delivered dropped=${ring.dropped}")
       assert(delivered >= 64, "the live stream delivered real batches")
     } finally RingRegistry.remove("rs_live_exact")
+  }
+
+  test("a planned partition is a sequence range: its size does not grow with the batch") {
+    // Rows do not ride in the plan, so Spark's closure checks and task
+    // binaries serialize a few hundred bytes per batch, not the batch.
+    val ring = RingRegistry.create("rs_range", schema, 8192, dropOldest = false)
+    try {
+      val stream = ringStream("rs_range")
+      val ser = new JavaSerializer(new SparkConf()).newInstance()
+      (0L until 64L).foreach(i => assert(ring.tryEnqueue(row(i))))
+      val small = planNext(stream, 0)
+      assert(read(stream, small) === (0L until 64L))
+      (64L until 8256L).foreach(i => assert(ring.tryEnqueue(row(i))))
+      val full = planNext(stream, 64)
+      assert(full.length === 1 && read(stream, full) === (64L until 8256L))
+      val fullBytes = ser.serialize(full).limit()
+      assert(fullBytes < 1024, s"$fullBytes bytes for 8192 planned rows")
+      assert(fullBytes === ser.serialize(small).limit())
+    } finally RingRegistry.remove("rs_range")
+  }
+
+  test("a large range is planned as at most 4 slices that read it whole") {
+    val ring = RingRegistry.create("rs_slices", schema, 32768, dropOldest = false)
+    try {
+      val stream = ringStream("rs_slices")
+      (0L until 20000L).foreach(i => assert(ring.tryEnqueue(row(i))))
+      val parts = planNext(stream, 0)
+      assert(parts.length === 3)
+      assert(read(stream, parts) === (0L until 20000L))
+      // a replan of the range (the engine makes several) plans the same
+      val replan = stream.planInputPartitions(
+        stream.deserializeOffset("0"), stream.deserializeOffset("20000"))
+      assert(replan.toSeq === parts.toSeq)
+    } finally RingRegistry.remove("rs_slices")
+  }
+
+  test("a read after the range is consumed fails loudly, naming ring and range") {
+    val ring = RingRegistry.create("rs_released", schema, 8, dropOldest = false)
+    try {
+      val stream = ringStream("rs_released")
+      (0L until 8L).foreach(i => assert(ring.tryEnqueue(row(i))))
+      val parts = planNext(stream, 0)
+      ring.consume(8)
+      val e = intercept[IllegalStateException](
+        stream.createReaderFactory().createReader(parts.head))
+      assert(e.getMessage.contains("'rs_released'") && e.getMessage.contains("[0, 8)"),
+        e.getMessage)
+    } finally RingRegistry.remove("rs_released")
+  }
+
+  test("a partition naming a ring not in this JVM fails, saying where it is read") {
+    RingRegistry.create("rs_elsewhere", schema, 8, dropOldest = false)
+    val stream = ringStream("rs_elsewhere")
+    (0L until 8L).foreach(i => RingRegistry.get("rs_elsewhere").tryEnqueue(row(i)))
+    val parts = planNext(stream, 0)
+    RingRegistry.remove("rs_elsewhere")
+    val e = intercept[IllegalArgumentException](
+      stream.createReaderFactory().createReader(parts.head))
+    assert(e.getMessage.contains("read in the JVM that owns the ring"), e.getMessage)
+  }
+
+  test("property: concurrent producers, a restart, both policies — exactly-once or counted loss") {
+    // Each seeded case draws the ring's capacity, 1-4 producers, the
+    // overflow policy, and whether the sink throws once — on the batch
+    // that brings delivery to a random record count, so on a random
+    // non-empty batch — making the query restart from its checkpoint.
+    // Every case reaches that count: at least the last `capacity`
+    // records are delivered under either policy.
+    val rnd = new scala.util.Random(7L)
+    (1 to 20).foreach { c =>
+      val capacity = 8 << rnd.nextInt(6)
+      val producers = 1 + rnd.nextInt(4)
+      val dropOldest = rnd.nextBoolean()
+      val throwOnce = rnd.nextBoolean()
+      val n = capacity * (2L + rnd.nextInt(7))
+      val failAt = 1 + rnd.nextInt(capacity)
+      val name = s"rs_prop_$c"
+      withClue(s"case $c: capacity=$capacity producers=$producers " +
+          s"dropOldest=$dropOldest throwOnce=$throwOnce n=$n failAt=$failAt: ") {
+        val ring = RingRegistry.create(name, schema, capacity, dropOldest)
+        val ckpt = java.nio.file.Files.createTempDirectory(s"${name}_").toString
+        val seen = new ConcurrentLinkedQueue[java.lang.Long]()
+        val failOnce = new AtomicBoolean(throwOnce)
+        def start() = Streams.ringStream(spark, name).writeStream
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (df: DataFrame, _: Long) =>
+            val vs = df.select("v").collect().map(_.getLong(0))
+            if (vs.nonEmpty && seen.size + vs.length >= failAt && failOnce.getAndSet(false))
+              throw new IllegalStateException("sink fails once")
+            vs.foreach(v => seen.add(v))
+          }.start()
+        val threads = (0 until producers).map { p =>
+          val t = new Thread(() => (p.toLong until n by producers).foreach { i =>
+            if (dropOldest) {
+              ring.tryEnqueue(row(i))
+              if (i % 4 == 0) Thread.sleep(1) // let batches interleave
+            } else ring.enqueue(row(i), 60000L)
+          })
+          t.setDaemon(true)
+          t
+        }
+        try {
+          var q = start()
+          threads.foreach(_.start())
+          if (throwOnce) {
+            intercept[StreamingQueryException](q.awaitTermination(60000L))
+            q = start()
+          }
+          try {
+            threads.foreach(_.join(60000L))
+            q.processAllAvailable()
+          } finally q.stop()
+          assert(!failOnce.get, "the sink's failure restarted the query")
+          val got = seen.asScala.map(_.longValue).toSeq
+          assert(got.distinct.size === got.size, "no duplicate delivery")
+          if (dropOldest) assert(got.size + ring.dropped === n)
+          else {
+            assert(got.size === n)
+            assert(got.sum === n * (n - 1) / 2)
+            assert(ring.dropped === 0)
+          }
+        } finally RingRegistry.remove(name)
+      }
+    }
   }
 }
