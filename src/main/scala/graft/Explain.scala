@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Plan/timing inspector: `runMain graft.Explain <sfDir> q1 q27 ...`
   * prints each query's formatted physical plan and two timed runs
-  * (cold-ish, warm) so plan regressions and warmup effects are
+  * (cold-ish, warm), each with the classes Janino compiled for it, so
+  * plan regressions, warmup effects and codegen-cache misses are
   * distinguishable. Dev tool, not part of the driver contract. */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -29,12 +30,14 @@ object Explain {
       graft.operators.Staging.sweep(spark)
       (1 to (if (planOnly) 0 else 2)).foreach { i =>
         val t0 = System.nanoTime()
+        val c0 = Compiles.now()
         val df = fn(spark, sfDir)
         // noop sink like Bench: count() would let Catalyst prune the
         // projections whose plan was just printed
         df.write.format("noop").mode("overwrite").save()
         val secs = (System.nanoTime() - t0) / 1e9
-        println(f"run$i: $secs%.2f s rows=${df.count()}")
+        val compiled = Compiles.now() - c0
+        println(f"run$i: $secs%.2f s rows=${df.count()} $compiled")
       }
     }
     spark.stop()

@@ -23,22 +23,26 @@ object Fixpoint {
   private val ShufflePartitions = "spark.sql.shuffle.partitions"
 
   /** Run `body` with the shuffle width derived from `inputs`' staged
-    * bytes ([[Staging.loopShufflePartitions]]), logged once. The session
-    * width is restored and every input is released when `body` returns
-    * or throws, so `body` must return a frame that no longer reads them
-    * (a staged round). AQE stays at the session's setting. */
+    * bytes ([[Staging.loopShufflePartitions]]). The session width is
+    * restored and every input is released when `body` returns or throws,
+    * so `body` must return a frame that no longer reads them (a staged
+    * round). AQE stays at the session's setting. One line per loop logs
+    * the width and the classes Janino compiled while the loop ran
+    * ([[graft.Compiles]]). */
   def scope[T](op: String, inputs: DataFrame*)(body: => T): T = {
     val spark = inputs.head.sparkSession
     val prev = spark.conf.get(ShufflePartitions)
+    val c0 = graft.Compiles.now()
+    var width = "unset"
     try {
-      val width = Staging.loopShufflePartitions(spark, inputs: _*)
-      log.info(s"$op: loop width $width from " +
-        s"${Staging.stagedBytes(spark, inputs: _*)} staged bytes")
-      spark.conf.set(ShufflePartitions, width.toString)
+      val w = Staging.loopShufflePartitions(spark, inputs: _*)
+      width = s"$w from ${Staging.stagedBytes(spark, inputs: _*)} staged bytes"
+      spark.conf.set(ShufflePartitions, w.toString)
       body
     } finally {
       spark.conf.set(ShufflePartitions, prev)
       inputs.foreach(Staging.release)
+      log.info(s"$op: loop width $width; ${graft.Compiles.now() - c0}")
     }
   }
 

@@ -23,6 +23,7 @@ object SparkTestBase {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .config(GraftSession.CheckpointManager._1, GraftSession.CheckpointManager._2)
+      .config(GraftSession.CodegenCache._1, GraftSession.CodegenCache._2)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
