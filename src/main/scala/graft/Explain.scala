@@ -1,11 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan/timing inspector: `runMain graft.Explain <sfDir> q1 q27 ...`
   * prints each query's formatted physical plan and two timed runs
-  * (cold-ish, warm), each with the classes Janino compiled for it, so
-  * plan regressions, warmup effects and codegen-cache misses are
+  * (cold-ish, warm), each with the Spark jobs and SQL actions it ran and
+  * the classes Janino compiled for it, so plan regressions, per-query
+  * fixed cost, warmup effects and codegen-cache misses are
   * distinguishable. Dev tool, not part of the driver contract. */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -13,6 +19,23 @@ object Explain {
     val names = args.tail.toSeq
     val spark = GraftSession.build("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
+    // every Spark job, and every SQL action (a Dataset action, including
+    // each staging checkpoint), counted over the session's life
+    val jobs, actions = new AtomicLong()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        actions.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        actions.incrementAndGet()
+    })
+    def counts(): (Long, Long) = {
+      GraftSqlBridge.drainListenerBus(spark)
+      (jobs.get, actions.get)
+    }
     // absorb session warmup so timings reflect the plan, not the JVM
     // (parquet + noop-writer init included, mirroring Bench)
     spark.range(2000000L).selectExpr("sum(id)").collect()
@@ -29,6 +52,7 @@ object Explain {
       fn(spark, sfDir).explain("formatted")
       graft.operators.Staging.sweep(spark)
       (1 to (if (planOnly) 0 else 2)).foreach { i =>
+        val (j0, a0) = counts()
         val t0 = System.nanoTime()
         val c0 = Compiles.now()
         val df = fn(spark, sfDir)
@@ -37,7 +61,9 @@ object Explain {
         df.write.format("noop").mode("overwrite").save()
         val secs = (System.nanoTime() - t0) / 1e9
         val compiled = Compiles.now() - c0
-        println(f"run$i: $secs%.2f s rows=${df.count()} $compiled")
+        val (j1, a1) = counts()
+        println(f"run$i: $secs%.2f s rows=${df.count()} " +
+          s"${j1 - j0} jobs, ${a1 - a0} SQL actions, $compiled")
       }
     }
     spark.stop()

@@ -70,18 +70,18 @@ object Coreness {
     val e = Staging.stage(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct(),
       eager = true)
-    val n = e.select(countDistinct(col("src"))).head().getLong(0)
-    log.info(s"coreness: edge staging ${secs(tEdges)}s (n=$n)")
+    log.info(s"coreness: edge staging ${secs(tEdges)}s")
 
     Fixpoint.scope("coreness", e) {
       val wDesc = Window.partitionBy(col("node")).orderBy(col("nv").desc)
       // v0 = degree (every node in a symmetrized edge list appears as
-      // src, so the degree groupBy IS the node table)
+      // src, so the degree groupBy IS the node table, and every round's
+      // row count is the node count)
       Fixpoint.iterate("coreness", "maxIterations", maxIterations,
           e.groupBy(col("src").as("id")).agg(count(lit(1)).as("v")),
           Seq(coalesce(sum(col("v").cast(DecimalType(38, 0))),
-            lit(0).cast(DecimalType(38, 0)))),
-          _ => n, Some(Fixpoint.unchanged)) { (vals, _, _) =>
+            lit(0).cast(DecimalType(38, 0))), count(lit(1))),
+          _.getLong(1), Some(Fixpoint.unchanged)) { (vals, _, _) =>
         // H-index of the neighbor multiset, over the per-node VALUE
         // HISTOGRAM instead of the raw neighbor list: for ranks
         // a..cum of a distinct value v (descending order), max over

@@ -33,11 +33,9 @@ object DagLevels {
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .filter(col("src") =!= col("dst")).distinct(),
       eager = true)
-    val nodes = Staging.stage(
+    val (nodes, n) = Staging.stageCounted(
       e.select(col("src").as("id"))
-        .unionByName(e.select(col("dst").as("id"))).distinct(),
-      eager = true)
-    val n = nodes.count()
+        .unionByName(e.select(col("dst").as("id"))).distinct())
     Fixpoint.scope("DAG levels", e, nodes) {
       Fixpoint.iterate("DAG levels",
           "maxIterations (or the input has a cycle)", maxIterations,

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.GraftSqlBridge.withKnownStats
 
 /** The loop skeleton shared by the iterated graph operators
   * (ConnectedComponents, Scc, PageRank, Coreness, HopDistance,
@@ -9,12 +10,16 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   * [[scope]] wraps a whole loop: it narrows `spark.sql.shuffle.partitions`
   * to the width of the loop's staged inputs, restores the session width
   * and releases those inputs on every exit path. [[iterate]] runs the
-  * rounds: each round stages the caller's step lazily with its known row
-  * count, runs ONE measuring aggregate over it (the action that also
-  * materializes the round's blocks), releases the previous round and
-  * stops on the caller's convergence test or at the round bound. A throw
-  * anywhere in the loop releases the rounds it holds, so a failed loop
-  * leaves no staged blocks pinned until the next sweep.
+  * rounds: each round stages the caller's step eagerly and computes the
+  * round's measure in that same action ([[Staging.stageMeasured]]: the
+  * measure is an observed metric of the job that materializes the
+  * round's blocks, so a round is ONE SQL action and no job re-reads the
+  * blocks; in reliable-checkpoint mode the round's plan is computed
+  * once, by the checkpoint write). It then attaches the known row count,
+  * releases the previous round and stops on the caller's convergence
+  * test or at the round bound. A throw anywhere in the loop releases the
+  * rounds it holds, so a failed loop leaves no staged blocks pinned
+  * until the next sweep.
   */
 object Fixpoint {
 
@@ -57,9 +62,9 @@ object Fixpoint {
     * @param op        operator name, for logs and the failure message
     * @param knob      what to raise when the bound is hit
     * @param maxRounds round bound
-    * @param init      round-0 plan; staged lazily here
+    * @param init      round-0 plan; staged here
     * @param measure   aggregate columns computed over every staged round
-    *                  (init included) in one action
+    *                  (init included) by the action that stages it
     * @param rows      the next round's row count, from the current
     *                  round's measure (attached as staged statistics)
     * @param converged `(previous, next)` measures → done; `None` runs
@@ -73,21 +78,21 @@ object Fixpoint {
       measure: Seq[Column], rows: Row => Long,
       converged: Option[(Row, Row) => Boolean])(
       step: (DataFrame, Row, Int) => DataFrame): (DataFrame, Row) = {
-    def measureOf(df: DataFrame) =
-      df.agg(measure.head, measure.tail: _*).head()
-    var cur = Staging.stage(init, eager = false)
+    var cur: DataFrame = null
     var next: DataFrame = null
     var ok = false
     try {
-      var s = measureOf(cur)
-      cur = org.apache.spark.sql.GraftSqlBridge.withKnownStats(cur, rows(s))
+      val (staged0, s0) = Staging.stageMeasured(init, measure)
+      cur = staged0
+      cur = withKnownStats(staged0, rows(s0))
+      var s = s0
       var done = false
       var i = 0
       while (!done && i < maxRounds) {
         val t0 = System.nanoTime()
-        next = Staging.stageWithStats(step(cur, s, i), rows(s),
-          eager = false)
-        val sNext = measureOf(next)
+        val (staged, sNext) = Staging.stageMeasured(step(cur, s, i), measure)
+        next = staged
+        next = withKnownStats(staged, rows(s))
         Staging.release(cur)
         cur = next
         next = null
@@ -106,7 +111,7 @@ object Fixpoint {
     } finally {
       if (!ok) {
         if (next != null) Staging.release(next)
-        Staging.release(cur)
+        if (cur != null) Staging.release(cur)
       }
     }
   }

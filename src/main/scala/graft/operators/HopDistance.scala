@@ -52,11 +52,9 @@ object HopDistance {
     val e = Staging.stage(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct(),
       eager = true)
-    val nodes = Staging.stage(
+    val (nodes, n) = Staging.stageCounted(
       e.select(col("src").as("id"))
-        .unionByName(e.select(col("dst").as("id"))).distinct(),
-      eager = true)
-    val n = nodes.count()
+        .unionByName(e.select(col("dst").as("id"))).distinct())
     log.info(s"hopdist: edge/node staging ${secs(tEdges)}s (n=$n)")
 
     Fixpoint.scope("hop distance", e, nodes) {

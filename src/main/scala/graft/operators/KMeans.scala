@@ -40,15 +40,15 @@ object KMeans {
       rounds: Int): DataFrame = {
     val v = Staging.stage(
       vecs.select(col(idCol).as("id"), col(vCol).as("v")), eager = true)
-    var cents = Staging.stage(
+    val (seeded, nSeeded) = Staging.stageCounted(
       v.filter(col("id") < k)
-        .select(col("id").as("cid"), col("v").as("cv")),
-      eager = true)
+        .select(col("id").as("cid"), col("v").as("cv")))
     // loud-failure contract (r13 advisory): an id convention that
     // seeds nothing must fail here, not surface as an empty result
     // downstream (DagLevels/Scc's require discipline)
-    require(cents.limit(1).count() > 0,
+    require(nSeeded > 0,
       s"KMeans: empty init — no vector has $idCol < k ($k)")
+    var cents = seeded
     for (_ <- 1 to rounds) {
       val a = assign(v, cents, idCol = "id", vCol = "v")
       val m = v.join(a.withColumnRenamed("id", "__aid"),
@@ -93,11 +93,10 @@ object KMeans {
     val spark = vecs.sparkSession
     val v = Staging.stage(
       vecs.select(col(idCol).as("id"), col(vCol).as("v")), eager = true)
-    var cents = Staging.stage(
-      init.select(col("cid").cast("long").as("cid"), col("cv")),
-      eager = true)
-    require(cents.limit(1).count() > 0,
-      "KMeans.runWithReseed: empty init frame")
+    val (seeded, nSeeded) = Staging.stageCounted(
+      init.select(col("cid").cast("long").as("cid"), col("cv")))
+    require(nSeeded > 0, "KMeans.runWithReseed: empty init frame")
+    var cents = seeded
     for (_ <- 1 to rounds) {
       val a = assign(v, cents, idCol = "id", vCol = "v")
       val m = v.join(a.withColumnRenamed("id", "__aid"),

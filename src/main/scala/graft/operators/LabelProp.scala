@@ -59,10 +59,9 @@ object LabelProp {
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(wCol).cast("long").as("w")),
       eager = true)
-    val nodes = Staging.stage(
+    val (nodes, n) = Staging.stageCounted(
       e.select(col("src").as("id"))
-        .unionByName(e.select(col("dst").as("id"))).distinct(),
-      eager = true)
+        .unionByName(e.select(col("dst").as("id"))).distinct())
     // self-vote strength: the node's strongest in-edge (on a
     // symmetrized graph = strongest incident edge); nodes with no
     // in-edge cast no self vote but also hear no neighbors — the
@@ -71,7 +70,6 @@ object LabelProp {
       e.groupBy(col("dst")).agg(max(col("w")).as("mw"))
         .select(col("dst").as("sid"), col("mw")),
       eager = true)
-    val n = nodes.count()
     log.info(s"labelprop: edge/node staging ${secs(tEdges)}s (n=$n)")
 
     Fixpoint.scope("labelprop", e, nodes, selfW) {

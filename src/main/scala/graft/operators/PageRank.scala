@@ -72,12 +72,10 @@ object PageRank {
     val ew = Staging.stage(
       e.join(e.groupBy(col("src")).agg(sum(col("w")).as("tw")), "src"),
       eager = true)
-    val nodes = Staging.stage(
+    val (nodes, n) = Staging.stageCounted(
       e.select(col("src").as("id"))
-        .unionByName(e.select(col("dst").as("id"))).distinct(),
-      eager = true)
+        .unionByName(e.select(col("dst").as("id"))).distinct())
     Staging.release(e)
-    val n = nodes.count()
     // dangling = nodes with no out-edges; their mass redistributes
     // uniformly each round (dropping it instead would leak total mass
     // and understate every rank)
@@ -173,16 +171,17 @@ object PageRank {
       eager = true)
     val seedIds = Staging.stage(
       seeds.select(col(seedCol).as("sid")).distinct(), eager = true)
-    val nodes = Staging.stage(
+    // node and seed counts ride the staging job
+    val (nodes, counts) = Staging.stageMeasured(
       e.select(col("src").as("id"))
         .unionByName(e.select(col("dst").as("id"))).distinct()
         .join(seedIds, col("id") === col("sid"), "left_outer")
         .select(col("id"),
           when(col("sid").isNotNull, 1L).otherwise(0L).as("isSeed")),
-      eager = true)
+      Seq(count(lit(1)), count(when(col("isSeed") === 1L, true))))
     Staging.release(e)
-    val n = nodes.count()
-    val sCnt = nodes.filter(col("isSeed") === 1L).count()
+    val n = counts.getLong(0)
+    val sCnt = counts.getLong(1)
     require(sCnt > 0, "personalized pagerank needs >= 1 seed IN the graph")
     val dangling = Staging.stage(
       nodes.select(col("id"), col("isSeed"))

@@ -105,12 +105,10 @@ object QualityLr {
         "score fold overflows past it")
     val spark = feat.sparkSession
     import spark.implicits._
-    val docFeat = Staging.stage(
+    val (docFeat, nDocs) = Staging.stageCounted(
       feat.groupBy($"doc_id", $"y".cast("long").as("y"))
         .agg(collect_list(struct($"b".cast("long").as("b"),
-          $"x".cast("long").as("x"))).as("fs")),
-      eager = true)
-    val nDocs = docFeat.count()
+          $"x".cast("long").as("x"))).as("fs")))
     var w = Staging.stage(
       spark.range(b).select($"id".as("b"),
         lit(0).cast(DecimalType(38, 0)).as("w")),

@@ -60,7 +60,7 @@ object Scc {
     * Convergence is the joint monotone sum: f and b only ever
     * decrease, so sum(f) + sum(b) (DECIMAL(38,0)) is strictly
     * decreasing until BOTH sides are fixed. `er` must already be
-    * restricted to the node set. Returns ((id, f, b) staged lazily —
+    * restricted to the node set. Returns ((id, f, b) staged —
     * caller releases — and the number of ASSIGNED nodes (f = b) in the
     * converged table, which rides the SAME per-round measuring
     * aggregate so the peel loop needs no separate count job). */
@@ -407,13 +407,13 @@ object Scc {
     // (node → new scc, touched?) mapping the re-quotient pass probes:
     // the old shape staged a second standing ⋈ labels ⋈ touched
     // mapping (one more staging job + two more standing probes). The
-    // count reads already-materialized blocks (cheap) and carries the
-    // stats so the corpus-sized kept pass probes it as a broadcast,
-    // not a shuffle; blocks stay pinned for the returned lazy arc plan
-    // until the caller's Staging.sweep.
-    val labelsStaged = Staging.stage(labelsT, eager = true)
+    // staging job counts the rows, and the stats carry the count so the
+    // corpus-sized kept pass probes it as a broadcast, not a shuffle;
+    // blocks stay pinned for the returned lazy arc plan until the
+    // caller's Staging.sweep.
+    val (labelsStaged, labelsN) = Staging.stageCounted(labelsT)
     val labStats = org.apache.spark.sql.GraftSqlBridge.withKnownStats(
-      labelsStaged, labelsStaged.count())
+      labelsStaged, labelsN)
     val labels = labStats.select(col("id"), col("scc"))
     // support decrement for arcs between UNTOUCHED components, from
     // the deletion quotient decrementalParts already staged (delQ is
@@ -478,11 +478,10 @@ object Scc {
       if (edgesClean) renamed
       else renamed.filter(col("src") =!= col("dst")).distinct(),
       eager = true)
-    val active = Staging.stage(
+    val (active, totalN) = Staging.stageCounted(
       e.select(col("src").as("id"))
-        .unionByName(e.select(col("dst").as("id"))).distinct(),
-      eager = true)
-    var activeN = active.count()
+        .unionByName(e.select(col("dst").as("id"))).distinct())
+    var activeN = totalN
     log.info(s"scc: edge/node staging ${secs(tEdges)}s (n=$activeN)")
 
     Fixpoint.scope("scc", e, active) {
@@ -496,7 +495,6 @@ object Scc {
         active.filter(lit(false)).select(col("id"), col("id").as("scc")))
       var fbFrames = List.empty[DataFrame]
       var activeDf: DataFrame = active
-      val totalN = activeN
       var peel = 0
       val assigned = try {
         while (activeN > 0 && peel < maxPeels) {
@@ -516,7 +514,7 @@ object Scc {
               eager = true)
           // both fixpoints in one loop; a node with f = b = m is in
           // SCC(m) — a filter on the fused label table, no join. fb is
-          // materialized (its last measuring action ran), so the
+          // materialized (its last round's staging job ran), so the
           // induced edge leaf can release as soon as it returns
           val (fb, doneCnt) =
             try minReachBoth(er, activeDf, activeN, maxIterations)

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Lineage-truncating staging for iterative / self-joined pipelines, plus
   * the matching release primitive.
@@ -24,7 +25,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     for the multi-hour 100 TB dedup/clustering jobs these operators
   *     exist for; the cost is one FS write + read per staged frame (and
   *     for lazy staging one extra compute of the staged plan, inherent
-  *     to RDD checkpointing).
+  *     to RDD checkpointing; eager staging computes it once, in the
+  *     job that writes the files).
+  *
+  * Measures ride the staging action: [[stageMeasured]] computes
+  * aggregates over the staged rows as observed metrics of the one job
+  * that materializes them, so a caller that needs a row count or a
+  * convergence sum runs no second action over blocks it just wrote.
   *
   * Neither mode registers the plan in the session `CacheManager`
   * (`persist()` does, and every later query then pays plan
@@ -55,7 +62,11 @@ object Staging {
     java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
   /** Materialize `df` (now if `eager`, at first use otherwise) and
-    * truncate its lineage. See the object doc for mode selection. */
+    * truncate its lineage. See the object doc for mode selection. An
+    * eager stage runs the same single job as Spark's eager checkpoint,
+    * but after the checkpoint is registered here, so a plan that fails
+    * while it materializes releases its frame instead of leaving it
+    * pinned until the next sweep. */
   def stage(df: DataFrame, eager: Boolean): DataFrame = {
     val spark = df.sparkSession
     val out = spark.conf.getOption(ConfKey) match {
@@ -64,15 +75,44 @@ object Staging {
         // first caller wins: setCheckpointDir mints a fresh UUID subdir
         // per call, so re-setting it per stage would scatter files
         if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-        df.checkpoint(eager)
-      case None => df.localCheckpoint(eager)
+        df.checkpoint(eager = false)
+      case None => df.localCheckpoint(eager = false)
     }
     out.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         stagedIds.add(l.rdd.id)
       case _ => ()
     }
+    if (eager)
+      try org.apache.spark.sql.GraftSqlBridge.materialize(out)
+      catch { case t: Throwable => release(out); throw t }
     out
+  }
+
+  private val measureIds = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Stage `df` eagerly and compute `measures` (aggregate columns) over
+    * its rows in the same action: they are observed metrics
+    * (`Dataset.observe`) of the job that materializes the staged frame —
+    * `doCheckpoint` for local checkpoints, the file write for reliable
+    * ones — so no second action re-reads what that job just wrote. The
+    * row holds the measures in order, typed as `df.agg(measures)` would
+    * type them (an empty or 0-partition frame measures the empty
+    * aggregate: count 0, sum NULL). If reading them fails the staged
+    * frame is released before the throw propagates. */
+  def stageMeasured(df: DataFrame, measures: Seq[Column]): (DataFrame, Row) = {
+    val name = s"graft_stage_${measureIds.incrementAndGet()}"
+    val observed = df.observe(name, measures.head, measures.tail: _*)
+    val staged = stage(observed, eager = true)
+    try (staged, observed.queryExecution.observedMetrics(name))
+    catch { case t: Throwable => release(staged); throw t }
+  }
+
+  /** [[stageMeasured]] for the common case: stage eagerly and return the
+    * staged frame with its row count, counted by the staging job. */
+  def stageCounted(df: DataFrame): (DataFrame, Long) = {
+    val (staged, m) = stageMeasured(df, Seq(count(lit(1))))
+    (staged, m.getLong(0))
   }
 
   /** Conf key: target bytes per shuffle partition inside an iterated
@@ -136,20 +176,6 @@ object Staging {
       })
     }.sum
   }
-
-  /** [[stage]] + attach a KNOWN row count as LogicalRDD statistics
-    * (via `GraftSqlBridge.withKnownStats`), so downstream joins against
-    * the staged frame get a real size estimate and Catalyst makes the
-    * broadcast decision itself — no hand-placed `broadcast()` hint, and
-    * the decision flips to shuffle automatically when the frame
-    * outgrows `autoBroadcastJoinThreshold` at scale. Use in iterated
-    * loops where the per-round sliver's cardinality is already known
-    * (graph label/rank tables: one row per node). `release`/`sweep`
-    * work unchanged — the stats wrapper shares the staged RDD. */
-  def stageWithStats(df: DataFrame, rowCount: Long,
-      eager: Boolean): DataFrame =
-    org.apache.spark.sql.GraftSqlBridge.withKnownStats(
-      stage(df, eager), rowCount)
 
   /** Release ONE staged frame's blocks (non-blocking). Matches only when
     * `staged` is directly the frame `stage` returned (its analyzed plan

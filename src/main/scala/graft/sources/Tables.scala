@@ -9,14 +9,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - Loaders return the raw `spark.read.parquet` DataFrame with no eager
   *     action; Catalyst prunes columns and pushes predicates into the scan,
   *     so callers `select`/`filter` freely without re-reading.
-  *   - No caching here: at cluster scale the fact tables do not fit in
-  *     memory; callers that genuinely reuse a small dim may cache it
-  *     themselves (or rely on broadcast).
+  *   - No caching of data here: at cluster scale the fact tables do not
+  *     fit in memory; callers that genuinely reuse a small dim may cache
+  *     it themselves (or rely on broadcast). Only per-file facts are
+  *     memoized — the inferred schema and the scan's partition count —
+  *     each keyed on the file's state ([[Tables.fileState]]).
   */
 final class Tables(spark: SparkSession, dir: String) {
   private def load(name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    Tables.withMinParallelism(spark, spark.read.parquet(path), path)
+    Tables.fileState(spark, path) match {
+      case Some(state) => Tables.withMinParallelism(spark,
+        Tables.read(spark, path, state), s"$path#$state")
+      case None => spark.read.parquet(path) // fails with Spark's message
+    }
   }
 
   def region: DataFrame = load("region")
@@ -74,24 +80,66 @@ object Tables {
     * The scan's partition count comes from `df.rdd`, which compiles a
     * physical plan — real driver work that every query was paying per
     * table load. The count is a function of (file layout, session scan
-    * config, parallelism), so the memo key includes the session's
-    * defaultParallelism and the file's mtime — a path rewritten with a
-    * different layout, or a second session with different parallelism,
-    * recomputes instead of reusing a stale count (What's-wrong #4,
-    * round-3 VERDICT; round-4 ADVICE). */
+    * config, parallelism), so it is memoized under `cacheKey`, which must
+    * name the file's state ([[fileState]]), plus the session's
+    * defaultParallelism — a path rewritten with a different layout, or a
+    * second session with different parallelism, recomputes instead of
+    * reusing a stale count. */
   def withMinParallelism(spark: SparkSession, df: DataFrame,
       cacheKey: String): DataFrame = {
     val target = spark.sparkContext.defaultParallelism
-    val mtime = try java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(cacheKey)).toMillis
-    catch { case _: Throwable => 0L }
-    val n = scanParts.computeIfAbsent(s"$cacheKey#$target#$mtime",
+    val n = scanParts.computeIfAbsent(s"$cacheKey#$target",
       _ => Integer.valueOf(df.rdd.getNumPartitions))
     if (n < target) df.repartition(target) else df
   }
 
   private val scanParts =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+
+  /** The state of the file or directory at `path`, read through Hadoop's
+    * `FileSystem` with the session's Hadoop conf, so `file:`, `hdfs:` and
+    * `s3a:` URIs are keyed like plain paths: length and modification
+    * time of the path and, for a directory, of each entry in it. Any
+    * rewrite in place changes it. `None` when the path cannot be read
+    * (the load then fails in Spark's own reader, with its own message). */
+  private[graft] def fileState(spark: SparkSession,
+      path: String): Option[String] = try {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(
+      org.apache.spark.sql.GraftSqlBridge.hadoopConf(spark))
+    val st = fs.getFileStatus(p)
+    val entries =
+      if (st.isDirectory) fs.listStatus(p).sortBy(_.getPath.getName).toSeq
+      else Nil
+    Some((st +: entries).map(f =>
+      s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+      .mkString(","))
+  } catch { case _: java.io.IOException => None }
+
+  /** Session settings that change the schema Spark infers from a parquet
+    * footer (`nanosAsLong` turns `events.ts` from an illegal
+    * TIMESTAMP(NANOS) into a LONG). */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** `spark.read.parquet(path)` with the schema inferred once per file
+    * state and schema-relevant settings: inference reads a footer in a
+    * Spark job, which every load of an unchanged file used to repeat. */
+  private def read(spark: SparkSession, path: String,
+      state: String): DataFrame = {
+    val confs = SchemaConfs.map(k => spark.conf.getOption(k).getOrElse(""))
+    val schema = schemas.computeIfAbsent(
+      (Seq(path, state) ++ confs).mkString("#"),
+      _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    String, org.apache.spark.sql.types.StructType]()
 
   /** Normalize an events-shaped frame to (`ts` µs TimestampType,
     * `ts_ns` epoch-nanos LongType) regardless of the source's physical

@@ -34,6 +34,28 @@ object GraftSqlBridge {
       : org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
+  /** The Hadoop conf the session's own file readers use: the context's
+    * conf with the session's settings applied. */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[ClassicSparkSession].sessionState.newHadoopConf()
+
+  /** Materialize a lazily checkpointed DataFrame now: the job Spark's
+    * eager `Dataset.checkpoint` runs inside its action (`RDD.doCheckpoint`
+    * is `private[spark]`) — blocks for a local checkpoint, files for a
+    * reliable one, the plan computed once either way. A no-op for a
+    * frame that is not directly a checkpoint's LogicalRDD leaf. */
+  def materialize(staged: DataFrame): Unit =
+    staged.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.doCheckpoint()
+      case _ => ()
+    }
+
+  /** Wait until every event posted so far has reached the session's
+    * listeners (the listener bus is `private[spark]`), so a listener's
+    * counts cover everything that ran before the call. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(30000L)
+
   /** Re-wrap a staged (checkpointed) DataFrame's LogicalRDD leaf with
     * KNOWN row-count/size statistics (LogicalRDD's `originStats`
     * constructor slot — exactly where Spark itself carries the source

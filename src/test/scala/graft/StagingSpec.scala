@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
 
 import graft.operators.{ConnectedComponents, Staging}
 
@@ -77,5 +79,66 @@ class StagingSpec extends SparkTestBase {
       spark.conf.unset(Staging.ConfKey)
       Staging.sweep(spark)
     }
+  }
+
+  // measures of the shapes the loops use: a count, a LONG sum that is
+  // NULL over no rows, a DECIMAL(38,0) sum, a coalesced max
+  private def measures = Seq(count(lit(1)), sum($"x"),
+    sum(($"x" * 1000003L).cast(DecimalType(38, 0))),
+    coalesce(max(abs($"y" - 3L)), lit(0L)))
+
+  private def frames(): Seq[(String, DataFrame)] = {
+    val rows = spark.range(0, 5000, 1, 6)
+      .select($"id".as("x"), ($"id" % 7).as("y"))
+    Seq(
+      "rows" -> rows,
+      "filtered-empty" -> rows.filter(lit(false)),
+      "0-partition" -> spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row],
+        new StructType().add("x", LongType).add("y", LongType)))
+  }
+
+  private def measuredMatchesAggregate(): Unit =
+    frames().foreach { case (label, df) =>
+      val (staged, m) = Staging.stageMeasured(df, measures)
+      val direct = staged.agg(measures.head, measures.tail: _*).head()
+      assert(m === direct, label)
+      assert(staged.count() === m.getLong(0), label)
+      Staging.release(staged)
+    }
+
+  test("stageMeasured equals a separate aggregate over the staged frame") {
+    assert(frames().last._2.rdd.getNumPartitions === 0)
+    measuredMatchesAggregate()
+    Staging.sweep(spark)
+  }
+
+  test("stageMeasured equals a separate aggregate in reliable mode") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_m_")
+    spark.conf.set(Staging.ConfKey, dir.toString)
+    try measuredMatchesAggregate()
+    finally {
+      spark.conf.unset(Staging.ConfKey)
+      Staging.sweep(spark)
+    }
+  }
+
+  test("stageCounted counts with the staging job and pins one frame") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (staged, n) = Staging.stageCounted(
+      spark.range(1234).select($"id".as("x")).filter($"x" % 3 === 0))
+    assert(n === 412L)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).size === 1)
+    Staging.release(staged)
+    Staging.sweep(spark)
+  }
+
+  test("a plan that fails while it is staged pins nothing") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception] {
+      Staging.stageCounted(
+        spark.range(10).select(raise_error(lit("boom")).as("x")))
+    }
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
   }
 }

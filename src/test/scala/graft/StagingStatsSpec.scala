@@ -2,17 +2,19 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.GraftSqlBridge.withKnownStats
+
 import graft.operators.{LabelProp, Staging}
 
-/** Stats-carrying staged leaves (Staging.stageWithStats /
-  * GraftSqlBridge.withKnownStats — r11 verdict ask #5).
+/** Stats-carrying staged leaves (GraftSqlBridge.withKnownStats over a
+  * staged frame — r11 verdict ask #5).
   *
   * The premise, measured: `localCheckpoint` carries the ORIGIN plan's
   * statistics into the staged LogicalRDD, and size-only estimation
   * blows a join estimate up to left×right — so a join/aggregate-derived
   * sliver (every iterated loop's label/rank table) reports "huge" even
   * when it holds a few hundred rows, which is why the loops needed
-  * hand-placed broadcast() hints. stageWithStats overrides the estimate
+  * hand-placed broadcast() hints. withKnownStats overrides the estimate
   * with the TRUE row count the loop already knows, and Catalyst then
   * makes the broadcast decision itself — in BOTH directions. Pinned on
   * the pre-AQE physical plan (sparkPlan), where the size estimate — not
@@ -51,15 +53,15 @@ class StagingStatsSpec extends SparkTestBase {
       !pPlain.contains("BroadcastHashJoin"),
       s"expected SMJ without stats:\n$pPlain")
     // known small row count -> Catalyst broadcasts, no hint anywhere
-    val withStats = Staging.stageWithStats(sliver, 100L, eager = true)
+    val withStats = withKnownStats(Staging.stage(sliver, eager = true), 100L)
     val pStats = big.join(withStats, $"src" === $"id")
       .queryExecution.sparkPlan.toString
     assert(pStats.contains("BroadcastHashJoin"),
       s"expected BHJ with rowCount=100 stats:\n$pStats")
     // a row count that exceeds the threshold keeps the shuffled join —
     // the 100x-scale direction of the same decision
-    val hugeStats = org.apache.spark.sql.GraftSqlBridge
-      .withKnownStats(Staging.stage(sliver, eager = true), 100000000L)
+    val hugeStats =
+      withKnownStats(Staging.stage(sliver, eager = true), 100000000L)
     val pHuge = big.join(hugeStats, $"src" === $"id")
       .queryExecution.sparkPlan.toString
     assert(pHuge.contains("SortMergeJoin") &&
@@ -70,7 +72,7 @@ class StagingStatsSpec extends SparkTestBase {
 
   test("stats wrapper preserves rows, release still frees the blocks") {
     val df = (0L until 50L).map(i => (i, s"v$i")).toDF("id", "v")
-    val staged = Staging.stageWithStats(df, 50L, eager = true)
+    val staged = withKnownStats(Staging.stage(df, eager = true), 50L)
     assert(staged.count() == 50L)
     assert(staged.orderBy($"id").collect().map(_.getLong(0)).toSeq ==
       (0L until 50L).toSeq)
@@ -94,8 +96,8 @@ class StagingStatsSpec extends SparkTestBase {
     val nodes = e.select($"src".as("id")).union(e.select($"dst"))
       .distinct()
     val n = nodes.count()
-    val labels = Staging.stageWithStats(
-      nodes.withColumn("label", $"id"), n, eager = false)
+    val labels = withKnownStats(
+      Staging.stage(nodes.withColumn("label", $"id"), eager = false), n)
     val p = e.join(labels, $"src" === $"id")
       .queryExecution.sparkPlan.toString
     assert(p.contains("BroadcastHashJoin") && p.contains("BuildRight"),
