@@ -1,180 +1,217 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
-/** Header-level decode of PUBLIC image container formats as codegen'd
+/* Header-level decode of PUBLIC media and container formats as codegen'd
   * Catalyst expressions — the "multimodal column" first-class path: media
   * payloads ride as `BinaryType` and their structural metadata (width,
-  * height, bit depth) is parsed natively inside whole-stage codegen, the
-  * same standard as the wire codec in [[LittleEndian]]. Formats and
-  * offsets are from the public specifications only:
-  *
-  *  - BMP: BITMAPFILEHEADER ("BM" magic, u32 LE file size @2, u32 LE
-  *    pixel-data offset @10) + BITMAPINFOHEADER (u32 LE DIB size @14,
-  *    i32 LE width @18, i32 LE height @22, u16 LE bpp @28) — all
-  *    little-endian.
-  *  - PNG: 8-byte signature (89 50 4E 47 0D 0A 1A 0A) then the IHDR
-  *    chunk: u32 BE width @16, u32 BE height @20, u8 bit-depth @24,
-  *    u8 color-type @25 — network byte order.
-  *  - WAV: RIFF container ("RIFF" @0, "WAVE" @8) holding size-prefixed
-  *    chunks; the "fmt " chunk (located by [[WavFmtField]]'s bounded
-  *    chunk walk — LIST/INFO-first files are spec-valid and common)
-  *    carries u16 LE audio-format @0, u16 LE channels @2, u32 LE
-  *    sample-rate @4, u32 LE byte-rate @8, u16 LE bits-per-sample @14
-  *    within its payload — the audio modality's structural metadata,
-  *    all little-endian.
-  *  - GIF: "GIF87a"/"GIF89a" signature, then the logical screen
-  *    descriptor: u16 LE width @6, u16 LE height @8 — fixed offsets.
-  *  - JPEG: SOI (FF D8) then u16-BE-length-prefixed marker segments;
-  *    dimensions live in the SOF0/SOF1/SOF2 frame header located by
-  *    [[JpegSofField]]'s bounded marker walk (real files carry
-  *    APP0/Exif/COM segments before SOF): u8 precision, u16 BE
-  *    height, u16 BE width, u8 components.
-  *  - MP4/ISO-BMFF: u32-BE-size-prefixed boxes; `moov`→`mvhd` located
-  *    by [[Mp4MvhdField]]'s bounded top-level box walk (ftyp-first
-  *    required): u32 BE timescale @20 / duration @24 of the mvhd box
-  *    — the video modality's structural metadata.
+  * height, bit depth, sample rate, duration) is parsed natively inside
+  * whole-stage codegen, the same standard as the wire codec in
+  * [[LittleEndian]]. Formats and offsets are from the public
+  * specifications only; each format's layout is documented on its
+  * static reader object below ([[ImageHeader]], [[WavFmt]], [[JpegSof]],
+  * [[Mp4Mvhd]], [[Mp3Frame]], [[FlacStreamInfo]], [[WebpHeader]],
+  * [[TiffHeader]], [[GzipHeader]], [[ZstdFrame]], [[OpusHead]],
+  * [[TfRecord]]).
   *
   * One EXPRESSION PER FIELD (not one struct decode) so column pruning
   * reaches the parse: a projection that needs only `width` never touches
-  * the other fields, and each image expression is a branch-free
-  * bounds+magic check plus a fixed-offset read — exactly what the scan's
-  * hot loop wants at 100 TB (the WAV fields add one bounded loop over at
-  * most 8 chunk headers). Null-safe: a payload that is too short or
-  * fails the magic check decodes to NULL (never throws), so a
-  * mixed/corrupt corpus degrades to NULL metadata rather than a failed
-  * job. Genuinely codec-requiring work (pixel decode, frame extraction)
-  * would run as partition-batched iteration over the same binary
-  * columns once a codec library exists in the deployment — header
-  * fields never need one, so every decode in this catalog is a codegen'd
-  * expression (CatalogInvariantSpec pins zero MapPartitions in batch
-  * plans).
+  * the other fields. Every numeric field is a [[ReaderField]]: the
+  * parse is one static reader that the interpreted and the generated
+  * path both call, so the two cannot drift apart. Null-safe: a payload
+  * that is too short or fails the magic check decodes to NULL (never
+  * throws), so a mixed/corrupt corpus degrades to NULL metadata rather
+  * than a failed job. Genuinely codec-requiring work (pixel decode,
+  * frame extraction) would run as partition-batched iteration over the
+  * same binary columns once a codec library exists in the deployment —
+  * header fields never need one, so every decode in this catalog is a
+  * codegen'd expression (CatalogInvariantSpec pins zero MapPartitions in
+  * batch plans).
   */
-abstract class HeaderField extends UnaryExpression
-    with ImplicitCastInputTypes with Serializable {
+
+/** One numeric field of a binary payload, read by a static reader: a
+  * `long`-returning method of a top-level object in this package. `call`
+  * names it for the generated code (relative to `graft.functions`) and
+  * `read` is the same method for interpreted eval — the JVM inlines the
+  * static call inside whole-stage codegen, so there is no ScalaUDF node
+  * and no codegen break.
+  *
+  * The field is NULL when the reader's value lies outside the field's
+  * range: `[0, max]`, or `[Int.MinValue, max]` for a `signed` field, where
+  * max is `Int.MaxValue` for INT fields and `Long.MaxValue` for BIGINT
+  * ones. So a reader returns -1 for an absent unsigned field (a signed
+  * one returns `Long.MinValue`), and a value that exceeds the field's
+  * type — a spec-legal u32 past 2^31−1 in an INT field — is NULL, never
+  * a wrapped negative (the exceeds-the-type rule).
+  */
+abstract class ReaderField(call: String, read: Array[Byte] => Long,
+    val dataType: DataType, signed: Boolean = false)
+    extends UnaryExpression with ImplicitCastInputTypes with Serializable {
   override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def nullable: Boolean = true
-  override def dataType: DataType = IntegerType
 
-  /** 0-based byte offset of the field within the header. */
-  protected def offset: Int
-  /** Field byte width: 1 (u8), 2 (u16) or 4 (i32; PNG u32 ≤ 2^31−1). */
-  protected def size: Int
-  protected def bigEndian: Boolean
-  /** Magic/signature check (interpreted path). Bounds already checked. */
-  protected def magicOk(a: Array[Byte]): Boolean
-  /** Same check as Java source over byte-array variable `a` (codegen). */
-  protected def magicJava(a: String): String
-  /** Minimum payload length for this field to exist. */
-  protected def minLen: Int = offset + size
+  private def lo: Long = if (signed) Int.MinValue.toLong else 0L
+  private def hi: Long =
+    if (dataType == IntegerType) Int.MaxValue.toLong else Long.MaxValue
 
   override def nullSafeEval(bytes: Any): Any = {
-    val a = bytes.asInstanceOf[Array[Byte]]
-    if (a.length < minLen || !magicOk(a)) null
-    else {
-      var v = 0
-      if (bigEndian) {
-        var i = 0
-        while (i < size) { v = (v << 8) | (a(offset + i) & 0xFF); i += 1 }
-      } else {
-        var i = size - 1
-        while (i >= 0) { v = (v << 8) | (a(offset + i) & 0xFF); i -= 1 }
-      }
-      v
-    }
+    val v = read(bytes.asInstanceOf[Array[Byte]])
+    if (v < lo || v > hi) null
+    else if (dataType == IntegerType) v.toInt
+    else v
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
-      val order = if (bigEndian) "BIG_ENDIAN" else "LITTLE_ENDIAN"
-      val read = size match {
-        case 1 => "get() & 0xFF"
-        case 2 => "getShort() & 0xFFFF"
-        case 4 => "getInt()"
-      }
-      s"""if ($a.length < $minLen || !(${magicJava(a)})) {
+      val v = ctx.freshName("field")
+      s"""long $v = graft.functions.$call($a);
+         |if ($v < ${lo}L || $v > ${hi}L) {
          |  ${ev.isNull} = true;
          |} else {
-         |  ${ev.value} = java.nio.ByteBuffer.wrap($a, $offset, $size)
-         |    .order(java.nio.ByteOrder.$order).$read;
+         |  ${ev.value} = (${CodeGenerator.javaType(dataType)}) $v;
          |}""".stripMargin
     })
 }
 
-/** Shared BMP magic: 'B''M' at offset 0. */
-trait BmpMagic { self: HeaderField =>
-  protected def magicOk(a: Array[Byte]): Boolean =
-    a(0) == 0x42 && a(1) == 0x4D
-  protected def magicJava(a: String): String =
-    s"$a[0] == 0x42 && $a[1] == 0x4D"
-  protected def bigEndian: Boolean = false
+/** Fixed-width reads shared by the readers below. Values of up to 7
+  * bytes are unsigned; an 8-byte value is the raw 64 bits (negative when
+  * its top bit is set). */
+private[functions] object Bytes {
+  /** Little-endian `n`-byte value at `p`. */
+  def le(a: Array[Byte], p: Int, n: Int): Long = {
+    var v = 0L
+    var i = n - 1
+    while (i >= 0) { v = (v << 8) | (a(p + i) & 0xFFL); i -= 1 }
+    v
+  }
+
+  /** Big-endian `n`-byte value at `p`. */
+  def be(a: Array[Byte], p: Int, n: Int): Long = {
+    var v = 0L
+    var i = 0
+    while (i < n) { v = (v << 8) | (a(p + i) & 0xFFL); i += 1 }
+    v
+  }
 }
 
-case class BmpWidth(child: Expression) extends HeaderField with BmpMagic {
-  protected val offset = 18; protected val size = 4
+/** BMP, PNG and GIF fields: a magic check, then a fixed-offset read.
+  *
+  *  - BMP: BITMAPFILEHEADER ("BM" magic, u32 LE file size @2, u32 LE
+  *    pixel-data offset @10) + BITMAPINFOHEADER (u32 LE DIB size @14,
+  *    i32 LE width @18, i32 LE height @22, u16 LE bpp @28) — all
+  *    little-endian. Width and height are SIGNED (top-down bitmaps carry
+  *    a negative height), so their readers return `Long.MinValue` when
+  *    absent.
+  *  - PNG: 8-byte signature (89 50 4E 47 0D 0A 1A 0A), then the IHDR
+  *    chunk, which the spec REQUIRES first ("IHDR" @12): u32 BE width
+  *    @16, u32 BE height @20, u8 bit-depth @24, u8 color-type @25 —
+  *    network byte order. Width and height are capped at 2^31−1 by the
+  *    spec; a larger value exceeds the INT field and reads NULL.
+  *  - GIF: "GIF87a"/"GIF89a" signature, then the logical screen
+  *    descriptor: u16 LE width @6, u16 LE height @8.
+  *
+  * A payload too short for the field, or failing the magic, reads -1.
+  */
+object ImageHeader {
+  private def bmp(a: Array[Byte], need: Int): Boolean =
+    a.length >= need && a(0) == 'B' && a(1) == 'M'
+
+  private def png(a: Array[Byte], need: Int): Boolean =
+    a.length >= need && (a(0) & 0xFF) == 0x89 && a(1) == 'P' &&
+      a(2) == 'N' && a(3) == 'G' && a(4) == 0x0D && a(5) == 0x0A &&
+      a(6) == 0x1A && a(7) == 0x0A && a(12) == 'I' && a(13) == 'H' &&
+      a(14) == 'D' && a(15) == 'R'
+
+  private def gif(a: Array[Byte], need: Int): Boolean =
+    a.length >= need && a(0) == 'G' && a(1) == 'I' && a(2) == 'F' &&
+      a(3) == '8' && (a(4) == '7' || a(4) == '9') && a(5) == 'a'
+
+  def bmpWidth(a: Array[Byte]): Long =
+    if (bmp(a, 22)) Bytes.le(a, 18, 4).toInt.toLong else Long.MinValue
+  def bmpHeight(a: Array[Byte]): Long =
+    if (bmp(a, 26)) Bytes.le(a, 22, 4).toInt.toLong else Long.MinValue
+  def bmpBpp(a: Array[Byte]): Long =
+    if (bmp(a, 30)) Bytes.le(a, 28, 2) else -1L
+
+  def pngWidth(a: Array[Byte]): Long =
+    if (png(a, 20)) Bytes.be(a, 16, 4) else -1L
+  def pngHeight(a: Array[Byte]): Long =
+    if (png(a, 24)) Bytes.be(a, 20, 4) else -1L
+  def pngBitDepth(a: Array[Byte]): Long =
+    if (png(a, 25)) a(24) & 0xFFL else -1L
+  def pngColorType(a: Array[Byte]): Long =
+    if (png(a, 26)) a(25) & 0xFFL else -1L
+
+  def gifWidth(a: Array[Byte]): Long =
+    if (gif(a, 8)) Bytes.le(a, 6, 2) else -1L
+  def gifHeight(a: Array[Byte]): Long =
+    if (gif(a, 10)) Bytes.le(a, 8, 2) else -1L
+}
+
+case class BmpWidth(child: Expression) extends ReaderField(
+    "ImageHeader.bmpWidth", ImageHeader.bmpWidth, IntegerType, signed = true) {
   override protected def withNewChildInternal(c: Expression): BmpWidth =
     copy(child = c)
   override def prettyName: String = "bmp_width"
 }
 
-case class BmpHeight(child: Expression) extends HeaderField with BmpMagic {
-  protected val offset = 22; protected val size = 4
+case class BmpHeight(child: Expression) extends ReaderField(
+    "ImageHeader.bmpHeight", ImageHeader.bmpHeight, IntegerType,
+    signed = true) {
   override protected def withNewChildInternal(c: Expression): BmpHeight =
     copy(child = c)
   override def prettyName: String = "bmp_height"
 }
 
-case class BmpBpp(child: Expression) extends HeaderField with BmpMagic {
-  protected val offset = 28; protected val size = 2
+case class BmpBpp(child: Expression) extends ReaderField(
+    "ImageHeader.bmpBpp", ImageHeader.bmpBpp, IntegerType) {
   override protected def withNewChildInternal(c: Expression): BmpBpp =
     copy(child = c)
   override def prettyName: String = "bmp_bpp"
 }
 
-/** Shared PNG magic: the 8-byte signature plus "IHDR" as the first chunk
-  * type at offset 12 (the spec REQUIRES IHDR first). */
-trait PngMagic { self: HeaderField =>
-  protected def magicOk(a: Array[Byte]): Boolean =
-    (a(0) & 0xFF) == 0x89 && a(1) == 0x50 && a(2) == 0x4E &&
-      a(3) == 0x47 && a(4) == 0x0D && a(5) == 0x0A && a(6) == 0x1A &&
-      a(7) == 0x0A && a(12) == 0x49 && a(13) == 0x48 && a(14) == 0x44 &&
-      a(15) == 0x52
-  protected def magicJava(a: String): String =
-    s"($a[0] & 0xFF) == 0x89 && $a[1] == 0x50 && $a[2] == 0x4E" +
-      s" && $a[3] == 0x47 && $a[4] == 0x0D && $a[5] == 0x0A" +
-      s" && $a[6] == 0x1A && $a[7] == 0x0A && $a[12] == 0x49" +
-      s" && $a[13] == 0x48 && $a[14] == 0x44 && $a[15] == 0x52"
-  protected def bigEndian: Boolean = true
-}
-
-case class PngWidth(child: Expression) extends HeaderField with PngMagic {
-  protected val offset = 16; protected val size = 4
+case class PngWidth(child: Expression) extends ReaderField(
+    "ImageHeader.pngWidth", ImageHeader.pngWidth, IntegerType) {
   override protected def withNewChildInternal(c: Expression): PngWidth =
     copy(child = c)
   override def prettyName: String = "png_width"
 }
 
-case class PngHeight(child: Expression) extends HeaderField with PngMagic {
-  protected val offset = 20; protected val size = 4
+case class PngHeight(child: Expression) extends ReaderField(
+    "ImageHeader.pngHeight", ImageHeader.pngHeight, IntegerType) {
   override protected def withNewChildInternal(c: Expression): PngHeight =
     copy(child = c)
   override def prettyName: String = "png_height"
 }
 
-case class PngBitDepth(child: Expression) extends HeaderField with PngMagic {
-  protected val offset = 24; protected val size = 1
+case class PngBitDepth(child: Expression) extends ReaderField(
+    "ImageHeader.pngBitDepth", ImageHeader.pngBitDepth, IntegerType) {
   override protected def withNewChildInternal(c: Expression): PngBitDepth =
     copy(child = c)
   override def prettyName: String = "png_bit_depth"
 }
 
-case class PngColorType(child: Expression) extends HeaderField with PngMagic {
-  protected val offset = 25; protected val size = 1
+case class PngColorType(child: Expression) extends ReaderField(
+    "ImageHeader.pngColorType", ImageHeader.pngColorType, IntegerType) {
   override protected def withNewChildInternal(c: Expression): PngColorType =
     copy(child = c)
   override def prettyName: String = "png_color_type"
+}
+
+case class GifWidth(child: Expression) extends ReaderField(
+    "ImageHeader.gifWidth", ImageHeader.gifWidth, IntegerType) {
+  override protected def withNewChildInternal(c: Expression): GifWidth =
+    copy(child = c)
+  override def prettyName: String = "gif_width"
+}
+
+case class GifHeight(child: Expression) extends ReaderField(
+    "ImageHeader.gifHeight", ImageHeader.gifHeight, IntegerType) {
+  override protected def withNewChildInternal(c: Expression): GifHeight =
+    copy(child = c)
+  override def prettyName: String = "gif_height"
 }
 
 /** WAV fmt-chunk fields located by a BOUNDED RIFF chunk walk (round 7,
@@ -188,7 +225,7 @@ case class PngColorType(child: Expression) extends HeaderField with PngMagic {
   * payloads (chunks are word-aligned). The walk starts at 12 and
   * examines at most 8 chunk headers (a fixed budget: metadata chunks
   * before fmt are LIST/INFO/JUNK/bext — one or two in practice; a file
-  * whose fmt hides deeper is treated as unparseable). NULL when the
+  * whose fmt hides deeper is treated as unparseable). -1 (NULL) when the
   * RIFF/WAVE magic fails, the walk runs off the payload or its budget,
   * or the located fmt chunk is too small to contain the field — never
   * throws, so a mixed/corrupt corpus degrades to NULL metadata.
@@ -197,287 +234,147 @@ case class PngColorType(child: Expression) extends HeaderField with PngMagic {
   * size like 0xFFFFFFFF must step the cursor past the payload bound and
   * terminate the walk, not wrap negative and loop or index backwards.
   * All fmt fields are little-endian; field offsets are relative to the
-  * fmt payload (audio-format @0, channels @2, sample-rate @4,
-  * byte-rate @8, bits-per-sample @14). Interpreted eval and codegen
-  * implement the identical walk (MediaHeaderSpec cross-checks them).
+  * fmt payload (audio-format u16 @0, channels u16 @2, sample-rate u32
+  * @4, byte-rate u32 @8, bits-per-sample u16 @14). A u32 past 2^31−1
+  * exceeds its INT field and reads NULL.
   */
-abstract class WavFmtField extends UnaryExpression
-    with ImplicitCastInputTypes with Serializable {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = IntegerType
+object WavFmt {
+  private final val ChunkBudget = 8
 
-  /** 0-based byte offset of the field within the fmt chunk PAYLOAD. */
-  protected def fmtOff: Int
-  /** Field byte width: 2 (u16) or 4 (u32 ≤ 2^31−1 in practice). */
-  protected def size: Int
-
-  /** Maximum chunk headers examined before giving up. */
-  protected final val chunkBudget = 8
-
-  /** Payload offset of the located fmt chunk's data, or -1. */
-  private def fmtBase(a: Array[Byte]): Int = {
-    if (a.length < 12 ||
-        a(0) != 0x52 || a(1) != 0x49 || a(2) != 0x46 || a(3) != 0x46 ||
-        a(8) != 0x57 || a(9) != 0x41 || a(10) != 0x56 || a(11) != 0x45)
-      return -1
+  /** The `size`-byte field at `off` within the fmt payload, or -1. */
+  private def field(a: Array[Byte], off: Int, size: Int): Long = {
+    if (a.length < 12 || a(0) != 'R' || a(1) != 'I' || a(2) != 'F' ||
+        a(3) != 'F' || a(8) != 'W' || a(9) != 'A' || a(10) != 'V' ||
+        a(11) != 'E') return -1L
+    val need = off + size
     var p = 12L
     var i = 0
-    while (i < chunkBudget && p + 8 <= a.length) {
+    while (i < ChunkBudget && p + 8 <= a.length) {
       val q = p.toInt
-      val sz = java.nio.ByteBuffer.wrap(a, q + 4, 4)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt() & 0xFFFFFFFFL
-      if (a(q) == 0x66 && a(q + 1) == 0x6D &&
-          a(q + 2) == 0x74 && a(q + 3) == 0x20)
-        return if (sz >= fmtOff + size && p + 8 + fmtOff + size <= a.length)
-          q + 8
-        else -1
+      val sz = Bytes.le(a, q + 4, 4)
+      if (a(q) == 'f' && a(q + 1) == 'm' && a(q + 2) == 't' && a(q + 3) == ' ')
+        return if (sz >= need && p + 8 + need <= a.length)
+          Bytes.le(a, q + 8 + off, size)
+        else -1L
       p += 8 + sz + (sz & 1L)
       i += 1
     }
-    -1
+    -1L
   }
 
-  override def nullSafeEval(bytes: Any): Any = {
-    val a = bytes.asInstanceOf[Array[Byte]]
-    val base = fmtBase(a)
-    if (base < 0) null
-    else {
-      var v = 0
-      var i = size - 1
-      while (i >= 0) { v = (v << 8) | (a(base + fmtOff + i) & 0xFF); i -= 1 }
-      v
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val base = ctx.freshName("fmtBase")
-      val p = ctx.freshName("p")
-      val i = ctx.freshName("i")
-      val sz = ctx.freshName("sz")
-      val need = fmtOff + size
-      val read = size match {
-        case 2 => "getShort() & 0xFFFF"
-        case 4 => "getInt()"
-      }
-      s"""int $base = -1;
-         |if ($a.length >= 12
-         |    && $a[0] == 0x52 && $a[1] == 0x49 && $a[2] == 0x46
-         |    && $a[3] == 0x46 && $a[8] == 0x57 && $a[9] == 0x41
-         |    && $a[10] == 0x56 && $a[11] == 0x45) {
-         |  long $p = 12;
-         |  for (int $i = 0; $i < $chunkBudget && $p + 8 <= $a.length; $i++) {
-         |    long $sz = java.nio.ByteBuffer.wrap($a, (int) $p + 4, 4)
-         |      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt() & 0xFFFFFFFFL;
-         |    if ($a[(int) $p] == 0x66 && $a[(int) $p + 1] == 0x6D
-         |        && $a[(int) $p + 2] == 0x74 && $a[(int) $p + 3] == 0x20) {
-         |      if ($sz >= $need && $p + 8 + $need <= $a.length) {
-         |        $base = (int) $p + 8;
-         |      }
-         |      break;
-         |    }
-         |    $p += 8 + $sz + ($sz & 1L);
-         |  }
-         |}
-         |if ($base < 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = java.nio.ByteBuffer.wrap($a, $base + $fmtOff, $size)
-         |    .order(java.nio.ByteOrder.LITTLE_ENDIAN).$read;
-         |}""".stripMargin
-    })
+  def audioFormat(a: Array[Byte]): Long = field(a, 0, 2)
+  def channels(a: Array[Byte]): Long = field(a, 2, 2)
+  def sampleRate(a: Array[Byte]): Long = field(a, 4, 4)
+  def byteRate(a: Array[Byte]): Long = field(a, 8, 4)
+  def bitsPerSample(a: Array[Byte]): Long = field(a, 14, 2)
 }
 
-case class WavAudioFormat(child: Expression) extends WavFmtField {
-  protected val fmtOff = 0; protected val size = 2
+case class WavAudioFormat(child: Expression) extends ReaderField(
+    "WavFmt.audioFormat", WavFmt.audioFormat, IntegerType) {
   override protected def withNewChildInternal(c: Expression): WavAudioFormat =
     copy(child = c)
   override def prettyName: String = "wav_audio_format"
 }
 
-case class WavChannels(child: Expression) extends WavFmtField {
-  protected val fmtOff = 2; protected val size = 2
+case class WavChannels(child: Expression) extends ReaderField(
+    "WavFmt.channels", WavFmt.channels, IntegerType) {
   override protected def withNewChildInternal(c: Expression): WavChannels =
     copy(child = c)
   override def prettyName: String = "wav_channels"
 }
 
-case class WavSampleRate(child: Expression) extends WavFmtField {
-  protected val fmtOff = 4; protected val size = 4
+case class WavSampleRate(child: Expression) extends ReaderField(
+    "WavFmt.sampleRate", WavFmt.sampleRate, IntegerType) {
   override protected def withNewChildInternal(c: Expression): WavSampleRate =
     copy(child = c)
   override def prettyName: String = "wav_sample_rate"
 }
 
-case class WavByteRate(child: Expression) extends WavFmtField {
-  protected val fmtOff = 8; protected val size = 4
+case class WavByteRate(child: Expression) extends ReaderField(
+    "WavFmt.byteRate", WavFmt.byteRate, IntegerType) {
   override protected def withNewChildInternal(c: Expression): WavByteRate =
     copy(child = c)
   override def prettyName: String = "wav_byte_rate"
 }
 
-case class WavBitsPerSample(child: Expression) extends WavFmtField {
-  protected val fmtOff = 14; protected val size = 2
+case class WavBitsPerSample(child: Expression) extends ReaderField(
+    "WavFmt.bitsPerSample", WavFmt.bitsPerSample, IntegerType) {
   override protected def withNewChildInternal(c: Expression): WavBitsPerSample =
     copy(child = c)
   override def prettyName: String = "wav_bits_per_sample"
 }
 
-/** Shared GIF magic: "GIF87a" or "GIF89a" at offset 0; the logical
-  * screen descriptor follows immediately (width u16 LE @6, height u16
-  * LE @8) — fixed offsets per the public GIF specification, so the
-  * simple [[HeaderField]] path applies (no walking needed). */
-trait GifMagic { self: HeaderField =>
-  protected def magicOk(a: Array[Byte]): Boolean =
-    a(0) == 0x47 && a(1) == 0x49 && a(2) == 0x46 && a(3) == 0x38 &&
-      (a(4) == 0x37 || a(4) == 0x39) && a(5) == 0x61
-  protected def magicJava(a: String): String =
-    s"$a[0] == 0x47 && $a[1] == 0x49 && $a[2] == 0x46 && $a[3] == 0x38" +
-      s" && ($a[4] == 0x37 || $a[4] == 0x39) && $a[5] == 0x61"
-  protected def bigEndian: Boolean = false
-}
-
-case class GifWidth(child: Expression) extends HeaderField with GifMagic {
-  protected val offset = 6; protected val size = 2
-  override protected def withNewChildInternal(c: Expression): GifWidth =
-    copy(child = c)
-  override def prettyName: String = "gif_width"
-}
-
-case class GifHeight(child: Expression) extends HeaderField with GifMagic {
-  protected val offset = 8; protected val size = 2
-  override protected def withNewChildInternal(c: Expression): GifHeight =
-    copy(child = c)
-  override def prettyName: String = "gif_height"
-}
-
 /** JPEG frame-header (SOF) fields located by a bounded MARKER-SEGMENT
-  * walk — the big-endian twin of [[WavFmtField]]'s RIFF walk, for the
-  * web's dominant image container.
+  * walk — the big-endian twin of [[WavFmt]]'s RIFF walk, for the web's
+  * dominant image container.
   *
   * Layout per the public JPEG/JFIF specification: SOI (FF D8) then a
   * sequence of marker segments — FF, marker id, u16 BE segment length
   * (which INCLUDES the two length bytes) — until the scan data. The
   * frame dimensions live in the SOF segment: FF C0 (baseline), FF C1
   * (extended sequential) or FF C2 (progressive), payload = u8 sample
-  * precision, u16 BE height, u16 BE width, u8 component count. Real
-  * files put APP0/JFIF, APP1/Exif, COM and quantization tables before
-  * SOF, so a fixed-offset read cannot work — the walk skips at most 16
-  * segments. NULL when: the SOI magic fails, a segment doesn't start
-  * with FF (corrupt stream), a declared length is < 2 (would loop),
-  * SOS/EOI arrives before any SOF (scan data reached), the walk runs
-  * off the payload or its budget, or the SOF segment is too short for
-  * the field. Interpreted eval and codegen implement the identical
-  * walk. */
-abstract class JpegSofField extends UnaryExpression
-    with ImplicitCastInputTypes with Serializable {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = IntegerType
+  * precision @0, u16 BE height @1, u16 BE width @3, u8 component count
+  * @5. Real files put APP0/JFIF, APP1/Exif, COM and quantization tables
+  * before SOF, so a fixed-offset read cannot work — the walk skips at
+  * most 16 segments. -1 (NULL) when: the SOI magic fails, a segment
+  * doesn't start with FF (corrupt stream), a declared length is < 2
+  * (would loop), SOS/EOI arrives before any SOF (scan data reached), the
+  * walk runs off the payload or its budget, or the SOF segment is too
+  * short for the field. */
+object JpegSof {
+  private final val SegBudget = 16
 
-  /** 0-based byte offset within the SOF payload (after the 2 length
-    * bytes): precision @0, height @1, width @3, components @5. */
-  protected def fieldOff: Int
-  protected def size: Int
-
-  protected final val segBudget = 16
-
-  /** Payload offset of the located SOF segment's data, or -1. */
-  private def sofBase(a: Array[Byte]): Int = {
+  /** The `size`-byte field at `off` within the SOF payload, or -1. */
+  private def field(a: Array[Byte], off: Int, size: Int): Long = {
     if (a.length < 4 || (a(0) & 0xFF) != 0xFF || (a(1) & 0xFF) != 0xD8)
-      return -1
+      return -1L
+    val need = off + size
     var p = 2
     var i = 0
-    while (i < segBudget && p + 4 <= a.length) {
-      if ((a(p) & 0xFF) != 0xFF) return -1
+    while (i < SegBudget && p + 4 <= a.length) {
+      if ((a(p) & 0xFF) != 0xFF) return -1L
       val m = a(p + 1) & 0xFF
-      val len = ((a(p + 2) & 0xFF) << 8) | (a(p + 3) & 0xFF)
+      val len = Bytes.be(a, p + 2, 2).toInt
       if (m == 0xC0 || m == 0xC1 || m == 0xC2)
-        return if (len >= 2 + fieldOff + size &&
-            p + 4 + fieldOff + size <= a.length) p + 4
-        else -1
-      if (m == 0xDA || m == 0xD9 || len < 2) return -1
+        return if (len >= 2 + need && p + 4 + need <= a.length)
+          Bytes.be(a, p + 4 + off, size)
+        else -1L
+      if (m == 0xDA || m == 0xD9 || len < 2) return -1L
       p += 2 + len
       i += 1
     }
-    -1
+    -1L
   }
 
-  override def nullSafeEval(bytes: Any): Any = {
-    val a = bytes.asInstanceOf[Array[Byte]]
-    val base = sofBase(a)
-    if (base < 0) null
-    else {
-      var v = 0
-      var i = 0
-      while (i < size) { v = (v << 8) | (a(base + fieldOff + i) & 0xFF); i += 1 }
-      v
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val base = ctx.freshName("sofBase")
-      val p = ctx.freshName("p")
-      val i = ctx.freshName("i")
-      val m = ctx.freshName("m")
-      val len = ctx.freshName("len")
-      val need = fieldOff + size
-      val read = size match {
-        case 1 => s"$a[$base + $fieldOff] & 0xFF"
-        case 2 => s"((($a[$base + $fieldOff] & 0xFF) << 8)" +
-          s" | ($a[$base + $fieldOff + 1] & 0xFF))"
-      }
-      s"""int $base = -1;
-         |if ($a.length >= 4 && ($a[0] & 0xFF) == 0xFF
-         |    && ($a[1] & 0xFF) == 0xD8) {
-         |  int $p = 2;
-         |  for (int $i = 0; $i < $segBudget && $p + 4 <= $a.length; $i++) {
-         |    if (($a[$p] & 0xFF) != 0xFF) break;
-         |    int $m = $a[$p + 1] & 0xFF;
-         |    int $len = (($a[$p + 2] & 0xFF) << 8) | ($a[$p + 3] & 0xFF);
-         |    if ($m == 0xC0 || $m == 0xC1 || $m == 0xC2) {
-         |      if ($len >= 2 + $need && $p + 4 + $need <= $a.length) {
-         |        $base = $p + 4;
-         |      }
-         |      break;
-         |    }
-         |    if ($m == 0xDA || $m == 0xD9 || $len < 2) break;
-         |    $p += 2 + $len;
-         |  }
-         |}
-         |if ($base < 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $read;
-         |}""".stripMargin
-    })
+  def precision(a: Array[Byte]): Long = field(a, 0, 1)
+  def height(a: Array[Byte]): Long = field(a, 1, 2)
+  def width(a: Array[Byte]): Long = field(a, 3, 2)
+  def components(a: Array[Byte]): Long = field(a, 5, 1)
 }
 
-case class JpegPrecision(child: Expression) extends JpegSofField {
-  protected val fieldOff = 0; protected val size = 1
+case class JpegPrecision(child: Expression) extends ReaderField(
+    "JpegSof.precision", JpegSof.precision, IntegerType) {
   override protected def withNewChildInternal(c: Expression): JpegPrecision =
     copy(child = c)
   override def prettyName: String = "jpeg_precision"
 }
 
-case class JpegHeight(child: Expression) extends JpegSofField {
-  protected val fieldOff = 1; protected val size = 2
+case class JpegHeight(child: Expression) extends ReaderField(
+    "JpegSof.height", JpegSof.height, IntegerType) {
   override protected def withNewChildInternal(c: Expression): JpegHeight =
     copy(child = c)
   override def prettyName: String = "jpeg_height"
 }
 
-case class JpegWidth(child: Expression) extends JpegSofField {
-  protected val fieldOff = 3; protected val size = 2
+case class JpegWidth(child: Expression) extends ReaderField(
+    "JpegSof.width", JpegSof.width, IntegerType) {
   override protected def withNewChildInternal(c: Expression): JpegWidth =
     copy(child = c)
   override def prettyName: String = "jpeg_width"
 }
 
-case class JpegComponents(child: Expression) extends JpegSofField {
-  protected val fieldOff = 5; protected val size = 1
+case class JpegComponents(child: Expression) extends ReaderField(
+    "JpegSof.components", JpegSof.components, IntegerType) {
   override protected def withNewChildInternal(c: Expression): JpegComponents =
     copy(child = c)
   override def prettyName: String = "jpeg_components"
@@ -523,10 +420,6 @@ object Mp4Mvhd {
     a(p) == c.charAt(0).toByte && a(p + 1) == c.charAt(1).toByte &&
       a(p + 2) == c.charAt(2).toByte && a(p + 3) == c.charAt(3).toByte
 
-  private def u32(a: Array[Byte], p: Int): Long =
-    java.nio.ByteBuffer.wrap(a, p, 4)
-      .order(java.nio.ByteOrder.BIG_ENDIAN).getInt() & 0xFFFFFFFFL
-
   /** `(mvhd box start << 8) | version`, or -1 when unparseable under
     * the contract above. */
   def locate(a: Array[Byte]): Long = {
@@ -535,7 +428,7 @@ object Mp4Mvhd {
     var i = 0
     while (i < TopBudget && p + 8 <= a.length) {
       val q = p.toInt
-      val sz = u32(a, q)
+      val sz = Bytes.be(a, q, 4)
       if (is4cc(a, q + 4, "moov")) {
         if (sz < 8) return -1L
         val moovEnd = math.min(q + sz, a.length.toLong)
@@ -543,7 +436,7 @@ object Mp4Mvhd {
         var j = 0
         while (j < ChildBudget && c + 8 <= moovEnd) {
           val m = c.toInt
-          val csz = u32(a, m)
+          val csz = Bytes.be(a, m, 4)
           if (is4cc(a, m + 4, "mvhd")) {
             if (m + 9 > moovEnd) return -1L
             val ver = a(m + 8) & 0xFF
@@ -565,16 +458,16 @@ object Mp4Mvhd {
     -1L
   }
 
-  /** Version-0 u32 field at `fieldOff` from the mvhd box start; -1 =
-    * NULL (unparseable, version != 0, or value exceeds IntegerType —
-    * a spec-legal u32 >= 2^31 must NULL, not go negative). */
-  def v0Field(a: Array[Byte], fieldOff: Int): Int = {
+  /** Version-0 u32 field at `fieldOff` from the mvhd box start; -1 when
+    * unparseable or version != 0. A spec-legal u32 >= 2^31 exceeds the
+    * INT fields that read it and NULLs there. */
+  private def v0(a: Array[Byte], fieldOff: Int): Long = {
     val loc = locate(a)
-    if (loc < 0 || (loc & 0xFF) != 0) return -1
-    val v = java.nio.ByteBuffer.wrap(a, (loc >>> 8).toInt + fieldOff, 4)
-      .order(java.nio.ByteOrder.BIG_ENDIAN).getInt()
-    if (v < 0) -1 else v
+    if (loc < 0 || (loc & 0xFF) != 0) -1L
+    else Bytes.be(a, (loc >>> 8).toInt + fieldOff, 4)
   }
+  def timescale(a: Array[Byte]): Long = v0(a, 20)
+  def duration(a: Array[Byte]): Long = v0(a, 24)
 
   /** Timescale as BIGINT for either mvhd version (u32 in both; the
     * offset moves). -1 = NULL. */
@@ -582,63 +475,36 @@ object Mp4Mvhd {
     val loc = locate(a)
     if (loc < 0) return -1L
     val base = (loc >>> 8).toInt
-    if ((loc & 0xFF) == 0L) u32(a, base + 20) else u32(a, base + 28)
+    Bytes.be(a, if ((loc & 0xFF) == 0L) base + 20 else base + 28, 4)
   }
 
   /** Duration as BIGINT: u32 for version 0, u64 for version 1 (NULL
     * when the u64 exceeds LongType — the same exceeds-the-type rule as
-    * [[v0Field]], one type wider). -1 = NULL. */
+    * the version-0 INT fields, one type wider). -1 = NULL. */
   def dur64(a: Array[Byte]): Long = {
     val loc = locate(a)
     if (loc < 0) return -1L
     val base = (loc >>> 8).toInt
-    if ((loc & 0xFF) == 0L) u32(a, base + 24)
-    else java.nio.ByteBuffer.wrap(a, base + 32, 8)
-      .order(java.nio.ByteOrder.BIG_ENDIAN).getLong() match {
+    if ((loc & 0xFF) == 0L) Bytes.be(a, base + 24, 4)
+    else Bytes.be(a, base + 32, 8) match {
       case d if d < 0 => -1L
       case d => d
     }
   }
 }
 
-/** Version-0 mvhd u32 fields (IntegerType — the common-case fast shape;
-  * [[Mp4MvhdField64]] is the version-spanning BIGINT form). Locator
-  * contract and NULL rules: [[Mp4Mvhd]]. */
-abstract class Mp4MvhdField extends UnaryExpression
-    with ImplicitCastInputTypes with Serializable {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = IntegerType
-
-  /** 0-based byte offset of the u32 field from the mvhd BOX start. */
-  protected def fieldOff: Int
-
-  override def nullSafeEval(bytes: Any): Any = {
-    val v = Mp4Mvhd.v0Field(bytes.asInstanceOf[Array[Byte]], fieldOff)
-    if (v < 0) null else v
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val v = ctx.freshName("mvhdV")
-      s"""int $v = graft.functions.Mp4Mvhd.v0Field($a, $fieldOff);
-         |if ($v < 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $v;
-         |}""".stripMargin
-    })
-}
-
-case class Mp4Timescale(child: Expression) extends Mp4MvhdField {
-  protected val fieldOff = 20
+/** Version-0 mvhd u32 fields as INT (the common-case fast shape;
+  * [[Mp4Timescale64]] / [[Mp4Duration64]] are the version-spanning
+  * BIGINT forms). Locator contract and NULL rules: [[Mp4Mvhd]]. */
+case class Mp4Timescale(child: Expression) extends ReaderField(
+    "Mp4Mvhd.timescale", Mp4Mvhd.timescale, IntegerType) {
   override protected def withNewChildInternal(c: Expression): Mp4Timescale =
     copy(child = c)
   override def prettyName: String = "mp4_timescale"
 }
 
-case class Mp4Duration(child: Expression) extends Mp4MvhdField {
-  protected val fieldOff = 24
+case class Mp4Duration(child: Expression) extends ReaderField(
+    "Mp4Mvhd.duration", Mp4Mvhd.duration, IntegerType) {
   override protected def withNewChildInternal(c: Expression): Mp4Duration =
     copy(child = c)
   override def prettyName: String = "mp4_duration"
@@ -646,45 +512,16 @@ case class Mp4Duration(child: Expression) extends Mp4MvhdField {
 
 /** Version-spanning mvhd fields as BIGINT: version 0's u32s read
   * unsigned, version 1's 64-bit times read at their shifted offsets —
-  * the long-video path the IntegerType pair NULLs by contract. */
-abstract class Mp4MvhdField64 extends UnaryExpression
-    with ImplicitCastInputTypes with Serializable {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = LongType
-
-  /** The sentinel-returning static reader (Mp4Mvhd.ts64 / dur64). */
-  protected def readerName: String
-  protected def read(a: Array[Byte]): Long
-
-  override def nullSafeEval(bytes: Any): Any = {
-    val v = read(bytes.asInstanceOf[Array[Byte]])
-    if (v < 0) null else v
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val v = ctx.freshName("mvhdV")
-      s"""long $v = graft.functions.Mp4Mvhd.$readerName($a);
-         |if ($v < 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $v;
-         |}""".stripMargin
-    })
-}
-
-case class Mp4Timescale64(child: Expression) extends Mp4MvhdField64 {
-  protected val readerName = "ts64"
-  protected def read(a: Array[Byte]): Long = Mp4Mvhd.ts64(a)
+  * the long-video path the INT pair NULLs by contract. */
+case class Mp4Timescale64(child: Expression) extends ReaderField(
+    "Mp4Mvhd.ts64", Mp4Mvhd.ts64, LongType) {
   override protected def withNewChildInternal(c: Expression): Mp4Timescale64 =
     copy(child = c)
   override def prettyName: String = "mp4_timescale64"
 }
 
-case class Mp4Duration64(child: Expression) extends Mp4MvhdField64 {
-  protected val readerName = "dur64"
-  protected def read(a: Array[Byte]): Long = Mp4Mvhd.dur64(a)
+case class Mp4Duration64(child: Expression) extends ReaderField(
+    "Mp4Mvhd.dur64", Mp4Mvhd.dur64, LongType) {
   override protected def withNewChildInternal(c: Expression): Mp4Duration64 =
     copy(child = c)
   override def prettyName: String = "mp4_duration64"
@@ -729,17 +566,17 @@ object Mp3Frame {
   }
 
   /** Bitrate in kbps; -1 = NULL (no frame, free-format, or bad index). */
-  def bitrateKbps(a: Array[Byte]): Int = {
+  def bitrateKbps(a: Array[Byte]): Long = {
     val p = frameBase(a)
-    if (p < 0) -1 else BitrateV1L3((a(p + 2) >> 4) & 0xF)
+    if (p < 0) -1L else BitrateV1L3((a(p + 2) >> 4) & 0xF).toLong
   }
 
   /** Sample rate in Hz; -1 = NULL (no frame or reserved index). */
-  def sampleRate(a: Array[Byte]): Int = {
+  def sampleRate(a: Array[Byte]): Long = {
     val p = frameBase(a)
-    if (p < 0) return -1
+    if (p < 0) return -1L
     val i = (a(p + 2) >> 2) & 0x3
-    if (i == 3) -1 else SampleRateV1(i)
+    if (i == 3) -1L else SampleRateV1(i).toLong
   }
 }
 
@@ -784,107 +621,43 @@ object FlacStreamInfo {
   }
 }
 
-/** Int-valued expression over a static reader with a -1 NULL sentinel
-  * (every legal field value is non-negative) — the shared shape of the
-  * MP3 fields. */
-abstract class Mp3FrameField extends UnaryExpression
-    with ImplicitCastInputTypes with Serializable {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = IntegerType
-
-  /** Static reader name on graft.functions.Mp3Frame. */
-  protected def readerName: String
-  protected def read(a: Array[Byte]): Int
-
-  override def nullSafeEval(bytes: Any): Any = {
-    val v = read(bytes.asInstanceOf[Array[Byte]])
-    if (v < 0) null else v
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val v = ctx.freshName("mp3V")
-      s"""int $v = graft.functions.Mp3Frame.$readerName($a);
-         |if ($v < 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $v;
-         |}""".stripMargin
-    })
-}
-
-case class Mp3BitrateKbps(child: Expression) extends Mp3FrameField {
-  protected val readerName = "bitrateKbps"
-  protected def read(a: Array[Byte]): Int = Mp3Frame.bitrateKbps(a)
+case class Mp3BitrateKbps(child: Expression) extends ReaderField(
+    "Mp3Frame.bitrateKbps", Mp3Frame.bitrateKbps, IntegerType) {
   override protected def withNewChildInternal(c: Expression): Mp3BitrateKbps =
     copy(child = c)
   override def prettyName: String = "mp3_bitrate_kbps"
 }
 
-case class Mp3SampleRate(child: Expression) extends Mp3FrameField {
-  protected val readerName = "sampleRate"
-  protected def read(a: Array[Byte]): Int = Mp3Frame.sampleRate(a)
+case class Mp3SampleRate(child: Expression) extends ReaderField(
+    "Mp3Frame.sampleRate", Mp3Frame.sampleRate, IntegerType) {
   override protected def withNewChildInternal(c: Expression): Mp3SampleRate =
     copy(child = c)
   override def prettyName: String = "mp3_sample_rate"
 }
 
-/** Long-valued expression over a static FlacStreamInfo reader with the
-  * -1 NULL sentinel. */
-abstract class FlacField extends UnaryExpression
-    with ImplicitCastInputTypes with Serializable {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = LongType
-
-  protected def readerName: String
-  protected def read(a: Array[Byte]): Long
-
-  override def nullSafeEval(bytes: Any): Any = {
-    val v = read(bytes.asInstanceOf[Array[Byte]])
-    if (v < 0) null else v
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val v = ctx.freshName("flacV")
-      s"""long $v = graft.functions.FlacStreamInfo.$readerName($a);
-         |if ($v < 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $v;
-         |}""".stripMargin
-    })
-}
-
-case class FlacSampleRate(child: Expression) extends FlacField {
-  protected val readerName = "sampleRate"
-  protected def read(a: Array[Byte]): Long = FlacStreamInfo.sampleRate(a)
+case class FlacSampleRate(child: Expression) extends ReaderField(
+    "FlacStreamInfo.sampleRate", FlacStreamInfo.sampleRate, LongType) {
   override protected def withNewChildInternal(c: Expression): FlacSampleRate =
     copy(child = c)
   override def prettyName: String = "flac_sample_rate"
 }
 
-case class FlacChannels(child: Expression) extends FlacField {
-  protected val readerName = "channels"
-  protected def read(a: Array[Byte]): Long = FlacStreamInfo.channels(a)
+case class FlacChannels(child: Expression) extends ReaderField(
+    "FlacStreamInfo.channels", FlacStreamInfo.channels, LongType) {
   override protected def withNewChildInternal(c: Expression): FlacChannels =
     copy(child = c)
   override def prettyName: String = "flac_channels"
 }
 
-case class FlacBitsPerSample(child: Expression) extends FlacField {
-  protected val readerName = "bitsPerSample"
-  protected def read(a: Array[Byte]): Long = FlacStreamInfo.bitsPerSample(a)
+case class FlacBitsPerSample(child: Expression) extends ReaderField(
+    "FlacStreamInfo.bitsPerSample", FlacStreamInfo.bitsPerSample, LongType) {
   override protected def withNewChildInternal(c: Expression): FlacBitsPerSample =
     copy(child = c)
   override def prettyName: String = "flac_bits_per_sample"
 }
 
-case class FlacTotalSamples(child: Expression) extends FlacField {
-  protected val readerName = "totalSamples"
-  protected def read(a: Array[Byte]): Long = FlacStreamInfo.totalSamples(a)
+case class FlacTotalSamples(child: Expression) extends ReaderField(
+    "FlacStreamInfo.totalSamples", FlacStreamInfo.totalSamples, LongType) {
   override protected def withNewChildInternal(c: Expression): FlacTotalSamples =
     copy(child = c)
   override def prettyName: String = "flac_total_samples"
@@ -950,44 +723,15 @@ object WebpHeader {
   }
 }
 
-/** Int-valued WebP fields over the static reader (-1 NULL sentinel). */
-abstract class WebpField extends UnaryExpression
-    with ImplicitCastInputTypes with Serializable {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = IntegerType
-
-  protected def readerName: String
-  protected def read(a: Array[Byte]): Long
-
-  override def nullSafeEval(bytes: Any): Any = {
-    val v = read(bytes.asInstanceOf[Array[Byte]])
-    if (v < 0) null else v.toInt
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val v = ctx.freshName("webpV")
-      s"""long $v = graft.functions.WebpHeader.$readerName($a);
-         |if ($v < 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (int) $v;
-         |}""".stripMargin
-    })
-}
-
-case class WebpWidth(child: Expression) extends WebpField {
-  protected val readerName = "width"
-  protected def read(a: Array[Byte]): Long = WebpHeader.width(a)
+case class WebpWidth(child: Expression) extends ReaderField(
+    "WebpHeader.width", WebpHeader.width, IntegerType) {
   override protected def withNewChildInternal(c: Expression): WebpWidth =
     copy(child = c)
   override def prettyName: String = "webp_width"
 }
 
-case class WebpHeight(child: Expression) extends WebpField {
-  protected val readerName = "height"
-  protected def read(a: Array[Byte]): Long = WebpHeader.height(a)
+case class WebpHeight(child: Expression) extends ReaderField(
+    "WebpHeader.height", WebpHeader.height, IntegerType) {
   override protected def withNewChildInternal(c: Expression): WebpHeight =
     copy(child = c)
   override def prettyName: String = "webp_height"
@@ -1013,14 +757,9 @@ object TiffHeader {
       if (a(0) == 'I' && a(1) == 'I') true
       else if (a(0) == 'M' && a(1) == 'M') false
       else return -1L
+    def u32(p: Int): Long = if (le) Bytes.le(a, p, 4) else Bytes.be(a, p, 4)
     def u16(p: Int): Int =
-      if (le) (a(p) & 0xFF) | (a(p + 1) & 0xFF) << 8
-      else (a(p) & 0xFF) << 8 | (a(p + 1) & 0xFF)
-    def u32(p: Int): Long =
-      if (le) (a(p) & 0xFFL) | (a(p + 1) & 0xFFL) << 8 |
-        (a(p + 2) & 0xFFL) << 16 | (a(p + 3) & 0xFFL) << 24
-      else (a(p) & 0xFFL) << 24 | (a(p + 1) & 0xFFL) << 16 |
-        (a(p + 2) & 0xFFL) << 8 | (a(p + 3) & 0xFFL)
+      (if (le) Bytes.le(a, p, 2) else Bytes.be(a, p, 2)).toInt
     if (u16(2) != 42) return -1L
     val ifd = u32(4)
     if (ifd < 8 || ifd + 2 > a.length) return -1L
@@ -1045,49 +784,18 @@ object TiffHeader {
   def height(a: Array[Byte]): Long = field(a, 257)
 }
 
-/** Int-valued TIFF fields over the static reader (-1 NULL sentinel).
-  * A LONG-typed IFD value is spec-legal up to 2^32-1, past IntegerType:
-  * such values NULL (the exceeds-the-type rule the mvhd fields follow)
-  * rather than wrapping negative through a raw int cast (round-8
-  * review-pass catch — the same class as the r7 mp4_duration
-  * advisory). */
-abstract class TiffField extends UnaryExpression
-    with ImplicitCastInputTypes with Serializable {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = IntegerType
-
-  protected def readerName: String
-  protected def read(a: Array[Byte]): Long
-
-  override def nullSafeEval(bytes: Any): Any = {
-    val v = read(bytes.asInstanceOf[Array[Byte]])
-    if (v < 0 || v > Int.MaxValue) null else v.toInt
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val v = ctx.freshName("tiffV")
-      s"""long $v = graft.functions.TiffHeader.$readerName($a);
-         |if ($v < 0 || $v > 2147483647L) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = (int) $v;
-         |}""".stripMargin
-    })
-}
-
-case class TiffWidth(child: Expression) extends TiffField {
-  protected val readerName = "width"
-  protected def read(a: Array[Byte]): Long = TiffHeader.width(a)
+/** TIFF dimensions as INT. A LONG-typed IFD value is spec-legal up to
+  * 2^32−1, past IntegerType: such values NULL by the exceeds-the-type
+  * rule rather than wrapping negative. */
+case class TiffWidth(child: Expression) extends ReaderField(
+    "TiffHeader.width", TiffHeader.width, IntegerType) {
   override protected def withNewChildInternal(c: Expression): TiffWidth =
     copy(child = c)
   override def prettyName: String = "tiff_width"
 }
 
-case class TiffHeight(child: Expression) extends TiffField {
-  protected val readerName = "height"
-  protected def read(a: Array[Byte]): Long = TiffHeader.height(a)
+case class TiffHeight(child: Expression) extends ReaderField(
+    "TiffHeader.height", TiffHeader.height, IntegerType) {
   override protected def withNewChildInternal(c: Expression): TiffHeight =
     copy(child = c)
   override def prettyName: String = "tiff_height"
@@ -1113,7 +821,7 @@ object GzipHeader {
       (a(7) & 0xFFL) << 24
 
   /** OS byte (255 = unknown); -1 = NULL. */
-  def os(a: Array[Byte]): Int = if (!ok(a)) -1 else a(9) & 0xFF
+  def os(a: Array[Byte]): Long = if (!ok(a)) -1L else a(9) & 0xFFL
 
   /** Original file name, or null (no FNAME flag, truncation, or an
     * unterminated/overlong name). */
@@ -1147,12 +855,6 @@ object ZstdFrame {
     a.length >= 5 && (a(0) & 0xFF) == 0x28 && (a(1) & 0xFF) == 0xB5 &&
       (a(2) & 0xFF) == 0x2F && (a(3) & 0xFF) == 0xFD
 
-  private def uLE(a: Array[Byte], p: Int, n: Int): Long = {
-    var v = 0L; var i = 0
-    while (i < n) { v |= (a(p + i) & 0xFFL) << (8 * i); i += 1 }
-    v
-  }
-
   /** Declared decompressed size; -1 = NULL (no magic, no declared
     * size, truncation, or a u64 size exceeding LongType). */
   def contentSize(a: Array[Byte]): Long = {
@@ -1171,7 +873,7 @@ object ZstdFrame {
       case 0 => 0; case 1 => 1; case 2 => 2; case _ => 4
     })
     if (p + fcsLen > a.length) return -1L
-    val v = uLE(a, p, fcsLen)
+    val v = Bytes.le(a, p, fcsLen)
     val sz = if (fcsLen == 2) v + 256 else v
     if (sz < 0) -1L else sz
   }
@@ -1186,64 +888,29 @@ object ZstdFrame {
   }
 }
 
-/** Long-valued expression over a static reader named by a fully
-  * qualified `Object.method` path (-1 NULL sentinel) — the common
-  * shape of the gzip/zstd numeric fields. */
-abstract class StaticLongField extends UnaryExpression
-    with ImplicitCastInputTypes with Serializable {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-  override def dataType: DataType = LongType
-
-  /** Fully qualified static call target, e.g.
-    * "graft.functions.GzipHeader.mtime". */
-  protected def staticCall: String
-  protected def read(a: Array[Byte]): Long
-
-  override def nullSafeEval(bytes: Any): Any = {
-    val v = read(bytes.asInstanceOf[Array[Byte]])
-    if (v < 0) null else v
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val v = ctx.freshName("slf")
-      s"""long $v = $staticCall($a);
-         |if ($v < 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $v;
-         |}""".stripMargin
-    })
-}
-
-case class GzipMtime(child: Expression) extends StaticLongField {
-  protected val staticCall = "graft.functions.GzipHeader.mtime"
-  protected def read(a: Array[Byte]): Long = GzipHeader.mtime(a)
+case class GzipMtime(child: Expression) extends ReaderField(
+    "GzipHeader.mtime", GzipHeader.mtime, LongType) {
   override protected def withNewChildInternal(c: Expression): GzipMtime =
     copy(child = c)
   override def prettyName: String = "gzip_mtime"
 }
 
-case class GzipOs(child: Expression) extends StaticLongField {
-  protected val staticCall = "graft.functions.GzipHeader.os"
-  protected def read(a: Array[Byte]): Long = GzipHeader.os(a).toLong
+case class GzipOs(child: Expression) extends ReaderField(
+    "GzipHeader.os", GzipHeader.os, LongType) {
   override protected def withNewChildInternal(c: Expression): GzipOs =
     copy(child = c)
   override def prettyName: String = "gzip_os"
 }
 
-case class ZstdContentSize(child: Expression) extends StaticLongField {
-  protected val staticCall = "graft.functions.ZstdFrame.contentSize"
-  protected def read(a: Array[Byte]): Long = ZstdFrame.contentSize(a)
+case class ZstdContentSize(child: Expression) extends ReaderField(
+    "ZstdFrame.contentSize", ZstdFrame.contentSize, LongType) {
   override protected def withNewChildInternal(c: Expression): ZstdContentSize =
     copy(child = c)
   override def prettyName: String = "zstd_content_size"
 }
 
-case class ZstdWindowSize(child: Expression) extends StaticLongField {
-  protected val staticCall = "graft.functions.ZstdFrame.windowSize"
-  protected def read(a: Array[Byte]): Long = ZstdFrame.windowSize(a)
+case class ZstdWindowSize(child: Expression) extends ReaderField(
+    "ZstdFrame.windowSize", ZstdFrame.windowSize, LongType) {
   override protected def withNewChildInternal(c: Expression): ZstdWindowSize =
     copy(child = c)
   override def prettyName: String = "zstd_window_size"
@@ -1320,25 +987,22 @@ object OpusHead {
   }
 }
 
-case class OpusChannels(child: Expression) extends StaticLongField {
-  protected val staticCall = "graft.functions.OpusHead.channels"
-  protected def read(a: Array[Byte]): Long = OpusHead.channels(a)
+case class OpusChannels(child: Expression) extends ReaderField(
+    "OpusHead.channels", OpusHead.channels, LongType) {
   override protected def withNewChildInternal(c: Expression): OpusChannels =
     copy(child = c)
   override def prettyName: String = "opus_channels"
 }
 
-case class OpusPreSkip(child: Expression) extends StaticLongField {
-  protected val staticCall = "graft.functions.OpusHead.preSkip"
-  protected def read(a: Array[Byte]): Long = OpusHead.preSkip(a)
+case class OpusPreSkip(child: Expression) extends ReaderField(
+    "OpusHead.preSkip", OpusHead.preSkip, LongType) {
   override protected def withNewChildInternal(c: Expression): OpusPreSkip =
     copy(child = c)
   override def prettyName: String = "opus_pre_skip"
 }
 
-case class OpusInputSampleRate(child: Expression) extends StaticLongField {
-  protected val staticCall = "graft.functions.OpusHead.inputSampleRate"
-  protected def read(a: Array[Byte]): Long = OpusHead.inputSampleRate(a)
+case class OpusInputSampleRate(child: Expression) extends ReaderField(
+    "OpusHead.inputSampleRate", OpusHead.inputSampleRate, LongType) {
   override protected def withNewChildInternal(c: Expression)
       : OpusInputSampleRate = copy(child = c)
   override def prettyName: String = "opus_input_sample_rate"
@@ -1360,23 +1024,15 @@ object TfRecord {
     val v = c.getValue
     (((v >>> 15) | (v << 17)) + 0xa282ead8L) & 0xFFFFFFFFL
   }
-  private def u32(a: Array[Byte], p: Int): Long =
-    (a(p) & 0xFFL) | (a(p + 1) & 0xFFL) << 8 | (a(p + 2) & 0xFFL) << 16 |
-      (a(p + 3) & 0xFFL) << 24
-  private def u64(a: Array[Byte], p: Int): Long = {
-    var v = 0L; var i = 0
-    while (i < 8) { v |= (a(p + i) & 0xFFL) << (8 * i); i += 1 }
-    v
-  }
 
   /** Declared payload length, gated on the length-CRC verifying;
     * -1 = NULL (short frame, CRC mismatch, or a length whose u64
     * exceeds LongType). */
   def lengthChecked(a: Array[Byte]): Long = {
     if (a.length < 12) return -1L
-    val len = u64(a, 0)
+    val len = Bytes.le(a, 0, 8)
     if (len < 0) return -1L
-    if (u32(a, 8) != maskedCrc(a, 0, 8)) return -1L
+    if (Bytes.le(a, 8, 4) != maskedCrc(a, 0, 8)) return -1L
     len
   }
 
@@ -1400,21 +1056,19 @@ object TfRecord {
     if (len < 0) return -1L
     if (len > a.length - 16L) return 0L
     val n = len.toInt
-    if (u32(a, 12 + n) == maskedCrc(a, 12, n)) 1L else 0L
+    if (Bytes.le(a, 12 + n, 4) == maskedCrc(a, 12, n)) 1L else 0L
   }
 }
 
-case class TfRecordLength(child: Expression) extends StaticLongField {
-  protected val staticCall = "graft.functions.TfRecord.lengthChecked"
-  protected def read(a: Array[Byte]): Long = TfRecord.lengthChecked(a)
+case class TfRecordLength(child: Expression) extends ReaderField(
+    "TfRecord.lengthChecked", TfRecord.lengthChecked, LongType) {
   override protected def withNewChildInternal(c: Expression): TfRecordLength =
     copy(child = c)
   override def prettyName: String = "tfrecord_length"
 }
 
-case class TfRecordPayloadOk(child: Expression) extends StaticLongField {
-  protected val staticCall = "graft.functions.TfRecord.payloadOk"
-  protected def read(a: Array[Byte]): Long = TfRecord.payloadOk(a)
+case class TfRecordPayloadOk(child: Expression) extends ReaderField(
+    "TfRecord.payloadOk", TfRecord.payloadOk, LongType) {
   override protected def withNewChildInternal(c: Expression)
       : TfRecordPayloadOk = copy(child = c)
   override def prettyName: String = "tfrecord_payload_ok"

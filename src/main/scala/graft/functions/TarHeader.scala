@@ -126,69 +126,91 @@ object TarWalk {
   }
 }
 
-abstract class TarField extends UnaryExpression
-    with ImplicitCastInputTypes with Serializable {
+/** One field of an archive walk: [[TarWalk.walk]] and [[ZipWalk.walk]]
+  * both return `[members, payloadBytes, firstNameOff, firstNameLen]`, or
+  * null when the archive is corrupt (the field is then NULL). `walkCall`
+  * names the walk for the generated code (relative to `graft.functions`)
+  * and `walk` is the same method for interpreted eval. The field's type
+  * picks the slot: INT is the member count (0 for a valid empty
+  * archive), BIGINT the total declared payload bytes, STRING the first
+  * member's name (NULL for an empty archive). */
+abstract class ArchiveField(walkCall: String,
+    walk: Array[Byte] => Array[Long], val dataType: DataType)
+    extends UnaryExpression with ImplicitCastInputTypes with Serializable {
   override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def nullable: Boolean = true
 
-  /** Pick this field's value out of a successful walk. */
-  protected def pick(a: Array[Byte], w: Array[Long]): Any
-
-  /** Java source for the same pick over variables `a` (byte[]) and `w`
-    * (long[]); assign to ev.value / ev.isNull. */
-  protected def pickJava(a: String, w: String, ev: ExprCode): String
-
   override def nullSafeEval(bytes: Any): Any = {
     val a = bytes.asInstanceOf[Array[Byte]]
-    val w = TarWalk.walk(a)
-    if (w == null) null else pick(a, w)
+    val w = walk(a)
+    if (w == null) null
+    else dataType match {
+      case IntegerType => w(0).toInt
+      case LongType => w(1)
+      case _ =>
+        if (w(2) < 0) null
+        else UTF8String.fromBytes(a, w(2).toInt, w(3).toInt)
+    }
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
-      val w = ctx.freshName("tarWalk")
-      s"""long[] $w = graft.functions.TarWalk.walk($a);
+      val w = ctx.freshName("walk")
+      val pick = dataType match {
+        case IntegerType => s"${ev.value} = (int) $w[0];"
+        case LongType => s"${ev.value} = $w[1];"
+        case _ =>
+          s"""if ($w[2] < 0) { ${ev.isNull} = true; }
+             |else {
+             |  ${ev.value} = org.apache.spark.unsafe.types.UTF8String
+             |    .fromBytes($a, (int) $w[2], (int) $w[3]);
+             |}""".stripMargin
+      }
+      s"""long[] $w = graft.functions.$walkCall($a);
          |if ($w == null) {
          |  ${ev.isNull} = true;
          |} else {
-         |  ${pickJava(a, w, ev)}
+         |  $pick
          |}""".stripMargin
     })
 }
 
 /** Member count (0 for a valid empty archive). */
-case class TarMembers(child: Expression) extends TarField {
-  override def dataType: DataType = IntegerType
-  protected def pick(a: Array[Byte], w: Array[Long]): Any = w(0).toInt
-  protected def pickJava(a: String, w: String, ev: ExprCode): String =
-    s"${ev.value} = (int) $w[0];"
+case class TarMembers(child: Expression)
+    extends ArchiveField("TarWalk.walk", TarWalk.walk, IntegerType) {
   override protected def withNewChildInternal(c: Expression): TarMembers =
     copy(child = c)
 }
 
 /** Total payload bytes across members (sizes as declared, not padded). */
-case class TarPayloadBytes(child: Expression) extends TarField {
-  override def dataType: DataType = LongType
-  protected def pick(a: Array[Byte], w: Array[Long]): Any = w(1)
-  protected def pickJava(a: String, w: String, ev: ExprCode): String =
-    s"${ev.value} = $w[1];"
+case class TarPayloadBytes(child: Expression)
+    extends ArchiveField("TarWalk.walk", TarWalk.walk, LongType) {
   override protected def withNewChildInternal(c: Expression): TarPayloadBytes =
+    copy(child = c)
+}
+
+/** First member's name (NUL-trimmed); NULL for an empty archive. */
+case class TarFirstName(child: Expression)
+    extends ArchiveField("TarWalk.walk", TarWalk.walk, StringType) {
+  override protected def withNewChildInternal(c: Expression): TarFirstName =
     copy(child = c)
 }
 
 /** All member names in archive order; empty array for a valid empty
   * archive, NULL when corrupt — the WebDataset sample-pairing input. */
-case class TarMemberNames(child: Expression) extends TarField {
+case class TarMemberNames(child: Expression) extends UnaryExpression
+    with ImplicitCastInputTypes with Serializable {
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
+  override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
   override def nullSafeEval(bytes: Any): Any = {
     val names = TarWalk.memberNames(bytes.asInstanceOf[Array[Byte]])
     if (names == null) null
     else new org.apache.spark.sql.catalyst.util.GenericArrayData(
       names.asInstanceOf[Array[Any]])
   }
-  protected def pick(a: Array[Byte], w: Array[Long]): Any =
-    throw new IllegalStateException("unused — nullSafeEval overridden")
-  protected def pickJava(a: String, w: String, ev: ExprCode): String = ""
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
       val n = ctx.freshName("tarNames")
@@ -201,22 +223,7 @@ case class TarMemberNames(child: Expression) extends TarField {
          |    .GenericArrayData((Object[]) $n);
          |}""".stripMargin
     })
-  override protected def withNewChildInternal(c: Expression): TarMemberNames =
-    copy(child = c)
-}
 
-/** First member's name (NUL-trimmed); NULL for an empty archive. */
-case class TarFirstName(child: Expression) extends TarField {
-  override def dataType: DataType = StringType
-  protected def pick(a: Array[Byte], w: Array[Long]): Any =
-    if (w(2) < 0) null
-    else UTF8String.fromBytes(a, w(2).toInt, w(3).toInt)
-  protected def pickJava(a: String, w: String, ev: ExprCode): String =
-    s"""if ($w[2] < 0) { ${ev.isNull} = true; }
-       |else {
-       |  ${ev.value} = org.apache.spark.unsafe.types.UTF8String
-       |    .fromBytes($a, (int) $w[2], (int) $w[3]);
-       |}""".stripMargin
-  override protected def withNewChildInternal(c: Expression): TarFirstName =
+  override protected def withNewChildInternal(c: Expression): TarMemberNames =
     copy(child = c)
 }

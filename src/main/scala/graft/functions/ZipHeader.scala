@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** PKZIP local-file-header walk as codegen'd Catalyst expressions — the
   * other archive transport next to tar (functions/TarHeader.scala).
@@ -63,64 +61,23 @@ object ZipWalk {
   }
 }
 
-abstract class ZipField extends UnaryExpression
-    with ImplicitCastInputTypes with Serializable {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def nullable: Boolean = true
-
-  protected def pick(a: Array[Byte], w: Array[Long]): Any
-  protected def pickJava(a: String, w: String, ev: ExprCode): String
-
-  override def nullSafeEval(bytes: Any): Any = {
-    val a = bytes.asInstanceOf[Array[Byte]]
-    val w = ZipWalk.walk(a)
-    if (w == null) null else pick(a, w)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val w = ctx.freshName("zipWalk")
-      s"""long[] $w = graft.functions.ZipWalk.walk($a);
-         |if ($w == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${pickJava(a, w, ev)}
-         |}""".stripMargin
-    })
-}
-
 /** Entry count (0 for a valid empty archive). */
-case class ZipEntries(child: Expression) extends ZipField {
-  override def dataType: DataType = IntegerType
-  protected def pick(a: Array[Byte], w: Array[Long]): Any = w(0).toInt
-  protected def pickJava(a: String, w: String, ev: ExprCode): String =
-    s"${ev.value} = (int) $w[0];"
+case class ZipEntries(child: Expression)
+    extends ArchiveField("ZipWalk.walk", ZipWalk.walk, IntegerType) {
   override protected def withNewChildInternal(c: Expression): ZipEntries =
     copy(child = c)
 }
 
 /** Total compressed bytes across entries (as declared in the LFHs). */
-case class ZipCompBytes(child: Expression) extends ZipField {
-  override def dataType: DataType = LongType
-  protected def pick(a: Array[Byte], w: Array[Long]): Any = w(1)
-  protected def pickJava(a: String, w: String, ev: ExprCode): String =
-    s"${ev.value} = $w[1];"
+case class ZipCompBytes(child: Expression)
+    extends ArchiveField("ZipWalk.walk", ZipWalk.walk, LongType) {
   override protected def withNewChildInternal(c: Expression): ZipCompBytes =
     copy(child = c)
 }
 
 /** First entry's name; NULL for an empty archive. */
-case class ZipFirstName(child: Expression) extends ZipField {
-  override def dataType: DataType = StringType
-  protected def pick(a: Array[Byte], w: Array[Long]): Any =
-    if (w(2) < 0) null
-    else UTF8String.fromBytes(a, w(2).toInt, w(3).toInt)
-  protected def pickJava(a: String, w: String, ev: ExprCode): String =
-    s"""if ($w[2] < 0) { ${ev.isNull} = true; }
-       |else {
-       |  ${ev.value} = org.apache.spark.unsafe.types.UTF8String
-       |    .fromBytes($a, (int) $w[2], (int) $w[3]);
-       |}""".stripMargin
+case class ZipFirstName(child: Expression)
+    extends ArchiveField("ZipWalk.walk", ZipWalk.walk, StringType) {
   override protected def withNewChildInternal(c: Expression): ZipFirstName =
     copy(child = c)
 }

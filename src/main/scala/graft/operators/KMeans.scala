@@ -34,38 +34,44 @@ import graft.Exact.davg
 object KMeans {
 
   /** @param vecs (idCol, vCol: array<double>) — pre-widened
+    * @param rounds Lloyd rounds, at least 1 ([[Fixpoint.iterate]] runs
+    *        exactly this many: a fixed budget, not a convergence test)
     * @return (cid, cv: array<double>) final centroids, staged (caller
-    *         releases via Staging.sweep) */
+    *         releases via Staging.sweep). Throws, with nothing left
+    *         staged, when no vector seeds a centroid. */
   def run(vecs: DataFrame, idCol: String, vCol: String, k: Int,
       rounds: Int): DataFrame = {
+    require(rounds >= 1, s"KMeans: rounds ($rounds) must be at least 1")
     val v = Staging.stage(
       vecs.select(col(idCol).as("id"), col(vCol).as("v")), eager = true)
-    val (seeded, nSeeded) = Staging.stageCounted(
-      v.filter(col("id") < k)
-        .select(col("id").as("cid"), col("v").as("cv")))
-    // loud-failure contract (r13 advisory): an id convention that
-    // seeds nothing must fail here, not surface as an empty result
-    // downstream (DagLevels/Scc's require discipline)
-    require(nSeeded > 0,
-      s"KMeans: empty init — no vector has $idCol < k ($k)")
-    var cents = seeded
-    for (_ <- 1 to rounds) {
-      val a = assign(v, cents, idCol = "id", vCol = "v")
-      val m = v.join(a.withColumnRenamed("id", "__aid"),
-          col("id") === col("__aid"))
-        .select(col("cid"), posexplode(col("v")).as(Seq("i", "x")))
-        .groupBy(col("cid"), col("i")).agg(davg(col("x")).as("c"))
-      val next = Staging.stage(
-        m.groupBy(col("cid"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("i"), col("c")))),
-            s => s.getField("c")).as("cv")),
-        eager = true)
-      Staging.release(cents)
-      cents = next
-    }
-    Staging.release(v)
-    cents
+    try {
+      Fixpoint.iterate("kmeans", "rounds", rounds,
+          v.filter(col("id") < k)
+            .select(col("id").as("cid"), col("v").as("cv")),
+          Seq(count(lit(1))), _.getLong(0), converged = None) {
+        (cents, m, i) =>
+          // loud-failure contract (r13 advisory): an id convention that
+          // seeds nothing must fail here, not surface as an empty result
+          // downstream (DagLevels/Scc's require discipline)
+          if (i == 0) require(m.getLong(0) > 0,
+            s"KMeans: empty init — no vector has $idCol < k ($k)")
+          refit(v, cents)
+      }._1
+    } finally Staging.release(v)
+  }
+
+  /** One Lloyd refit: assign every vector of `v` (id, v) to its nearest
+    * centroid, then average each cluster's members per dimension. */
+  private def refit(v: DataFrame, cents: DataFrame): DataFrame = {
+    val a = assign(v, cents, idCol = "id", vCol = "v")
+    val m = v.join(a.withColumnRenamed("id", "__aid"),
+        col("id") === col("__aid"))
+      .select(col("cid"), posexplode(col("v")).as(Seq("i", "x")))
+      .groupBy(col("cid"), col("i")).agg(davg(col("x")).as("c"))
+    m.groupBy(col("cid"))
+      .agg(transform(
+        array_sort(collect_list(struct(col("i"), col("c")))),
+        s => s.getField("c")).as("cv"))
   }
 
   /** [[run]] with deterministic empty-cell RE-SEEDING and an explicit
@@ -93,52 +99,48 @@ object KMeans {
     val spark = vecs.sparkSession
     val v = Staging.stage(
       vecs.select(col(idCol).as("id"), col(vCol).as("v")), eager = true)
-    val (seeded, nSeeded) = Staging.stageCounted(
-      init.select(col("cid").cast("long").as("cid"), col("cv")))
-    require(nSeeded > 0, "KMeans.runWithReseed: empty init frame")
-    var cents = seeded
-    for (_ <- 1 to rounds) {
-      val a = assign(v, cents, idCol = "id", vCol = "v")
-      val m = v.join(a.withColumnRenamed("id", "__aid"),
-          col("id") === col("__aid"))
-        .select(col("cid"), posexplode(col("v")).as(Seq("i", "x")))
-        .groupBy(col("cid"), col("i")).agg(davg(col("x")).as("c"))
-      val refit = Staging.stage(
-        m.groupBy(col("cid"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("i"), col("c")))),
-            s => s.getField("c")).as("cv")),
-        eager = true)
-      // surviving cids: a ≤ k-row model-constant read
-      val have = refit.select(col("cid")).collect()
-        .map(_.getLong(0)).toSet
-      val missing = (0L until k.toLong).filterNot(have).sorted
-      val next = if (missing.isEmpty) refit
-      else {
-        val dmin = v.crossJoin(broadcast(refit))
-          .select(col("id"), Vectors.distSq(col("v"), col("cv"))
-            .as("d2"))
-          .groupBy(col("id")).agg(min(col("d2")).as("dmin"))
-        val far = v.join(dmin, "id")
-          .orderBy(col("dmin").desc, col("id"))
-          .limit(missing.size)
-          .select(col("id"), col("v"), col("dmin"))
-          .collect()
-          .sortBy(r => (-r.getDouble(2), r.getLong(0)))
-        import spark.implicits._
-        val extra = missing.zip(far.toSeq).map { case (cid, r) =>
-          (cid, r.getSeq[Double](1))
-        }.toDF("cid", "cv")
-        val merged = Staging.stage(refit.unionByName(extra),
-          eager = true)
-        Staging.release(refit)
-        merged
+    // the one staged centroid frame this loop owns at any moment:
+    // released if anything below throws
+    var cents: DataFrame = null
+    try {
+      val (seeded, nSeeded) = Staging.stageCounted(
+        init.select(col("cid").cast("long").as("cid"), col("cv")))
+      cents = seeded
+      require(nSeeded > 0, "KMeans.runWithReseed: empty init frame")
+      for (_ <- 1 to rounds) {
+        val next = Staging.stage(refit(v, cents), eager = true)
+        Staging.release(cents)
+        cents = next
+        // surviving cids: a ≤ k-row model-constant read
+        val have = cents.select(col("cid")).collect()
+          .map(_.getLong(0)).toSet
+        val missing = (0L until k.toLong).filterNot(have).sorted
+        if (missing.nonEmpty) {
+          val dmin = v.crossJoin(broadcast(cents))
+            .select(col("id"), Vectors.distSq(col("v"), col("cv"))
+              .as("d2"))
+            .groupBy(col("id")).agg(min(col("d2")).as("dmin"))
+          val far = v.join(dmin, "id")
+            .orderBy(col("dmin").desc, col("id"))
+            .limit(missing.size)
+            .select(col("id"), col("v"), col("dmin"))
+            .collect()
+            .sortBy(r => (-r.getDouble(2), r.getLong(0)))
+          import spark.implicits._
+          val extra = missing.zip(far.toSeq).map { case (cid, r) =>
+            (cid, r.getSeq[Double](1))
+          }.toDF("cid", "cv")
+          val merged = Staging.stage(cents.unionByName(extra), eager = true)
+          Staging.release(cents)
+          cents = merged
+        }
       }
-      Staging.release(cents)
-      cents = next
-    }
-    Staging.release(v)
-    cents
+      cents
+    } catch {
+      case t: Throwable =>
+        if (cents != null) Staging.release(cents)
+        throw t
+    } finally Staging.release(v)
   }
 
   /** Nearest-centroid assignment: (idCol, cid). Ties break by cid. */

@@ -109,43 +109,40 @@ object QualityLr {
       feat.groupBy($"doc_id", $"y".cast("long").as("y"))
         .agg(collect_list(struct($"b".cast("long").as("b"),
           $"x".cast("long").as("x"))).as("fs")))
-    var w = Staging.stage(
-      spark.range(b).select($"id".as("b"),
-        lit(0).cast(DecimalType(38, 0)).as("w")),
-      eager = true)
-    for (_ <- 1 to rounds) {
-      // the weight vector as ONE array row (b ascending — every b in
-      // 0..B-1 is present by construction), broadcast under the doc
-      // rows; |w| always fits a long (bound above)
-      val warr = w.agg(transform(
-        sort_array(collect_list(struct($"b", $"w".cast("long").as("w")))),
-        s => s.getField("w")).as("warr"))
-      // one in-row fold per doc: z = Σ w·x DIV 1e6, then the hard-
-      // sigmoid residual — same integer values as the old per-round
-      // score join + doc-grain aggregate
-      val resid = docFeat.crossJoin(broadcast(warr))
-        .select($"fs",
-          expr("least(greatest(500000L + " +
-            "(aggregate(fs, 0L, (acc, f) -> " +
-            "acc + element_at(warr, CAST(f.b AS INT) + 1) * f.x) " +
-            "DIV 1000000L) DIV 4L, 0L), 1000000L) - y").as("r"))
-      val g = resid
-        .select($"r", explode($"fs").as("f"))
-        .select($"f.b".as("b"),
-          ($"r" * $"f.x").cast(DecimalType(38, 0)).as("rx"))
-        .groupBy($"b").agg(sum($"rx").as("g"))
-      val wNext = Staging.stage(
-        w.join(g, Seq("b"), "left_outer")
-          .select($"b",
-            expr(s"CAST(w - ($eta * (COALESCE(g, 0) DIV " +
-              s"CAST($nDocs AS DECIMAL(38,0)))) " +
-              "DIV 1000000 AS DECIMAL(38,0))").as("w")),
-        eager = true)
-      Staging.release(w)
-      w = wNext
-    }
-    Staging.release(docFeat)
-    w
+    try {
+      Fixpoint.iterate("quality_lr", "rounds", rounds,
+          spark.range(b).select($"id".as("b"),
+            lit(0).cast(DecimalType(38, 0)).as("w")),
+          Seq(count(lit(1))), _ => b.toLong, converged = None) {
+        (w, _, _) =>
+          // the weight vector as ONE array row (b ascending — every b in
+          // 0..B-1 is present by construction), broadcast under the doc
+          // rows; |w| always fits a long (bound above)
+          val warr = w.agg(transform(
+            sort_array(collect_list(struct($"b",
+              $"w".cast("long").as("w")))),
+            s => s.getField("w")).as("warr"))
+          // one in-row fold per doc: z = Σ w·x DIV 1e6, then the hard-
+          // sigmoid residual — same integer values as the old per-round
+          // score join + doc-grain aggregate
+          val resid = docFeat.crossJoin(broadcast(warr))
+            .select($"fs",
+              expr("least(greatest(500000L + " +
+                "(aggregate(fs, 0L, (acc, f) -> " +
+                "acc + element_at(warr, CAST(f.b AS INT) + 1) * f.x) " +
+                "DIV 1000000L) DIV 4L, 0L), 1000000L) - y").as("r"))
+          val g = resid
+            .select($"r", explode($"fs").as("f"))
+            .select($"f.b".as("b"),
+              ($"r" * $"f.x").cast(DecimalType(38, 0)).as("rx"))
+            .groupBy($"b").agg(sum($"rx").as("g"))
+          w.join(g, Seq("b"), "left_outer")
+            .select($"b",
+              expr(s"CAST(w - ($eta * (COALESCE(g, 0) DIV " +
+                s"CAST($nDocs AS DECIMAL(38,0)))) " +
+                "DIV 1000000 AS DECIMAL(38,0))").as("w"))
+      }._1
+    } finally Staging.release(docFeat)
   }
 
   /** Per-document scores from a trained weight frame: (doc_id, y, z)

@@ -780,7 +780,7 @@ object MultimodalQ {
     // RIFF word-alignment pad byte) before fmt — and decodes the fmt
     // fields with the `wav_*` expressions, which now locate the chunk by
     // walking size-prefixed chunk headers (functions/MediaHeader.scala
-    // `WavFmtField`, budget 8). The corrupt slice (~10%: 'R' → 'Q') still
+    // `WavFmt`, budget 8). The corrupt slice (~10%: 'R' → 'Q') still
     // decodes to NULL on both engines. The ORACLE does not walk: it
     // synthesizes the same bytes and reads the fmt fields at the
     // per-layout offsets it KNOWS it placed them at — so a walk that
@@ -900,7 +900,7 @@ object MultimodalQ {
     // encoders emit before the frame header) with a hash-chosen
     // SOF0-vs-SOF2 frame marker, and decodes precision/height/width/
     // components with the `jpeg_*` expressions
-    // (functions/MediaHeader.scala `JpegSofField`, big-endian
+    // (functions/MediaHeader.scala `JpegSof`, big-endian
     // length-prefixed segment walk, budget 16). Like q186 the ORACLE does
     // not walk — it reads the SOF fields at the per-layout offsets it
     // synthesized, so a mislocated walk hash-fails. Corrupt slice (~10%,

@@ -125,4 +125,20 @@ class KMeansSpec extends SparkTestBase {
       s"non-equi pair stage in SemDeDup:\n$plan")
     Staging.sweep(spark)
   }
+
+  test("k = 0 seeds nothing: run and runWithReseed throw and leave " +
+      "nothing staged") {
+    val pts = Seq((0L, Seq(0.0)), (1L, Seq(1.0))).toDF("id", "v")
+    def pinned() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = pinned()
+    val err = intercept[IllegalArgumentException](
+      KMeans.run(pts, "id", "v", k = 0, rounds = 2))
+    assert(err.getMessage.contains("empty init"), err.getMessage)
+    assert(pinned() -- before === Set.empty)
+    val noInit = Seq.empty[(Long, Seq[Double])].toDF("cid", "cv")
+    val err2 = intercept[IllegalArgumentException](
+      KMeans.runWithReseed(pts, "id", "v", k = 2, rounds = 2, init = noInit))
+    assert(err2.getMessage.contains("empty init"), err2.getMessage)
+    assert(pinned() -- before === Set.empty)
+  }
 }

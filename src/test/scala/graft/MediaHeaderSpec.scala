@@ -2,7 +2,7 @@ package graft
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions._
 
 import graft.functions._
@@ -360,7 +360,7 @@ class MediaHeaderSpec extends SparkTestBase {
     val deepKids = mp4v((1 to 5).map(_ => "free" -> 12), 0, 1000L, 42L)
     // mvhd DECLARES size 20 (< the 28 its v0 header needs) but full
     // bytes follow: must NULL, not read the bytes past the declared
-    // box (advisor r7 — the WavFmtField check, applied here)
+    // box (advisor r7 — the WavFmt check, applied here)
     val shortDecl = mp4v(Nil, 0, 1000L, 42L)
     ByteBuffer.wrap(shortDecl, 24 + 8, 4).putInt(20)
     // a child whose corrupt size would step past moov's end: the child
@@ -749,5 +749,44 @@ class MediaHeaderSpec extends SparkTestBase {
     assert(PngHeight(Literal(png1x1.take(19))).eval() == null)
     assert(WavSampleRate(Literal(wav(2, 48000, 32))).eval() == 48000)
     assert(WavChannels(Literal(wav(2, 48000, 32).take(23))).eval() == null)
+  }
+
+  test("u32 WAV rates and PNG dimensions past 2^31-1 read NULL; BMP " +
+      "stays signed") {
+    def put(a: Array[Byte], at: Seq[Int], v: Long, o: ByteOrder) = {
+      val c = a.clone()
+      at.foreach(p => ByteBuffer.wrap(c).order(o).putInt(p, v.toInt))
+      c
+    }
+    val le = ByteOrder.LITTLE_ENDIAN
+    // sample rate @24 and byte rate @28; PNG width @16 and height @20
+    val wide = Seq(0x80000000L, 0xFFFFFFFFL).map(v =>
+      (put(wav(2, 44100, 16), Seq(24, 28), v, le),
+        put(png1x1, Seq(16, 20), v, ByteOrder.BIG_ENDIAN)))
+    val fields = Seq[Expression => Expression](
+      WavSampleRate, WavByteRate, PngWidth, PngHeight)
+    wide.foreach { case (w, p) =>
+      Seq(w, w, p, p).zip(fields).foreach { case (b, f) =>
+        assert(f(Literal(b)).eval() == null, f(Literal(b)))
+      }
+    }
+    // an RDD-backed frame: the projection runs through whole-stage
+    // codegen instead of being folded into a local relation
+    val rows = spark.sparkContext.parallelize(wide, 1).toDF("w", "p")
+      .selectExpr("wav_sample_rate(w)", "wav_byte_rate(w)",
+        "png_width(p)", "png_height(p)").collect()
+    assert(rows.length == 2)
+    rows.foreach(r => (0 until 4).foreach(i => assert(r.isNullAt(i), r)))
+    // the largest INT still decodes, on both paths
+    val max = put(png1x1, Seq(16), Int.MaxValue.toLong, ByteOrder.BIG_ENDIAN)
+    assert(PngWidth(Literal(max)).eval() == Int.MaxValue)
+    assert(spark.sparkContext.parallelize(Seq(Tuple1(max)), 1).toDF("p")
+      .selectExpr("png_width(p)").head().getInt(0) == Int.MaxValue)
+    // BMP width/height are i32: the same bit patterns read negative
+    val neg = put(bmp(1, 1, 24), Seq(18, 22), 0x80000000L, le)
+    assert(BmpWidth(Literal(neg)).eval() == Int.MinValue)
+    val r = spark.sparkContext.parallelize(Seq(Tuple1(neg)), 1).toDF("b")
+      .selectExpr("bmp_width(b)", "bmp_height(b)").head()
+    assert(r.getInt(0) == Int.MinValue && r.getInt(1) == Int.MinValue)
   }
 }
