@@ -56,7 +56,15 @@ object GraftSession {
 
   /** The engine's named settings. [[build]] returns a session that
     * already exists as it is, and the codegen cap cannot change once
-    * Spark has read it, so these are checked against that session. */
+    * Spark has read it, so these are checked against that session.
+    *
+    * [[confMismatches]] compares confs, not the live cache. Spark's
+    * `CodeGenerator` takes its cap from whatever `SQLConf.get` returns
+    * when the object first initializes, so any touch of `CodeGenerator`
+    * before the first engine session exists (a compile, or reaching the
+    * cache by reflection) pins Spark's 100-entry cap for the JVM's life.
+    * The session's conf then still reads 1000, and [[build]] cannot see
+    * the difference. */
   val EngineConfs: Seq[(String, String)] = Seq(CheckpointManager, CodegenCache)
 
   /** `(key, engine's value, conf's value)` for each engine setting that

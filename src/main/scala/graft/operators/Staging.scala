@@ -117,7 +117,7 @@ object Staging {
 
   /** Conf key: target bytes per shuffle partition inside an iterated
     * loop's scope (default 64 MB — AQE's own advisory partition size).
-    * A whole number of bytes; anything else fails with an
+    * A whole number of bytes, at least 1; anything else fails with an
     * `IllegalArgumentException` naming this key. Production tuning
     * knob; the LOCAL default keeps sf-fixture loops at the floor width,
     * so bench numbers stay comparable across rounds. */
@@ -145,10 +145,10 @@ object Staging {
   def loopShufflePartitions(spark: SparkSession,
       staged: DataFrame*): Int = {
     val target = spark.conf.getOption(LoopTargetBytesKey).fold(
-      64L * 1024 * 1024)(v => v.trim.toLongOption.getOrElse(
+      64L * 1024 * 1024)(v => v.trim.toLongOption.filter(_ >= 1).getOrElse(
         throw new IllegalArgumentException(
-          s"$LoopTargetBytesKey must be a whole number of bytes, got '$v'")))
-      .max(1L)
+          s"$LoopTargetBytesKey must be a positive whole number of bytes, " +
+            s"got '$v'")))
     val bytes = stagedBytes(spark, staged: _*)
     val parts = math.ceil(bytes.toDouble / target).toLong
     math.min(math.max(parts, LoopMinPartitions.toLong), 65536L).toInt

@@ -18,7 +18,14 @@ import graft.functions._
   * whole-stage-codegen `select`, and the two must agree row for row.
   * A decoder names its static reader twice (the generated code's call
   * target and the Scala function); a pair that disagrees shows up here
-  * on the format the two readers decode differently. */
+  * on the format the two readers decode differently.
+  *
+  * The engine's two-argument expressions (`le_*` offset reads, the
+  * protobuf field scans, bounded inflate and the vector folds) get the
+  * same check over the cross product of their first and second inputs.
+  * The frames are RDD-backed: Spark folds a projection over a
+  * `Seq(...).toDF` local relation on the driver with interpreted eval,
+  * so such a frame never runs `doGenCode`. */
 class DecoderParitySpec extends SparkTestBase {
 
   private def le(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
@@ -166,42 +173,148 @@ class DecoderParitySpec extends SparkTestBase {
   private def norm(v: Any): Any = v match {
     case a: Array[Byte] => a.toSeq
     case s: scala.collection.Seq[_] => s.toList
+    case d: Double if d.isNaN => "NaN"
     case other => other
   }
 
-  test("every binary decoder agrees between eval and whole-stage codegen") {
-    assert(decoders.size >= 50, decoders.map(_._1))
+  /** Runs each `(name, expression)` over `rows` twice: as
+    * `name(<cols>)` in a whole-stage-codegen select over an RDD-backed
+    * frame of `cols`, and as `expression.eval` of each row, whose
+    * `BoundReference`s must match `cols` by ordinal. Fails on the first
+    * row where the two differ; returns each function's eval results. */
+  private def assertParity(cols: Seq[StructField], rows: Seq[Seq[Any]],
+      cases: Seq[(String, Expression)]): Seq[(String, Seq[Any])] = {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(
-        corpus.zipWithIndex.map { case (b, i) => Row(i, b) }, 2),
-      StructType(Seq(StructField("i", IntegerType),
-        StructField("b", BinaryType))))
+        rows.zipWithIndex.map { case (r, i) => Row.fromSeq(i +: r) }, 2),
+      StructType(StructField("i", IntegerType) +: cols))
+    val call = cols.map(_.name).mkString("(", ", ", ")")
     val confs = Seq("spark.sql.codegen.wholeStage" -> "true",
       "spark.sql.codegen.fallback" -> "false",
       "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try decoders.foreach { case (name, e) =>
-      val q = df.selectExpr("i", s"$name(b) AS v")
+    try cases.map { case (name, e) =>
+      val q = df.selectExpr("i", s"$name$call AS v")
       assert(q.queryExecution.executedPlan.exists(
         _.isInstanceOf[WholeStageCodegenExec]), s"$name: not codegen'd")
       val generated = q.collect().map(r => r.getInt(0) -> norm(r.get(1)))
         .sortBy(_._1).map(_._2).toSeq
-      val interpreted = corpus.map { b =>
-        norm(CatalystTypeConverters.convertToScala(
-          e.eval(InternalRow(b)), e.dataType))
+      val interpreted = rows.map { r =>
+        val in = InternalRow.fromSeq(r.map(CatalystTypeConverters.convertToCatalyst))
+        norm(CatalystTypeConverters.convertToScala(e.eval(in), e.dataType))
       }
-      corpus.indices.foreach { i =>
+      rows.indices.foreach { i =>
         assert(generated(i) == interpreted(i),
-          s"$name on corpus row $i: codegen ${generated(i)} vs eval " +
-            s"${interpreted(i)}")
+          s"$name on row $i ${rows(i).map(norm).mkString("(", ", ", ")")
+            .take(200)}: codegen ${String.valueOf(generated(i)).take(200)} vs " +
+            s"eval ${String.valueOf(interpreted(i)).take(200)}")
       }
-      // no function is constant over the corpus's non-NULL payloads
-      assert(interpreted.filter(_ != null).nonEmpty &&
-        interpreted.init.distinct.size >= 2, s"$name: $interpreted")
+      name -> interpreted
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  test("every binary decoder agrees between eval and whole-stage codegen") {
+    assert(decoders.size >= 50, decoders.map(_._1))
+    assertParity(Seq(StructField("b", BinaryType)), corpus.map(Seq(_)),
+      decoders).foreach { case (name, interpreted) =>
+      // no function is constant over the corpus's non-NULL payloads
+      assert(interpreted.filter(_ != null).nonEmpty &&
+        interpreted.init.distinct.size >= 2, s"$name: $interpreted")
+    }
+  }
+
+  /** The registered two-argument function `name`, bound to `cols`. */
+  private def twoArg(name: String, cols: Seq[StructField]): (String, Expression) = {
+    val (_, _, build) = GraftFunctions.all.find(_._1.funcName == name)
+      .getOrElse(fail(s"$name is not registered"))
+    name -> build(cols.zipWithIndex.map { case (c, i) =>
+      BoundReference(i, c.dataType, true) })
+  }
+
+  /** Every (first, second) pair, NULLs included. */
+  private def cross(as: Seq[Any], bs: Seq[Any]): Seq[Seq[Any]] =
+    for (a <- as; b <- bs) yield Seq(a, b)
+
+  /** Runs the two-argument functions `names` over `rows` and checks that
+    * each returns at least two distinct non-NULL values there. */
+  private def assertTwoArgParity(cols: Seq[StructField], rows: Seq[Seq[Any]],
+      names: String*): Unit =
+    assertParity(cols, rows, names.map(twoArg(_, cols))).foreach {
+      case (name, interpreted) =>
+        assert(interpreted.filter(_ != null).distinct.size >= 2,
+          s"$name: ${interpreted.distinct.take(10)}")
+    }
+
+  private val binaryAndInt =
+    Seq(StructField("b", BinaryType), StructField("n", IntegerType))
+
+  test("le_* offset reads agree between eval and whole-stage codegen") {
+    val rec = le(16).putLong(0x8877665544332211L).putDouble(-1.5).array()
+    val payloads = Seq(rec, Array(0xFF, 0x80, 0x7F).map(_.toByte),
+      Array.emptyByteArray, null)
+    // negative, every in-bounds/past-the-end boundary of the 1-, 4- and
+    // 8-byte reads over 16 and 3 bytes, and offsets whose `o + width`
+    // overflows Int
+    val offsets = Seq(Int.MinValue, -8, -1, 0, 1, 2, 3, 4, 7, 8, 9, 12, 13,
+      15, 16, 17, Int.MaxValue - 3, Int.MaxValue, null)
+    assertTwoArgParity(binaryAndInt, cross(payloads, offsets),
+      "le_u8", "le_u32", "le_u64", "le_f64")
+  }
+
+  test("protobuf field scans agree between eval and whole-stage codegen") {
+    def bytes(xs: Int*) = xs.map(_.toByte).toArray
+    // field 1 varint 150, field 2 "abc", field 3 varint 5, field 4 empty
+    val msg = bytes(0x08, 0x96, 0x01, 0x12, 3) ++ ascii("abc") ++
+      bytes(0x18, 5, 0x22, 0)
+    val payloads = Seq(
+      msg, msg.dropRight(1), msg.take(4),
+      // field 3 "hi" before field 1 varint 1 and field 2 varint 300
+      bytes(0x1A, 2) ++ ascii("hi") ++ bytes(0x08, 1, 0x10, 0xAC, 0x02),
+      // fixed64 and fixed32 fields skipped before field 1 varint 7
+      bytes(0x09) ++ new Array[Byte](8) ++ bytes(0x15, 1, 2, 3, 4, 0x08, 7),
+      // a varint past 2^63, a varint with no last byte, an overrunning
+      // length, a group wire type, and a field number past Int
+      bytes(0x08) ++ Array.fill(9)(0xFF.toByte) ++ bytes(0x01),
+      bytes(0x08) ++ Array.fill(11)(0xFF.toByte),
+      bytes(0x12, 0x10) ++ ascii("a"), bytes(0x0B, 0x08, 1),
+      bytes(0xF8, 0xFF, 0xFF, 0xFF, 0x7F, 9),
+      // 40 varint fields: past the scan's field budget
+      Array.fill(40)(bytes(0x10, 1)).flatten ++ bytes(0x08, 2),
+      Array.emptyByteArray, null)
+    val fields = Seq(Int.MinValue, -1, 0, 1, 2, 3, 4, 5, 536870911,
+      Int.MaxValue, null)
+    assertTwoArgParity(binaryAndInt, cross(payloads, fields),
+      "pb_varint_field", "pb_len_field")
+  }
+
+  test("bounded inflate agrees between eval and whole-stage codegen") {
+    val hello = ascii("hello")
+    val big = Array.fill[Byte](100000)(7)
+    val gz = GzipCodec.compress(hello)
+    val zs = ZstdCodec.compress(hello)
+    val payloads = Seq(gz, zs, GzipCodec.compress(big),
+      ZstdCodec.compress(big), gz.dropRight(1), zs.take(zs.length / 2),
+      corrupt(gz, 0), corrupt(zs, 0), corrupt(gz, gz.length - 6),
+      GzipCodec.compress(Array.emptyByteArray), hello,
+      Array.emptyByteArray, null)
+    // negative, zero, one below / at / above each payload's inflated
+    // size, and unbounded
+    val bounds = Seq(Int.MinValue, -1, 0, 4, 5, 6, 99999, 100000,
+      Int.MaxValue, null)
+    assertTwoArgParity(binaryAndInt, cross(payloads, bounds),
+      "gzip_inflate", "zstd_inflate")
+  }
+
+  test("vector folds agree between eval and whole-stage codegen") {
+    val vec = ArrayType(DoubleType, containsNull = true)
+    val vectors = Seq(Seq(), Seq(1.0), Seq(1.0, 2.0, 3.0),
+      Seq(-0.5, 1e308, 3.0), Seq(0.1, 0.2, 0.3), Seq(-0.0, 4.0, -2.5),
+      Seq(1.0, null, 2.0), null)
+    assertTwoArgParity(Seq(StructField("x", vec), StructField("y", vec)),
+      cross(vectors, vectors), "vec_dot", "vec_distsq")
   }
 }

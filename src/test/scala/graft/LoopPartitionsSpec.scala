@@ -94,18 +94,23 @@ class LoopPartitionsSpec extends SparkTestBase {
   test("a malformed target-bytes conf fails naming the key") {
     val key = Staging.LoopTargetBytesKey
     val parts0 = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(key, "64MB")
-    try {
-      val err = intercept[IllegalArgumentException] {
-        graft.operators.DagLevels.run(
-          Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), "src", "dst")
+    // a target below one byte is as malformed as a non-number: it would
+    // otherwise run the loop at one partition per staged byte
+    Seq("64MB", "0", "-1").foreach { bad =>
+      spark.conf.set(key, bad)
+      try {
+        val err = intercept[IllegalArgumentException] {
+          graft.operators.DagLevels.run(
+            Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), "src", "dst")
+        }
+        assert(err.getClass === classOf[IllegalArgumentException], bad)
+        assert(err.getMessage.contains(key), err.getMessage)
+        assert(err.getMessage.contains(s"'$bad'"), err.getMessage)
+        assert(spark.conf.get("spark.sql.shuffle.partitions") === parts0, bad)
+      } finally {
+        spark.conf.unset(key)
+        Staging.sweep(spark)
       }
-      assert(err.getClass === classOf[IllegalArgumentException])
-      assert(err.getMessage.contains(key), err.getMessage)
-      assert(spark.conf.get("spark.sql.shuffle.partitions") === parts0)
-    } finally {
-      spark.conf.unset(key)
-      Staging.sweep(spark)
     }
   }
 

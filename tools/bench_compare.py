@@ -46,19 +46,23 @@ def catalog_names():
 new = json.loads(Path(sys.argv[1]).read_text())
 kb = int(new.get("kb", 10))
 qd = int(new.get("qd", 1))
-if "qt" in new:
+names = catalog_names()
+positional = "qt" in new and new["qn"] == len(names)
+if "qt" in new and not positional:
+    # a SPARK_GRAFT_ONLY subset (or another checkout's catalog): the
+    # positional vector cannot be named, but the keyed "queries" dict
+    # can — it holds every successful query of a subset of <= qtop
+    print(f"note: qn={new['qn']} != repo catalog {len(names)} — "
+          f"using the keyed top-{new.get('qtop')} \"queries\" dict")
+if positional:
     # v4 (round 8+): fixed-width-2 base-36 deciseconds, positional in
     # sorted-name order; "--" = failure; "qn" pins the length.
     # "zz" (1295 ds) is a SATURATION sentinel, not an exact reading —
     # Bench.enc2 caps at 129.5 s, so a 600 s catastrophe also encodes
     # as "zz"; decode it as ">= 129.5 s" and flag it. The true value
     # survives in the top-12 keyed "queries" dict when it ranks there.
-    names = catalog_names()
     qt = new["qt"]
     assert len(qt) == 2 * new["qn"], "qt length does not match qn"
-    assert len(names) == new["qn"], (
-        f"repo catalog ({len(names)}) != artifact qn ({new['qn']}) — "
-        "decode against the matching checkout")
     nq = {}
     # saturated cells are LOWER BOUNDS, not readings — carry the flag
     # so every downstream comparison involving one is annotated instead
@@ -124,16 +128,18 @@ def load(path, sat=None):
     return out
 
 
-r7_sat, r6_sat = set(), set()
-r7 = load("BENCH_r07.json", r7_sat)
-r6 = load("BENCH_r06.json", r6_sat)
+refs = []
+for path, label in (("BENCH_r15.json", "r15"), ("BENCH_r07.json", "r7"),
+                    ("BENCH_r06.json", "r6")):
+    ref_sat = set()
+    refs.append((load(path, ref_sat), ref_sat, label))
 
 def mark(k, vals, sats):
     """Render a reading, with the saturation lower-bound marker."""
     return f">={vals[k]:.2f}" if k in sats else f"{vals[k]:.2f}"
 
 print(f"total={new['value']}s  n={len(nq)}")
-for ref, ref_sat, label in ((r7, r7_sat, "r7"), (r6, r6_sat, "r6")):
+for ref, ref_sat, label in refs:
     common = [k for k in nq if k in ref and nq[k] >= 0 and ref[k] >= 0]
     if not common:
         print(f"vs {label}: no comparable queries")
@@ -153,22 +159,6 @@ for ref, ref_sat, label in ((r7, r7_sat, "r7"), (r6, r6_sat, "r6")):
         print(f"  {k}: {mark(k, ref, ref_sat)} -> {mark(k, nq, nq_sat)}")
 print("slowest now:",
       sorted(nq.items(), key=lambda x: -x[1])[:10])
-for extra in ("ingest_k", "ing0", "st", "str", "sv", "stb", "lat", "z95"):
+for extra in ("ingest_k", "ing0", "st", "sv", "stb", "lat"):
     if extra in new:
-        val = new[extra] / qd if extra == "z95" else new[extra]
-        print(extra, "=", val)
-if "rem" in new:
-    print("rem =", {norm(k, kb): (v / qd if v >= 0 else v)
-                for k, v in new["rem"].items()})
-
-# rem-derived prior floors (fold_bench tags them in the quiet artifact):
-# these priors come from one-off re-measure corrections, not full-run
-# cells — a "regression" against them is usually fold asymmetry, not code
-for qa in sorted(Path(".").glob("BENCH_r*_quiet.json"), reverse=True):
-    try:
-        tagged = json.loads(qa.read_text()).get("rem_floor_qs")
-    except Exception:
-        continue
-    if tagged is not None:
-        print(f"prior floors tagged src:rem in {qa.name}: {tagged}")
-        break
+        print(extra, "=", new[extra])
