@@ -1109,11 +1109,13 @@ case class TfRecordFrame(child: Expression) extends UnaryExpression
   * field, `lenField` the byte length of a wire-type-2 field. Fields
   * may appear in any order (the spec allows it; the scan does not
   * assume sorting). Malformed input — truncated varint, 11-byte
-  * varint, value past the buffer, deprecated group types — is NULL,
+  * varint, value past the buffer, deprecated group types, a field
+  * number of 0 or past the spec's 2^29−1 — is NULL,
   * never a misread. Values with bit 63 set exceed LongType and NULL
   * (the exceeds-the-type rule). */
 object ProtoScan {
   private final val FieldBudget = 32
+  private final val MaxFieldNo = (1L << 29) - 1
 
   /** Decode the varint at `p`; returns (value, nextPos) packed as
     * value in `vOut(0)` — implemented with a tiny inlined loop per
@@ -1141,8 +1143,10 @@ object ProtoScan {
       val tagEnd = varintEnd(a, p)
       if (tagEnd < 0) return -1L
       val tag = varintVal(a, p, tagEnd)
-      val fld = (tag >>> 3).toInt
+      val fld = tag >>> 3
       val wt = (tag & 0x7).toInt
+      // field numbers run 1 to 2^29-1; anything else is not a message
+      if (fld < 1 || fld > MaxFieldNo) return -1L
       p = tagEnd
       wt match {
         case 0 =>

@@ -28,7 +28,8 @@ object Fixpoint {
   private val ShufflePartitions = "spark.sql.shuffle.partitions"
 
   /** Run `body` with the shuffle width derived from `inputs`' staged
-    * bytes ([[Staging.loopShufflePartitions]]). The session width is
+    * bytes ([[Staging.loopShufflePartitions]]; the session width, logged
+    * as such, when none has measurable bytes). The session width is
     * restored and every input is released when `body` returns or throws,
     * so `body` must return a frame that no longer reads them (a staged
     * round). AQE stays at the session's setting. One line per loop logs
@@ -41,7 +42,10 @@ object Fixpoint {
     var width = "unset"
     try {
       val w = Staging.loopShufflePartitions(spark, inputs: _*)
-      width = s"$w from ${Staging.stagedBytes(spark, inputs: _*)} staged bytes"
+      val bytes = Staging.stagedBytes(spark, inputs: _*)
+      if (bytes == 0L)
+        log.info(s"$op: no measurable staged bytes; using the session width $w")
+      width = s"$w from $bytes staged bytes"
       spark.conf.set(ShufflePartitions, w.toString)
       body
     } finally {

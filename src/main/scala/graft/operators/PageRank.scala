@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.GraftSqlBridge.withKnownStats
 import org.apache.spark.sql.functions._
 
 /** Weighted PageRank to convergence in exact FIXED-POINT arithmetic —
@@ -19,9 +20,14 @@ import org.apache.spark.sql.functions._
   * flag rides the rank table so each round's one measuring aggregate
   * also returns the next round's dangling mass.
   *
-  * Scale notes (100 TB): the per-round joins shuffle on src then on
-  * id — the canonical two-exchange PR step; only (id, rank) rows move
-  * between rounds. The inflow product is decomposed as
+  * Scale notes (100 TB): a round is ONE aggregate — the edge
+  * contributions (edges joined to the broadcast rank table) unioned
+  * with each node's own row, grouped by id — so it shuffles edge-sized
+  * contribution rows and node-sized rank rows once, on id, with
+  * partial aggregation on the map side; above [[BroadcastNodeLimit]]
+  * the edge join shuffles too. The node table is one aggregate as well
+  * (out-strength and out-edge count per id). The inflow product is
+  * decomposed as
   * `(r DIV tw)·w + ((r MOD tw)·w) DIV tw` = floor(r·w/tw) exactly,
   * bounding intermediates by tw·max(w) instead of r·max(w) — safe
   * while per-src strength × max edge weight < 2^63.
@@ -53,43 +59,18 @@ object PageRank {
       tolPpm: Long = 10L): DataFrame = {
     require(dampingPct > 0 && dampingPct < 100,
       s"dampingPct ($dampingPct) must be in (0, 100)")
-    def now() = System.nanoTime()
-    def secs(t0: Long) = f"${(now() - t0) / 1e9}%.2f"
-
-    val tEdges = now()
-    // the raw edge projection is staged FIRST: `edges` may be an
-    // arbitrarily expensive upstream pipeline (q262's is a corpus
-    // join+groupBy), and it used to be referenced three times — both
-    // sides of the out-strength self-join plus the node derivation —
-    // re-executing the pipeline each time. One eager staging, then
-    // every derivation reads the staged blocks.
-    val e = Staging.stage(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).cast("long").as("w")),
-      eager = true)
-    // (src, dst, w, tw): weights plus per-src out-strength, staged once
-    // at full session width — this is the data-heavy frame of the loop
-    val ew = Staging.stage(
-      e.join(e.groupBy(col("src")).agg(sum(col("w")).as("tw")), "src"),
-      eager = true)
-    val (nodes, n) = Staging.stageCounted(
-      e.select(col("src").as("id"))
-        .unionByName(e.select(col("dst").as("id"))).distinct())
-    Staging.release(e)
-    // dangling = nodes with no out-edges; their mass redistributes
-    // uniformly each round (dropping it instead would leak total mass
-    // and understate every rank)
-    val dangling = Staging.stage(
-      nodes.join(ew.select(col("src").as("id")).distinct(),
-        Seq("id"), "left_anti"),
-      eager = true)
-    log.info(s"pagerank: edge/node staging ${secs(tEdges)}s (n=$n)")
+    val t0 = System.nanoTime()
+    val (ew, nodes, counts) = stageGraph(edges, srcCol, dstCol, wCol,
+      identity, Nil)
+    val n = counts.getLong(0)
+    log.info(f"pagerank: edge/node staging " +
+      f"${(System.nanoTime() - t0) / 1e9}%.2fs (n=$n)")
 
     // width from the staged edge+strength frame's measured bytes: the
     // per-round contribution aggregate's map side is edge-sized, and
     // its reducer count must scale with the graph, not sit at a
     // local-mode constant (r14 verdict #1; guide §2.1/§2.2)
-    Fixpoint.scope("pagerank", ew, nodes, dangling) {
+    Fixpoint.scope("pagerank", ew, nodes) {
       val base = (100L - dampingPct) * Ppm / 100L
       // the dangling flag rides the rank table so each round's single
       // measuring action also returns the next round's dangling mass;
@@ -97,39 +78,18 @@ object PageRank {
       // and dangling count × Ppm in the same single job
       Fixpoint.iterate("pagerank", "maxIterations or loosen tolPpm",
           maxIterations,
-          nodes.join(dangling.select(col("id").as("__dg")),
-              col("id") === col("__dg"), "left_outer")
-            .select(col("id"), col("__dg").isNotNull.as("isd"),
-              lit(Ppm).as("r_prev"), lit(Ppm).as("r")),
+          nodes.select(col("id"), col("isd"), lit(Ppm).as("r_prev"),
+            lit(Ppm).as("r")),
           Seq(coalesce(max(abs(col("r") - col("r_prev"))), lit(0L)),
             coalesce(sum(when(col("isd"), col("r"))), lit(0L))),
           _ => n,
           if (tolPpm >= 0) Some((_, next) => next.getLong(0) <= tolPpm)
           else None) { (ranks, prev, _) =>
         val dangShare = prev.getLong(1) / math.max(n, 1L)
-        // exact floor(r*w/tw) without forming r*w (overflow headroom).
-        // The rank table is one (id, r) row per node — when the node
-        // count is broadcastable, hint it so the EDGE leaf (the frame
-        // that is actually big) is never shuffled per round. At
-        // sf-fixture sizes both plans cost about the same (8 shuffle
-        // partitions, edges ~1M rows); the hint is for the 100x graph,
-        // where re-shuffling the edge leaf R times is the dominant
-        // cost. Above the threshold the shuffled join is the correct
-        // plan: at 1e9 nodes the rank sliver no longer fits an
-        // executor.
-        val rankSide =
-          if (n <= BroadcastNodeLimit) broadcast(ranks) else ranks
-        val contrib = ew.join(rankSide, col("src") === col("id"))
-          .select(col("dst"),
-            expr("(r DIV tw) * w + ((r % tw) * w) DIV tw").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-        ranks.select(col("id"), col("isd"), col("r").as("r_prev"))
-          .join(contrib, col("id") === col("dst"), "left_outer")
-          .select(col("id"), col("isd"), col("r_prev"),
-            coalesce(col("inflow"), lit(0L)).as("inf0"))
+        inflow(ew, ranks, n, col("isd"), col("r").as("r_prev"))
           .select(col("id"), col("isd"), col("r_prev"),
             (lit(base) +
-              expr(s"($dampingPct * (inf0 + $dangShare)) DIV 100"))
+              expr(s"($dampingPct * (inflow + $dangShare)) DIV 100"))
               .as("r"))
       }._1.select(col("id"), col("r").as("rank_ppm"))
     }
@@ -152,7 +112,8 @@ object PageRank {
     * standard PPR convention; dropping dangling mass would leak it,
     * sending it uniform would dilute personalization). The inflow
     * product uses the same overflow-safe floor(r·w/tw) decomposition
-    * as [[run]], on the same [[Fixpoint]] loop.
+    * as [[run]], on the same [[Fixpoint]] loop and the same one-
+    * aggregate round.
     */
   def runPersonalized(edges: DataFrame, srcCol: String, dstCol: String,
       wCol: String, seeds: DataFrame, seedCol: String,
@@ -160,64 +121,101 @@ object PageRank {
     require(rounds >= 1, s"rounds ($rounds) must be >= 1")
     require(dampingPct > 0 && dampingPct < 100,
       s"dampingPct ($dampingPct) must be in (0, 100)")
-    // staged once — the upstream pipeline was re-executed by the
-    // strength self-join and the node derivation (see run())
-    val e = Staging.stage(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).cast("long").as("w")),
-      eager = true)
-    val ew = Staging.stage(
-      e.join(e.groupBy(col("src")).agg(sum(col("w")).as("tw")), "src"),
-      eager = true)
-    val seedIds = Staging.stage(
-      seeds.select(col(seedCol).as("sid")).distinct(), eager = true)
-    // node and seed counts ride the staging job
-    val (nodes, counts) = Staging.stageMeasured(
-      e.select(col("src").as("id"))
-        .unionByName(e.select(col("dst").as("id"))).distinct()
-        .join(seedIds, col("id") === col("sid"), "left_outer")
-        .select(col("id"),
+    // the seed flag joins the node table inside its staging job, and
+    // the seed count rides that job's measures with the node count
+    val sid = seeds.select(col(seedCol).as("sid")).distinct()
+    val (ew, nodes, counts) = stageGraph(edges, srcCol, dstCol, wCol,
+      _.join(sid, col("id") === col("sid"), "left_outer")
+        .select(col("id"), col("tw"), col("isd"),
           when(col("sid").isNotNull, 1L).otherwise(0L).as("isSeed")),
-      Seq(count(lit(1)), count(when(col("isSeed") === 1L, true))))
-    Staging.release(e)
+      Seq(count(when(col("isSeed") === 1L, true))))
     val n = counts.getLong(0)
     val sCnt = counts.getLong(1)
-    require(sCnt > 0, "personalized pagerank needs >= 1 seed IN the graph")
-    val dangling = Staging.stage(
-      nodes.select(col("id"), col("isSeed"))
-        .join(ew.select(col("src").as("id")).distinct(),
-          Seq("id"), "left_anti"),
-      eager = true)
-    Fixpoint.scope("ppr", ew, nodes, dangling, seedIds) {
+    Fixpoint.scope("ppr", ew, nodes) {
+      require(sCnt > 0, "personalized pagerank needs >= 1 seed IN the graph")
       val teleport = (100L - dampingPct) * n * Ppm / (100L * sCnt)
       // dangling flag rides the rank table (run()'s device): each
       // round's measuring aggregate is the next round's dangling mass.
       // Round 0's mass (dangling seeds hold n·Ppm DIV s each, others
       // 0) comes from the same aggregate over the initial table.
       Fixpoint.iterate("ppr", "rounds", rounds,
-          nodes.join(dangling.select(col("id").as("__dg")),
-              col("id") === col("__dg"), "left_outer")
-            .select(col("id"), col("isSeed"),
-              when(col("isSeed") === 1L, lit(n * Ppm / sCnt))
-                .otherwise(lit(0L)).as("r"),
-              col("__dg").isNotNull.as("isd")),
+          nodes.select(col("id"), col("isSeed"),
+            when(col("isSeed") === 1L, lit(n * Ppm / sCnt))
+              .otherwise(lit(0L)).as("r"),
+            col("isd")),
           Seq(coalesce(sum(when(col("isd"), col("r"))), lit(0L))),
           _ => n, None) { (ranks, prev, _) =>
         val dangSeedShare = prev.getLong(0) / sCnt
-        val rankSide =
-          if (n <= BroadcastNodeLimit) broadcast(ranks) else ranks
-        val contrib = ew.join(rankSide, col("src") === col("id"))
-          .select(col("dst"),
-            expr("(r DIV tw) * w + ((r % tw) * w) DIV tw").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-        ranks.select(col("id"), col("isSeed"), col("isd"))
-          .join(contrib, col("id") === col("dst"), "left_outer")
+        inflow(ew, ranks, n, col("isSeed"), col("isd"))
           .select(col("id"), col("isSeed"), col("isd"),
             (when(col("isSeed") === 1L, lit(teleport)).otherwise(0L) +
-              expr(s"($dampingPct * (coalesce(inflow, 0L) + " +
+              expr(s"($dampingPct * (inflow + " +
                 s"if(isSeed = 1, ${dangSeedShare}L, 0L))) DIV 100")
             ).as("r"))
       }._1.select(col("id"), col("r").as("rank_ppm"))
     }
+  }
+
+  /** Stage what the loops read, in three eager jobs: the raw edges
+    * `(src, dst, w)` once (`edges` may be an expensive upstream
+    * pipeline, q262's a corpus join+groupBy, and both frames below read
+    * it); the node table `(id, tw, isd, ...)` — ONE aggregate over
+    * src-tagged `(id, w, 1)` and dst-tagged `(id, 0, 0)` rows gives each
+    * node's out-strength `tw` and out-edge count, and a node is dangling
+    * (`isd`) when that count is 0, whatever the weights; `extend` adds
+    * the caller's columns and `measures` ride its staging job after the
+    * node count; and `ew` `(src, dst, w, tw)`, the loop's data-heavy
+    * frame: the edges joined to the node table, whose known row count
+    * lets Catalyst broadcast it while it is small.
+    * @return (ew, node table with its known row count, measures) */
+  private def stageGraph(edges: DataFrame, srcCol: String, dstCol: String,
+      wCol: String, extend: DataFrame => DataFrame,
+      measures: Seq[Column]): (DataFrame, DataFrame, Row) = {
+    val e = Staging.stage(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+        col(wCol).cast("long").as("w")),
+      eager = true)
+    try {
+      val (nodes, m) = Staging.stageMeasured(
+        extend(e.select(col("src").as("id"), col("w"), lit(1L).as("deg"))
+          .unionByName(e.select(col("dst").as("id"), lit(0L).as("w"),
+            lit(0L).as("deg")))
+          .groupBy(col("id"))
+          .agg(sum(col("w")).as("tw"), (sum(col("deg")) === 0L).as("isd"))),
+        count(lit(1)) +: measures)
+      val known = withKnownStats(nodes, m.getLong(0))
+      val ew = try Staging.stage(
+          e.join(known.select(col("id").as("src"), col("tw")), "src"),
+          eager = true)
+        catch { case t: Throwable => Staging.release(nodes); throw t }
+      (ew, known, m)
+    } finally Staging.release(e)
+  }
+
+  /** One round's single aggregate: each edge's contribution
+    * `floor(r·w/tw)` from the rank table, tagged with its `dst`, unioned
+    * with each node's own row (`carry` from `ranks`, contribution 0),
+    * grouped by id — the candidate-union shape SCC and CC use. Returns
+    * `(id, carry..., inflow)`; a node no edge points at has inflow 0.
+    * The exact product decomposition bounds intermediates by tw·max(w)
+    * (see the object doc). The rank table is one (id, r) row per node:
+    * while the node count is broadcastable it is hinted, so the EDGE
+    * leaf (the frame that is actually big) is never shuffled for the
+    * join; at 1e9 nodes the rank sliver no longer fits an executor and
+    * the shuffled join is the correct plan. */
+  private def inflow(ew: DataFrame, ranks: DataFrame, n: Long,
+      carry: Column*): DataFrame = {
+    val own = ranks.select((col("id") +: carry :+ lit(0L).as("c")): _*)
+    val carried = own.schema.fields.slice(1, carry.size + 1)
+    val rs = ranks.select(col("id"), col("r"))
+    val contrib = ew
+      .join(if (n <= BroadcastNodeLimit) broadcast(rs) else rs,
+        col("src") === col("id"))
+      .select((col("dst").as("id") +:
+        carried.map(f => lit(null).cast(f.dataType).as(f.name)) :+
+        expr("(r DIV tw) * w + ((r % tw) * w) DIV tw").as("c")): _*)
+    own.unionByName(contrib).groupBy(col("id"))
+      .agg(sum(col("c")).as("inflow"),
+        carried.map(f => max(col(f.name)).as(f.name)): _*)
   }
 }

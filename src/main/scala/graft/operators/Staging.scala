@@ -139,9 +139,12 @@ object Staging {
     * eagerly staged frames divided by [[LoopTargetBytesKey]], clamped to
     * [[[LoopMinPartitions]], 65536]. At fixture scale every loop frame
     * is far below one target block and the width sits at the floor; at
-    * 100x/100 TB it grows linearly with the staged bytes. AQE's
-    * partition coalescing still applies BELOW the chosen width, so
-    * overshooting costs nothing durable. */
+    * 100x/100 TB it grows linearly with the staged bytes. No measurable
+    * bytes (nothing staged, or nothing materialized yet) means the size
+    * is UNKNOWN, not tiny: the width stays at the session's
+    * `spark.sql.shuffle.partitions`. AQE's partition coalescing still
+    * applies BELOW the chosen width, so overshooting costs nothing
+    * durable. */
   def loopShufflePartitions(spark: SparkSession,
       staged: DataFrame*): Int = {
     val target = spark.conf.getOption(LoopTargetBytesKey).fold(
@@ -150,8 +153,11 @@ object Staging {
           s"$LoopTargetBytesKey must be a positive whole number of bytes, " +
             s"got '$v'")))
     val bytes = stagedBytes(spark, staged: _*)
-    val parts = math.ceil(bytes.toDouble / target).toLong
-    math.min(math.max(parts, LoopMinPartitions.toLong), 65536L).toInt
+    if (bytes == 0L) spark.conf.get("spark.sql.shuffle.partitions").toInt
+    else {
+      val parts = math.ceil(bytes.toDouble / target).toLong
+      math.min(math.max(parts, LoopMinPartitions.toLong), 65536L).toInt
+    }
   }
 
   /** Materialized bytes of every staged leaf under `staged`, read on the

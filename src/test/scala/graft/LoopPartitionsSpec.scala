@@ -46,10 +46,14 @@ class LoopPartitionsSpec extends SparkTestBase {
     Staging.release(e)
   }
 
-  test("unstaged frames contribute nothing (floor width, no crash)") {
+  test("unstaged frames measure nothing: the session width, no crash") {
     val plain = spark.range(10).select($"id".as("src"))
-    assert(Staging.loopShufflePartitions(spark, plain)
-      === Staging.LoopMinPartitions)
+    val session = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      // a session width distinct from the floor, so the two cannot agree
+      spark.conf.set("spark.sql.shuffle.partitions", "13")
+      assert(Staging.loopShufflePartitions(spark, plain) === 13)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", session)
   }
 
   test("loop scope restores shuffle.partitions on exit and throw; " +

@@ -709,6 +709,25 @@ class MediaHeaderSpec extends SparkTestBase {
     assert(PbLenField(Literal(msg.dropRight(1)), Literal(3)).eval() == 5L)
   }
 
+  test("protobuf scan: a field number of 0 or past 2^29-1 is malformed") {
+    def bs(hex: String) = hex.grouped(2)
+      .map(Integer.parseInt(_, 16).toByte).toArray
+    // tag varint F8 FF FF FF 7F = field 2^32-1, wire type 0, then 9: the
+    // number must not wrap to field -1 (nor to any valid number)
+    val wrapped = bs("F8FFFFFF7F09")
+    // the largest valid field number (2^29-1) still reads
+    val maxOk = bs("F8FFFFFF0F09")
+    val field0 = bs("0009") ++ bs("0807") // field 0, then field 1 = 7
+    Seq(-1, 1, 536870911).foreach { f =>
+      assert(PbVarintField(Literal(wrapped), Literal(f)).eval() == null,
+        s"field $f of a wrapped tag")
+    }
+    assert(PbVarintField(Literal(maxOk), Literal(536870911)).eval() == 9L)
+    assert(PbVarintField(Literal(field0), Literal(1)).eval() == null)
+    assert(PbVarintField(Literal(field0), Literal(0)).eval() == null)
+    assert(PbLenField(Literal(bs("0200")), Literal(0)).eval() == null)
+  }
+
   test("utf8_valid: acceptance boundaries per RFC 3629") {
     def bs(hex: String) = hex.grouped(2)
       .map(Integer.parseInt(_, 16).toByte).toArray
