@@ -23,19 +23,19 @@ import org.apache.spark.sql.types.DecimalType
   * Cost model per round: one neighbor equi-join (plus a second hop join
   * from round 3) unioned with the label table into one min-aggregate on
   * the node id, folded into ONE Spark job. The loop runs on
-  * [[Fixpoint]]: lazy per-round staging measured by one aggregate,
-  * release of the previous round, and a shuffle width derived from the
-  * staged edge leaf's bytes. The driver holds only a per-round
-  * label-sum (convergence metric), never data.
+  * [[Fixpoint]]: each round is staged eagerly by one job that also
+  * measures it, the previous round is released, and the shuffle width
+  * derives from the staged edge leaf's bytes. The driver holds only a
+  * per-round label-sum (convergence metric) and row count, never data.
   *
   * Convergence detection is join-free: labels only ever DECREASE
   * (`least(old, …)` per node over a fixed node set), so the exact sum of
   * all labels (DECIMAL(38,0) — overflow-proof at any scale) is strictly
   * monotone decreasing until the fixpoint; an unchanged sum IS
-  * convergence. The sum rides a trivial aggregate over the just-staged
-  * blocks — not a second execution of the round, and not an accumulator
-  * (task-retry double-counting would make an accumulator sum unreliable
-  * on a real cluster).
+  * convergence. The sum is an observed metric of the job that stages
+  * the round ([[Staging.stageMeasured]]) — not a second execution of
+  * the round, and not an accumulator (task-retry double-counting would
+  * make an accumulator sum unreliable on a real cluster).
   *
   * Failure safety at 100 TB: staging goes through [[Staging.stage]] —
   * executor-local checkpoints by default, reliable checkpoints under
@@ -77,20 +77,18 @@ object ConnectedComponents {
     // (floor 8 at fixture scale, linear in the data at 100x).
     Fixpoint.scope("connected components", sym) {
       // coalesce: sum over an EMPTY label set (no edges) is NULL, and the
-      // convergence compare must still terminate. The node count rides
-      // the same aggregate: it feeds the label table's row-count stats,
-      // so every round's edge-side join sees a real size estimate (a
-      // bare staged LogicalRDD defaults to an unbounded one and the
-      // per-round neighbor join degrades to a sort-merge plan that
-      // re-exchanges the edge leaf every round)
+      // convergence compare must still terminate. Each staged round
+      // carries its row count, so every round's edge-side join sees a
+      // real size estimate (a bare staged LogicalRDD defaults to an
+      // unbounded one and the per-round neighbor join degrades to a
+      // sort-merge plan that re-exchanges the edge leaf every round)
       val sumCol = coalesce(sum(col("component").cast(DecimalType(38, 0))),
         lit(0).cast(DecimalType(38, 0)))
       Fixpoint.iterate("connected components",
           "maxIterations (graph diameter exceeds it)", maxIterations,
           sym.select(col("a").as("id")).distinct()
             .withColumn("component", col("id")),
-          Seq(sumCol, count(lit(1))), _.getLong(1),
-          Some(Fixpoint.unchanged)) { (labels, _, i) =>
+          Seq(sumCol), Some(Fixpoint.unchanged)) { (labels, _, i) =>
         // Union formulation: component_next(id) = min over three label
         // CANDIDATE streams, folded by ONE partial-aggregable groupBy —
         //   own:      (id, my label)
@@ -127,45 +125,13 @@ object ConnectedComponents {
     }
   }
 
-  /** Incremental (delta) connected components — standing dup-cluster
-    * MAINTENANCE. Given yesterday's `(id, component)` labels (component
-    * = min reachable node id, [[minLabel]]'s invariant) and today's
-    * DELTA edges, produce the labels full batch CC over
-    * corpus-edges ∪ delta-edges would produce — WITHOUT the corpus
-    * edges, which this method never sees (so "only touched components
-    * recompute" holds by construction, not by review).
-    *
-    * Algorithm — CC on the QUOTIENT graph: map each delta endpoint x to
-    * comp(x) = its standing component, or x itself when x is new; run
-    * [[minLabel]] over the delta-sized edge list (comp(a), comp(b)).
-    * Because every standing component id IS the min node id of its
-    * members, the quotient min-label of a merged group = min over the
-    * constituent components' mins and the new node ids = exactly the
-    * batch min label of the merged component. Untouched components
-    * never enter the quotient graph, so their labels pass through the
-    * final projection bit-identical (a left-outer broadcast join that
-    * finds no remap row).
-    *
-    * Scale shape (the q156/q290 asymmetry, on the graph): the standing
-    * table streams ONCE through two broadcast hash joins (endpoint
-    * lookup + final remap) and is never shuffled or self-joined; every
-    * other frame — endpoints, quotient edges, the remap — is bounded by
-    * the DELTA size. The iterated loop runs on the quotient graph
-    * (nodes = touched components + new nodes), not the corpus graph.
-    *
-    * @param standing (id, component) from a previous [[minLabel]] run
-    *                 (ids absent here are treated as isolated, i.e.
-    *                 component = own id — minLabel's own convention for
-    *                 edge-less nodes)
-    * @param deltaEdges undirected delta edges (self-loops ignored)
-    * @return (id, component) for standing ids ∪ delta endpoints
-    */
   /** comp(x) for every delta endpoint, in ONE standing pass: the
     * endpoint sliver broadcasts into the corpus-sized standing scan
     * (never the reverse), and endpoints the scan does not find are new
     * nodes mapping to themselves. Returns (found, newNodes), both
     * staged eagerly and delta-bounded; shared by the batch incremental
-    * path and the streaming twin so the two cannot drift. */
+    * paths ([[incremental]], [[Scc.incremental]] over its scc label)
+    * and the streaming twin so they cannot drift. */
   private[graft] def endpointComponents(standing: DataFrame,
       ends: DataFrame): (DataFrame, DataFrame) = {
     val found = Staging.stage(
@@ -182,8 +148,8 @@ object ConnectedComponents {
 
   /** Quotient edges over the component mapping `comp0` (nid,
     * component): delta-bounded, so both attachments broadcast; edges
-    * internal to one component drop. Shared by [[incremental]] and the
-    * streaming twin. */
+    * internal to one component drop. Shared by [[incremental]],
+    * [[Scc.incremental]] and the streaming twin. */
   private[graft] def quotientEdges(de: DataFrame,
       comp0: DataFrame): DataFrame = de
     .join(broadcast(comp0.select(col("nid").as("a"),
@@ -192,10 +158,11 @@ object ConnectedComponents {
       col("component").as("cb"))), "b")
     .select(col("ca"), col("cb")).filter(col("ca") =!= col("cb"))
 
-  /** The final projection shared by [[incremental]] and its streaming
-    * twin: remap (oldc -> newc, touched components only) broadcasts
-    * into one standing pass — untouched labels coalesce through
-    * unchanged — and new nodes take their quotient label. */
+  /** The final projection shared by [[incremental]], its streaming
+    * twin and [[Scc.incremental]]: remap (oldc -> newc, touched
+    * components only) broadcasts into one standing pass — untouched
+    * labels coalesce through unchanged — and new nodes take their
+    * quotient label. */
   private[graft] def applyRemap(standing: DataFrame, remap: DataFrame,
       newNodes: DataFrame): DataFrame = {
     val updated = standing
@@ -277,6 +244,39 @@ object ConnectedComponents {
     out
   }
 
+  /** Incremental (delta) connected components — standing dup-cluster
+    * MAINTENANCE. Given yesterday's `(id, component)` labels (component
+    * = min reachable node id, [[minLabel]]'s invariant) and today's
+    * DELTA edges, produce the labels full batch CC over
+    * corpus-edges ∪ delta-edges would produce — WITHOUT the corpus
+    * edges, which this method never sees (so "only touched components
+    * recompute" holds by construction, not by review).
+    *
+    * Algorithm — CC on the QUOTIENT graph: map each delta endpoint x to
+    * comp(x) = its standing component, or x itself when x is new; run
+    * [[minLabel]] over the delta-sized edge list (comp(a), comp(b)).
+    * Because every standing component id IS the min node id of its
+    * members, the quotient min-label of a merged group = min over the
+    * constituent components' mins and the new node ids = exactly the
+    * batch min label of the merged component. Untouched components
+    * never enter the quotient graph, so their labels pass through the
+    * final projection bit-identical (a left-outer broadcast join that
+    * finds no remap row).
+    *
+    * Scale shape (the q156/q290 asymmetry, on the graph): the standing
+    * table streams ONCE through two broadcast hash joins (endpoint
+    * lookup + final remap) and is never shuffled or self-joined; every
+    * other frame — endpoints, quotient edges, the remap — is bounded by
+    * the DELTA size. The iterated loop runs on the quotient graph
+    * (nodes = touched components + new nodes), not the corpus graph.
+    *
+    * @param standing (id, component) from a previous [[minLabel]] run
+    *                 (ids absent here are treated as isolated, i.e.
+    *                 component = own id — minLabel's own convention for
+    *                 edge-less nodes)
+    * @param deltaEdges undirected delta edges (self-loops ignored)
+    * @return (id, component) for standing ids ∪ delta endpoints
+    */
   def incremental(standing: DataFrame, deltaEdges: DataFrame,
       srcCol: String, dstCol: String, maxIterations: Int = 20)
       : DataFrame = {

@@ -75,13 +75,12 @@ object Coreness {
     Fixpoint.scope("coreness", e) {
       val wDesc = Window.partitionBy(col("node")).orderBy(col("nv").desc)
       // v0 = degree (every node in a symmetrized edge list appears as
-      // src, so the degree groupBy IS the node table, and every round's
-      // row count is the node count)
+      // src, so the degree groupBy IS the node table)
       Fixpoint.iterate("coreness", "maxIterations", maxIterations,
           e.groupBy(col("src").as("id")).agg(count(lit(1)).as("v")),
           Seq(coalesce(sum(col("v").cast(DecimalType(38, 0))),
-            lit(0).cast(DecimalType(38, 0))), count(lit(1))),
-          _.getLong(1), Some(Fixpoint.unchanged)) { (vals, _, _) =>
+            lit(0).cast(DecimalType(38, 0)))),
+          Some(Fixpoint.unchanged)) { (vals, _, _) =>
         // H-index of the neighbor multiset, over the per-node VALUE
         // HISTOGRAM instead of the raw neighbor list: for ranks
         // a..cum of a distinct value v (descending order), max over

@@ -33,7 +33,7 @@ object DagLevels {
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .filter(col("src") =!= col("dst")).distinct(),
       eager = true)
-    val (nodes, n) = Staging.stageCounted(
+    val (nodes, _) = Staging.stageCounted(
       e.select(col("src").as("id"))
         .unionByName(e.select(col("dst").as("id"))).distinct())
     Fixpoint.scope("DAG levels", e, nodes) {
@@ -42,7 +42,7 @@ object DagLevels {
           nodes.withColumn("lvl", lit(0L)),
           Seq(coalesce(sum(col("lvl").cast(DecimalType(38, 0))),
             lit(0).cast(DecimalType(38, 0)))),
-          _ => n, Some(Fixpoint.unchanged)) { (d, _, _) =>
+          Some(Fixpoint.unchanged)) { (d, _, _) =>
         val m = e.join(d.select(col("id").as("__u"), col("lvl").as("__ul")),
             col("src") === col("__u"))
           .groupBy(col("dst")).agg((max(col("__ul")) + 1).as("ml"))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.GraftSqlBridge.withKnownStats
 
 /** The loop skeleton shared by the iterated graph operators
   * (ConnectedComponents, Scc, PageRank, Coreness, HopDistance,
@@ -11,15 +10,16 @@ import org.apache.spark.sql.GraftSqlBridge.withKnownStats
   * to the width of the loop's staged inputs, restores the session width
   * and releases those inputs on every exit path. [[iterate]] runs the
   * rounds: each round stages the caller's step eagerly and computes the
-  * round's measure in that same action ([[Staging.stageMeasured]]: the
-  * measure is an observed metric of the job that materializes the
-  * round's blocks, so a round is ONE SQL action and no job re-reads the
-  * blocks; in reliable-checkpoint mode the round's plan is computed
-  * once, by the checkpoint write). It then attaches the known row count,
-  * releases the previous round and stops on the caller's convergence
-  * test or at the round bound. A throw anywhere in the loop releases the
-  * rounds it holds, so a failed loop leaves no staged blocks pinned
-  * until the next sweep.
+  * round's row count and measure in that same action
+  * ([[Staging.stageMeasured]]: both are observed metrics of the job that
+  * materializes the round's blocks, so a round is ONE SQL action and no
+  * job re-reads the blocks; in reliable-checkpoint mode the round's plan
+  * is computed once, by the checkpoint write). The staged round carries
+  * its own row count as statistics, so the next round's joins plan from
+  * its true size. The loop then releases the previous round and stops
+  * on the caller's convergence test or at the round bound. A throw
+  * anywhere in the loop releases the rounds it holds, so a failed loop
+  * leaves no staged blocks pinned until the next sweep.
   */
 object Fixpoint {
 
@@ -68,9 +68,8 @@ object Fixpoint {
     * @param maxRounds round bound
     * @param init      round-0 plan; staged here
     * @param measure   aggregate columns computed over every staged round
-    *                  (init included) by the action that stages it
-    * @param rows      the next round's row count, from the current
-    *                  round's measure (attached as staged statistics)
+    *                  (init included) by the action that stages it; may
+    *                  be empty (the row count is always measured)
     * @param converged `(previous, next)` measures → done; `None` runs
     *                  exactly `maxRounds` rounds and never throws
     * @param step      `(current round, its measure, round index from 0)`
@@ -79,24 +78,22 @@ object Fixpoint {
     *         it) and its measure
     */
   def iterate(op: String, knob: String, maxRounds: Int, init: DataFrame,
-      measure: Seq[Column], rows: Row => Long,
-      converged: Option[(Row, Row) => Boolean])(
+      measure: Seq[Column], converged: Option[(Row, Row) => Boolean])(
       step: (DataFrame, Row, Int) => DataFrame): (DataFrame, Row) = {
     var cur: DataFrame = null
     var next: DataFrame = null
     var ok = false
     try {
-      val (staged0, s0) = Staging.stageMeasured(init, measure)
+      val (staged0, _, s0) = Staging.stageMeasured(init, measure)
       cur = staged0
-      cur = withKnownStats(staged0, rows(s0))
       var s = s0
       var done = false
       var i = 0
       while (!done && i < maxRounds) {
         val t0 = System.nanoTime()
-        val (staged, sNext) = Staging.stageMeasured(step(cur, s, i), measure)
+        val (staged, rows, sNext) =
+          Staging.stageMeasured(step(cur, s, i), measure)
         next = staged
-        next = withKnownStats(staged, rows(s))
         Staging.release(cur)
         cur = next
         next = null
@@ -104,7 +101,7 @@ object Fixpoint {
         s = sNext
         i += 1
         log.info(f"$op: round $i ${(System.nanoTime() - t0) / 1e9}%.2fs " +
-          s"measure=$s${if (done) " (converged)" else ""}")
+          s"rows=$rows measure=$s${if (done) " (converged)" else ""}")
       }
       // silent truncation would return a non-fixed-point with no signal
       if (!done && converged.isDefined)

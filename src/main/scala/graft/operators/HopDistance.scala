@@ -68,7 +68,7 @@ object HopDistance {
           Seq(coalesce(
             sum(coalesce(col("dist"), lit(n + 1)).cast(DecimalType(38, 0))),
             lit(0).cast(DecimalType(38, 0)))),
-          _ => n, Some(Fixpoint.unchanged)) { (d, _, _) =>
+          Some(Fixpoint.unchanged)) { (d, _, _) =>
         // frontier relaxation: min over in-neighbors' settled distances
         val relax = e.join(d.filter(col("dist").isNotNull),
             col("src") === col("id"))
@@ -165,10 +165,8 @@ object HopDistance {
                     (col("dist").isNull || col("dist") > 0)).as("imp"))
             case None => base.withColumn("imp", lit(false))
           },
-          Seq(count(lit(1)),
-            coalesce(sum(when(col("imp"), 1L).otherwise(0L)), lit(0L))),
-          _.getLong(0),
-          Some((_, next) => next.getLong(1) == 0)) { (d, _, i) =>
+          Seq(coalesce(sum(when(col("imp"), 1L).otherwise(0L)), lit(0L))),
+          Some((_, next) => next.getLong(0) == 0)) { (d, _, i) =>
         // round 0 relaxes across the delta edges (plus the corpus
         // edges leaving seed-pinned frontier nodes, when seeds were
         // given — with no seeds the initial frontier is empty and

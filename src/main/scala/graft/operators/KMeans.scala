@@ -48,7 +48,7 @@ object KMeans {
       Fixpoint.iterate("kmeans", "rounds", rounds,
           v.filter(col("id") < k)
             .select(col("id").as("cid"), col("v").as("cv")),
-          Seq(count(lit(1))), _.getLong(0), converged = None) {
+          Seq(count(lit(1))), converged = None) {
         (cents, m, i) =>
           // loud-failure contract (r13 advisory): an id convention that
           // seeds nothing must fail here, not surface as an empty result

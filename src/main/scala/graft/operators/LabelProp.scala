@@ -74,11 +74,12 @@ object LabelProp {
 
     Fixpoint.scope("labelprop", e, nodes, selfW) {
       Fixpoint.iterate("labelprop", "rounds", rounds,
-          nodes.withColumn("label", col("id")), Seq(count(lit(1))),
-          _ => n, None) { (labels, _, _) =>
-        // no broadcast() hint: the label sliver carries rowCount = n
-        // statistics, so Catalyst plans the broadcast itself (and plans
-        // the shuffled join when n outgrows the threshold)
+          nodes.withColumn("label", col("id")), Nil, None) {
+          (labels, _, _) =>
+        // no broadcast() hint: the staged label sliver carries its row
+        // count (n) as statistics, so Catalyst plans the broadcast
+        // itself (and plans the shuffled join when n outgrows the
+        // threshold)
         val votes = e.join(labels, col("src") === col("id"))
           .select(col("dst"), col("label"), col("w"))
           .unionByName(selfW

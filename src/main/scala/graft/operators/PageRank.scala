@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.GraftSqlBridge.withKnownStats
 import org.apache.spark.sql.functions._
 
 /** Weighted PageRank to convergence in exact FIXED-POINT arithmetic —
@@ -60,9 +59,8 @@ object PageRank {
     require(dampingPct > 0 && dampingPct < 100,
       s"dampingPct ($dampingPct) must be in (0, 100)")
     val t0 = System.nanoTime()
-    val (ew, nodes, counts) = stageGraph(edges, srcCol, dstCol, wCol,
+    val (ew, nodes, n, _) = stageGraph(edges, srcCol, dstCol, wCol,
       identity, Nil)
-    val n = counts.getLong(0)
     log.info(f"pagerank: edge/node staging " +
       f"${(System.nanoTime() - t0) / 1e9}%.2fs (n=$n)")
 
@@ -82,7 +80,6 @@ object PageRank {
             lit(Ppm).as("r")),
           Seq(coalesce(max(abs(col("r") - col("r_prev"))), lit(0L)),
             coalesce(sum(when(col("isd"), col("r"))), lit(0L))),
-          _ => n,
           if (tolPpm >= 0) Some((_, next) => next.getLong(0) <= tolPpm)
           else None) { (ranks, prev, _) =>
         val dangShare = prev.getLong(1) / math.max(n, 1L)
@@ -124,13 +121,12 @@ object PageRank {
     // the seed flag joins the node table inside its staging job, and
     // the seed count rides that job's measures with the node count
     val sid = seeds.select(col(seedCol).as("sid")).distinct()
-    val (ew, nodes, counts) = stageGraph(edges, srcCol, dstCol, wCol,
+    val (ew, nodes, n, counts) = stageGraph(edges, srcCol, dstCol, wCol,
       _.join(sid, col("id") === col("sid"), "left_outer")
         .select(col("id"), col("tw"), col("isd"),
           when(col("sid").isNotNull, 1L).otherwise(0L).as("isSeed")),
       Seq(count(when(col("isSeed") === 1L, true))))
-    val n = counts.getLong(0)
-    val sCnt = counts.getLong(1)
+    val sCnt = counts.getLong(0)
     Fixpoint.scope("ppr", ew, nodes) {
       require(sCnt > 0, "personalized pagerank needs >= 1 seed IN the graph")
       val teleport = (100L - dampingPct) * n * Ppm / (100L * sCnt)
@@ -144,7 +140,7 @@ object PageRank {
               .otherwise(lit(0L)).as("r"),
             col("isd")),
           Seq(coalesce(sum(when(col("isd"), col("r"))), lit(0L))),
-          _ => n, None) { (ranks, prev, _) =>
+          None) { (ranks, prev, _) =>
         val dangSeedShare = prev.getLong(0) / sCnt
         inflow(ew, ranks, n, col("isSeed"), col("isd"))
           .select(col("id"), col("isSeed"), col("isd"),
@@ -163,32 +159,31 @@ object PageRank {
     * src-tagged `(id, w, 1)` and dst-tagged `(id, 0, 0)` rows gives each
     * node's out-strength `tw` and out-edge count, and a node is dangling
     * (`isd`) when that count is 0, whatever the weights; `extend` adds
-    * the caller's columns and `measures` ride its staging job after the
+    * the caller's columns and `measures` ride its staging job with the
     * node count; and `ew` `(src, dst, w, tw)`, the loop's data-heavy
     * frame: the edges joined to the node table, whose known row count
     * lets Catalyst broadcast it while it is small.
-    * @return (ew, node table with its known row count, measures) */
+    * @return (ew, node table, node count, measures) */
   private def stageGraph(edges: DataFrame, srcCol: String, dstCol: String,
       wCol: String, extend: DataFrame => DataFrame,
-      measures: Seq[Column]): (DataFrame, DataFrame, Row) = {
+      measures: Seq[Column]): (DataFrame, DataFrame, Long, Row) = {
     val e = Staging.stage(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(wCol).cast("long").as("w")),
       eager = true)
     try {
-      val (nodes, m) = Staging.stageMeasured(
+      val (nodes, n, m) = Staging.stageMeasured(
         extend(e.select(col("src").as("id"), col("w"), lit(1L).as("deg"))
           .unionByName(e.select(col("dst").as("id"), lit(0L).as("w"),
             lit(0L).as("deg")))
           .groupBy(col("id"))
           .agg(sum(col("w")).as("tw"), (sum(col("deg")) === 0L).as("isd"))),
-        count(lit(1)) +: measures)
-      val known = withKnownStats(nodes, m.getLong(0))
+        measures)
       val ew = try Staging.stage(
-          e.join(known.select(col("id").as("src"), col("tw")), "src"),
+          e.join(nodes.select(col("id").as("src"), col("tw")), "src"),
           eager = true)
         catch { case t: Throwable => Staging.release(nodes); throw t }
-      (ew, known, m)
+      (ew, nodes, n, m)
     } finally Staging.release(e)
   }
 

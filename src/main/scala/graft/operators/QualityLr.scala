@@ -113,7 +113,7 @@ object QualityLr {
       Fixpoint.iterate("quality_lr", "rounds", rounds,
           spark.range(b).select($"id".as("b"),
             lit(0).cast(DecimalType(38, 0)).as("w")),
-          Seq(count(lit(1))), _ => b.toLong, converged = None) {
+          Nil, converged = None) {
         (w, _, _) =>
           // the weight vector as ONE array row (b ascending — every b in
           // 0..B-1 is present by construction), broadcast under the doc

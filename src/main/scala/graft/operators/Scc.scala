@@ -65,7 +65,7 @@ object Scc {
     * converged table, which rides the SAME per-round measuring
     * aggregate so the peel loop needs no separate count job). */
   private def minReachBoth(er: DataFrame, nodes: DataFrame,
-      nodeCount: Long, maxIterations: Int): (DataFrame, Long) = {
+      maxIterations: Int): (DataFrame, Long) = {
     val dec = DecimalType(38, 0)
     val sumCol = coalesce(
       sum(col("f").cast(dec)) + sum(col("b").cast(dec)),
@@ -77,8 +77,7 @@ object Scc {
     val (labels, last) = Fixpoint.iterate("scc propagation",
         "maxIterations (reachability depth exceeds it)", maxIterations,
         nodes.select(col("id"), col("id").as("f"), col("id").as("b")),
-        Seq(sumCol, doneCol), _ => nodeCount,
-        Some(Fixpoint.unchanged)) { (labels, _, i) =>
+        Seq(sumCol, doneCol), Some(Fixpoint.unchanged)) { (labels, _, i) =>
       // ONE direction-tagged edge probe serves both fixpoints (fwd
       // candidates flow dst→src, bwd src→dst): the union is exchange-
       // free, so a round plans 2 joins instead of 4 (with the hop
@@ -167,47 +166,30 @@ object Scc {
       eager = true)
     val ends = de.select(col("a").as("nid"))
       .unionByName(de.select(col("b").as("nid"))).distinct()
-    // endpoint → standing component, one broadcast probe of the
-    // standing scan; unmatched endpoints are new singleton nodes
-    val found = Staging.stage(
-      standing.join(broadcast(ends), col("id") === col("nid"))
-        .select(col("nid"), col("scc")),
-      eager = true)
-    val newNodes = Staging.stage(
-      ends.join(found.select(col("nid").as("fid")),
-          col("nid") === col("fid"), "left_anti")
-        .select(col("nid"), col("nid").as("scc")),
-      eager = true)
-    val comp0 = found.unionByName(newNodes)
-    val dq = de
-      .join(broadcast(comp0.select(col("nid").as("a"),
-        col("scc").as("ca"))), "a")
-      .join(broadcast(comp0.select(col("nid").as("b"),
-        col("scc").as("cb"))), "b")
+    // the endpoint lookup, quotient and final remap are
+    // ConnectedComponents' own, over the scc label renamed to its
+    // `component` column at the boundary
+    val comps = standing.select(col("id"), col("scc").as("component"))
+    val (found, newNodes) =
+      ConnectedComponents.endpointComponents(comps, ends)
+    val dq = ConnectedComponents
+      .quotientEdges(de, found.unionByName(newNodes))
       .select(col("ca").as("csrc"), col("cb").as("cdst"))
-      .filter(col("csrc") =!= col("cdst"))
     val quotient = Staging.stage(
       condEdges.select(col("csrc"), col("cdst")).unionByName(dq)
         .distinct(),
       eager = true)
     // SCC over the component-id quotient graph; groups that merge get
-    // the min member label by construction. The quotient is distinct
-    // and self-arc-free by construction above — skip renormalizing.
-    val merged = run(quotient, "csrc", "cdst", maxPeels, maxIterations,
-      edgesClean = true)
+    // the min member label by construction
+    val merged = run(quotient, "csrc", "cdst", maxPeels, maxIterations)
     val remap = Staging.stage(
       merged.filter(col("id") =!= col("scc"))
         .select(col("id").as("oldc"), col("scc").as("newc")),
       eager = true)
     // untouched labels pass through bit-identical (no remap row); new
     // nodes take their quotient label
-    val labels = standing
-      .join(broadcast(remap), col("scc") === col("oldc"), "left_outer")
-      .select(col("id"), coalesce(col("newc"), col("scc")).as("scc"))
-      .unionByName(newNodes
-        .join(broadcast(remap), col("scc") === col("oldc"), "left_outer")
-        .select(col("nid").as("id"),
-          coalesce(col("newc"), col("scc")).as("scc")))
+    val labels = ConnectedComponents.applyRemap(comps, remap, newNodes)
+      .select(col("id"), col("component").as("scc"))
     // maintained condensation: quotient arcs remapped, self-arcs drop
     val cond = quotient
       .join(broadcast(remap.withColumnRenamed("oldc", "__o1")
@@ -255,11 +237,10 @@ object Scc {
     */
   def decremental(standing: DataFrame, corpusEdges: DataFrame,
       deletedEdges: DataFrame, srcCol: String, dstCol: String,
-      maxPeels: Int = 50, maxIterations: Int = 50,
-      edgesClean: Boolean = false): DataFrame = {
+      maxPeels: Int = 50, maxIterations: Int = 50): DataFrame = {
     val (del, _, _, _, labelsT) = decrementalParts(standing,
       corpusEdges, deletedEdges, srcCol, dstCol, maxPeels,
-      maxIterations, edgesClean, forState = false)
+      maxIterations, forState = false)
     // here del IS fully absorbed (run()'s eager edge staging) — the
     // labels-only path never re-reads the anti-join
     Staging.release(del)
@@ -282,7 +263,7 @@ object Scc {
   private def decrementalParts(standing: DataFrame,
       corpusEdges: DataFrame, deletedEdges: DataFrame, srcCol: String,
       dstCol: String, maxPeels: Int, maxIterations: Int,
-      edgesClean: Boolean, forState: Boolean)
+      forState: Boolean)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val del = Staging.stage(
       deletedEdges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -332,10 +313,7 @@ object Scc {
       .filter(col("c1") === col("c2"))
       .join(broadcast(touched), col("c1") === col("tc"))
       .select(col("src"), col("dst"))
-    // induced inherits the corpus leaf's cleanliness: the anti-join
-    // and the one-row-per-node mapping probes cannot mint duplicates
-    val rebuilt = run(induced, "src", "dst", maxPeels, maxIterations,
-      edgesClean)
+    val rebuilt = run(induced, "src", "dst", maxPeels, maxIterations)
     // tflag marks rebuilt-component membership: exactly the standing ⋈
     // touched split already computed here, carried through so the
     // state path's re-quotient needs no separate (id → new scc,
@@ -393,12 +371,11 @@ object Scc {
     */
   def decrementalState(standing: DataFrame, condSup: DataFrame,
       corpusEdges: DataFrame, deletedEdges: DataFrame, srcCol: String,
-      dstCol: String, maxPeels: Int = 50, maxIterations: Int = 50,
-      edgesClean: Boolean = false)
+      dstCol: String, maxPeels: Int = 50, maxIterations: Int = 50)
       : (DataFrame, DataFrame) = {
     val (del, delQ, touched, kept, labelsT) = decrementalParts(standing,
       corpusEdges, deletedEdges, srcCol, dstCol, maxPeels,
-      maxIterations, edgesClean, forState = true)
+      maxIterations, forState = true)
     // the state path staged both del-derived frames (delLab, kept), so
     // the raw deletion frame is fully absorbed — release it now
     Staging.release(del)
@@ -407,14 +384,11 @@ object Scc {
     // (node → new scc, touched?) mapping the re-quotient pass probes:
     // the old shape staged a second standing ⋈ labels ⋈ touched
     // mapping (one more staging job + two more standing probes). The
-    // staging job counts the rows, and the stats carry the count so the
-    // corpus-sized kept pass probes it as a broadcast, not a shuffle;
-    // blocks stay pinned for the returned lazy arc plan until the
-    // caller's Staging.sweep.
-    val (labelsStaged, labelsN) = Staging.stageCounted(labelsT)
-    val labStats = org.apache.spark.sql.GraftSqlBridge.withKnownStats(
-      labelsStaged, labelsN)
-    val labels = labStats.select(col("id"), col("scc"))
+    // staged frame carries its row count, so the corpus-sized kept pass
+    // probes it as a broadcast, not a shuffle; blocks stay pinned for
+    // the returned lazy arc plan until the caller's Staging.sweep.
+    val (labStaged, _) = Staging.stageCounted(labelsT)
+    val labels = labStaged.select(col("id"), col("scc"))
     // support decrement for arcs between UNTOUCHED components, from
     // the deletion quotient decrementalParts already staged (delQ is
     // deletion-bounded — it rides a broadcast, the convention for
@@ -434,9 +408,9 @@ object Scc {
     // the new labels — ONE pass over the staged kept leaf, probing the
     // stats-carried label mapping on each endpoint
     val recomputed = kept
-      .join(labStats.select(col("id").as("__ms"), col("scc").as("ncs"),
+      .join(labStaged.select(col("id").as("__ms"), col("scc").as("ncs"),
         col("tflag").as("__f1")), col("src") === col("__ms"))
-      .join(labStats.select(col("id").as("__md"), col("scc").as("ncd"),
+      .join(labStaged.select(col("id").as("__md"), col("scc").as("ncd"),
         col("tflag").as("__f2")), col("dst") === col("__md"))
       .filter(col("__f1") || col("__f2"))
       .filter(col("ncs") =!= col("ncd"))
@@ -448,35 +422,22 @@ object Scc {
   /** @param edges directed edges (src → dst), duplicates tolerated
     * @param maxPeels peel-round bound: ≤ #SCCs needed, condensation
     *                 depth in practice; O(n) on adversarial path DAGs
-    * @param edgesClean caller GUARANTEES `edges` is already distinct
-    *                   with no self-loops — skips the normalization
-    *                   shuffle before staging (the trade-graph callers
-    *                   derive edges from a groupBy with structurally
-    *                   disjoint src/dst encodings, so the distinct was
-    *                   a pure extra corpus exchange). A VIOLATED
-    *                   guarantee costs performance, never correctness:
-    *                   duplicates and self-loops are no-ops for the
-    *                   min-label fixpoint (min over a repeated
-    *                   candidate is the candidate; a self-loop adds
-    *                   the node's own label, already a candidate) —
-    *                   they only bloat the staged edge leaf and defeat
-    *                   the peel-0 restriction skip, so treat the flag
-    *                   as a perf contract, not a correctness hazard
-    * @return (id, scc) for every node appearing as src or dst; scc =
+    * @return (id, scc) for every node appearing as src or dst — a node
+    *         whose only edge is a self-loop is its own SCC; scc =
     *         the minimum node id of the component
     */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
-      maxPeels: Int = 50, maxIterations: Int = 50,
-      edgesClean: Boolean = false): DataFrame = {
+      maxPeels: Int = 50, maxIterations: Int = 50): DataFrame = {
     def now() = System.nanoTime()
     def secs(t0: Long) = f"${(now() - t0) / 1e9}%.2f"
 
     val tEdges = now()
-    val renamed = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    // staged as given: duplicates and self-loops are no-ops for the
+    // min-label fixpoints (min over a repeated candidate is the
+    // candidate; a self-loop adds the node's own label, already a
+    // candidate), so normalizing them would be a pure extra exchange
     val e = Staging.stage(
-      if (edgesClean) renamed
-      else renamed.filter(col("src") =!= col("dst")).distinct(),
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
       eager = true)
     val (active, totalN) = Staging.stageCounted(
       e.select(col("src").as("id"))
@@ -496,7 +457,7 @@ object Scc {
       var fbFrames = List.empty[DataFrame]
       var activeDf: DataFrame = active
       var peel = 0
-      val assigned = try {
+      try {
         while (activeN > 0 && peel < maxPeels) {
           val tPeel = now()
           // the induced subgraph on active nodes. On peel 1 active IS
@@ -517,7 +478,7 @@ object Scc {
           // materialized (its last round's staging job ran), so the
           // induced edge leaf can release as soon as it returns
           val (fb, doneCnt) =
-            try minReachBoth(er, activeDf, activeN, maxIterations)
+            try minReachBoth(er, activeDf, maxIterations)
             finally if (!(er eq e)) Staging.release(er)
           fbFrames ::= fb
           assignedParts ::= fb.filter(col("f") === col("b"))
@@ -533,13 +494,12 @@ object Scc {
             s"SCC did not finish within $maxPeels peel rounds " +
               s"($activeN nodes unassigned); raise maxPeels " +
               "(condensation depth exceeds it)")
-        Staging.stage(assignedParts.reduce(_ unionByName _), eager = true)
+        // the staged labels carry their row count (one per node), so
+        // downstream joins against the standing table get a real size
+        // estimate — a bare staged LogicalRDD defaults to an unbounded
+        // one and forces sort-merge plans on every consumer
+        Staging.stageCounted(assignedParts.reduce(_ unionByName _))._1
       } finally fbFrames.foreach(Staging.release)
-      // carry the KNOWN row count (one label per node) so downstream
-      // joins against the standing table get a real size estimate —
-      // a bare staged LogicalRDD defaults to an unbounded one and
-      // forces sort-merge plans on every consumer
-      org.apache.spark.sql.GraftSqlBridge.withKnownStats(assigned, totalN)
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** Lineage-truncating staging for iterative / self-joined pipelines, plus
@@ -28,10 +28,14 @@ import org.apache.spark.sql.functions.{count, lit}
   *     to RDD checkpointing; eager staging computes it once, in the
   *     job that writes the files).
   *
-  * Measures ride the staging action: [[stageMeasured]] computes
-  * aggregates over the staged rows as observed metrics of the one job
-  * that materializes them, so a caller that needs a row count or a
-  * convergence sum runs no second action over blocks it just wrote.
+  * Measures ride the staging action: [[stageMeasured]] counts the
+  * staged rows, and computes any aggregates the caller asks for, as
+  * observed metrics of the one job that materializes them, so a caller
+  * that needs a row count or a convergence sum runs no second action
+  * over blocks it just wrote. The count is also the staged frame's
+  * statistics: every frame staged through [[stageMeasured]] (and so
+  * every [[Fixpoint]] round) carries its own row count, and no
+  * operator attaches statistics by hand.
   *
   * Neither mode registers the plan in the session `CacheManager`
   * (`persist()` does, and every later query then pays plan
@@ -84,35 +88,42 @@ object Staging {
       case _ => ()
     }
     if (eager)
-      try org.apache.spark.sql.GraftSqlBridge.materialize(out)
+      try GraftSqlBridge.materialize(out)
       catch { case t: Throwable => release(out); throw t }
     out
   }
 
   private val measureIds = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Stage `df` eagerly and compute `measures` (aggregate columns) over
-    * its rows in the same action: they are observed metrics
-    * (`Dataset.observe`) of the job that materializes the staged frame —
-    * `doCheckpoint` for local checkpoints, the file write for reliable
-    * ones — so no second action re-reads what that job just wrote. The
-    * row holds the measures in order, typed as `df.agg(measures)` would
-    * type them (an empty or 0-partition frame measures the empty
-    * aggregate: count 0, sum NULL). If reading them fails the staged
-    * frame is released before the throw propagates. */
-  def stageMeasured(df: DataFrame, measures: Seq[Column]): (DataFrame, Row) = {
+  /** Stage `df` eagerly, count its rows and compute `measures` (aggregate
+    * columns, possibly none) over them in the same action: they are
+    * observed metrics (`Dataset.observe`) of the job that materializes
+    * the staged frame — `doCheckpoint` for local checkpoints, the file
+    * write for reliable ones — so no second action re-reads what that
+    * job just wrote. The staged frame comes back carrying its row count
+    * as statistics ([[GraftSqlBridge.withKnownStats]]), so joins
+    * against it plan from its true size. Returns (staged frame,
+    * row count, measures): the row holds the measures in order, typed as
+    * `df.agg(measures)` would type them (an empty or 0-partition frame
+    * measures the empty aggregate: count 0, sum NULL). If reading them
+    * fails the staged frame is released before the throw propagates. */
+  def stageMeasured(df: DataFrame,
+      measures: Seq[Column]): (DataFrame, Long, Row) = {
     val name = s"graft_stage_${measureIds.incrementAndGet()}"
-    val observed = df.observe(name, measures.head, measures.tail: _*)
+    val observed = df.observe(name, count(lit(1)), measures: _*)
     val staged = stage(observed, eager = true)
-    try (staged, observed.queryExecution.observedMetrics(name))
-    catch { case t: Throwable => release(staged); throw t }
+    try {
+      val m = observed.queryExecution.observedMetrics(name)
+      val rows = m.getLong(0)
+      (GraftSqlBridge.withKnownStats(staged, rows), rows,
+        Row.fromSeq(m.toSeq.tail))
+    } catch { case t: Throwable => release(staged); throw t }
   }
 
-  /** [[stageMeasured]] for the common case: stage eagerly and return the
-    * staged frame with its row count, counted by the staging job. */
+  /** [[stageMeasured]] with no measures beyond the row count. */
   def stageCounted(df: DataFrame): (DataFrame, Long) = {
-    val (staged, m) = stageMeasured(df, Seq(count(lit(1))))
-    (staged, m.getLong(0))
+    val (staged, rows, _) = stageMeasured(df, Nil)
+    (staged, rows)
   }
 
   /** Conf key: target bytes per shuffle partition inside an iterated

@@ -1531,11 +1531,7 @@ object Graph {
       import spark.implicits._
       val tt = Tables(spark, dir)
       val e = tradeFlowEdges(tt.orders, tt.lineitem)
-      // trade edges are distinct with no self-loops by construction
-      // (groupBy-derived pairs; src/dst parity differs within each
-      // branch and across branches) — skip run()'s renormalization
-      val res = Scc.run(e, "src", "dst", edgesClean = true)
-      sccOut(res)
+      sccOut(Scc.run(e, "src", "dst"))
     },
 
     // Incremental SCC maintenance — the q307/q328 production shape
@@ -1591,7 +1587,7 @@ object Graph {
             .select(($"s" * 2 + 1).as("src"), ($"c" * 2).as("dst")))
       val corpus = edgesOf(b.filter(!$"isDelta"))
       val delta = edgesOf(b.filter($"isDelta"))
-      val standing = Scc.run(corpus, "src", "dst", edgesClean = true)
+      val standing = Scc.run(corpus, "src", "dst")
       val condE = Scc.condensationEdges(corpus, standing, "src", "dst")
       val (labels, _) =
         Scc.incremental(standing, condE, delta, "src", "dst")
@@ -1656,7 +1652,7 @@ object Graph {
       // the edge leaf — unstaged, the corpus join+groupBy ran twice
       val e = Staging.stage(
         tradeFlowEdges(tt.orders, tt.lineitem), eager = true)
-      val labels = Scc.run(e, "src", "dst", edgesClean = true)
+      val labels = Scc.run(e, "src", "dst")
       val cond = Scc.condensationEdges(e, labels, "src", "dst")
       val sz = labels.groupBy($"scc")
         .agg(count(lit(1)).cast(LongType).as("csize"))
@@ -1775,13 +1771,13 @@ object Graph {
       val tt = Tables(spark, dir)
       val eAll = Staging.stage(
         tradeFlowEdges(tt.orders, tt.lineitem), eager = true)
-      val standing = Scc.run(eAll, "src", "dst", edgesClean = true)
+      val standing = Scc.run(eAll, "src", "dst")
       val deleted = eAll.filter($"src" % 2 === 1 &&
         TextOps.hashMod(concat(lit("sccdel:"),
           expr("src DIV 2").cast("string")))
           < lit(TextOps.P / SccDelFrac))
       val labels = Scc.decremental(standing, eAll, deleted,
-        "src", "dst", edgesClean = true)
+        "src", "dst")
       val out = sccOut(labels)
       Staging.release(eAll)
       out
@@ -1900,7 +1896,7 @@ object Graph {
       val tt = Tables(spark, dir)
       val eAll = Staging.stage(
         tradeFlowEdges(tt.orders, tt.lineitem), eager = true)
-      val standing = Scc.run(eAll, "src", "dst", edgesClean = true)
+      val standing = Scc.run(eAll, "src", "dst")
       val condSup = Staging.stage(
         Scc.condensationSupport(eAll, standing, "src", "dst"),
         eager = true)
@@ -1909,7 +1905,7 @@ object Graph {
           expr("src DIV 2").cast("string")))
           < lit(TextOps.P / SccDelFrac))
       val (_, cond) = Scc.decrementalState(standing, condSup, eAll,
-        deleted, "src", "dst", edgesClean = true)
+        deleted, "src", "dst")
       cond.select(($"csrc" % 2).as("a_kind"),
         expr("csrc DIV 2").as("a_key"),
         ($"cdst" % 2).as("b_kind"), expr("cdst DIV 2").as("b_key"),
@@ -1944,14 +1940,14 @@ object Graph {
         < lit(TextOps.P / 6L)) && !delPred
       val corpus0 = eAll.filter(!insPred)
       val ins = eAll.filter(insPred)
-      val standing = Scc.run(corpus0, "src", "dst", edgesClean = true)
+      val standing = Scc.run(corpus0, "src", "dst")
       val condSup0 = Staging.stage(
         Scc.condensationSupport(corpus0, standing, "src", "dst"),
         eager = true)
       val del = corpus0.filter(delPred)
       // epoch step 1: deletions, with the arc state maintained —
       val (lab1, cond1) = Scc.decrementalState(standing, condSup0,
-        corpus0, del, "src", "dst", edgesClean = true)
+        corpus0, del, "src", "dst")
       val cond1s = Staging.stage(cond1, eager = true)
       // — step 2: the MAINTAINED pair feeds the insert-side
       // incremental directly (the handoff q367's state exists for)

@@ -63,8 +63,8 @@ object GraftSqlBridge {
     * join+aggregate-derived sliver are size-only ESTIMATES that blow up
     * to left×right at the join (the loops' label/rank tables all derive
     * through joins), so every iterated loop had to hand-place
-    * `broadcast()` hints; with the TRUE row count the caller already
-    * knows (graph loops count their node sliver anyway),
+    * `broadcast()` hints; with the TRUE row count (`Staging.stageMeasured`
+    * counts every frame it stages, in the staging job),
     * Catalyst makes the broadcast-vs-shuffle decision itself — and makes
     * the OPPOSITE, correct decision when the sliver outgrows the
     * threshold at 100x. Size = rows × (8 + Σ defaultSize), Spark's own

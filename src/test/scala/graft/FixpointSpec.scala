@@ -43,7 +43,7 @@ class FixpointSpec extends SparkTestBase {
     try {
       Fixpoint.scope("counted", in) {
         Fixpoint.iterate("counted", "rounds", rounds, in,
-            Seq(sum($"v")), _ => 100L, None)((d, _, _) => growing(d))._1
+            Seq(sum($"v")), None)((d, _, _) => growing(d))._1
       }
       org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
     } finally spark.listenerManager.unregister(listener)
@@ -60,7 +60,7 @@ class FixpointSpec extends SparkTestBase {
     val in = input()
     val (last, s) = Fixpoint.scope("pinned", in) {
       Fixpoint.iterate("pinned", "rounds", 3, in, Seq(sum($"v")),
-        _ => 100L, None)((d, _, _) => growing(d))
+        None)((d, _, _) => growing(d))
     }
     assert(pinned() -- before === rddIds(last))
     // 100 rows of v = id % 10 start at sum 450; three rounds add 300
@@ -74,7 +74,7 @@ class FixpointSpec extends SparkTestBase {
     val err = intercept[IllegalStateException] {
       Fixpoint.scope("toy loop", in) {
         Fixpoint.iterate("toy loop", "maxToyRounds", 3, in,
-          Seq(sum($"v")), _ => 100L, Some(Fixpoint.unchanged))(
+          Seq(sum($"v")), Some(Fixpoint.unchanged))(
           (d, _, _) => growing(d))
       }
     }
@@ -92,7 +92,7 @@ class FixpointSpec extends SparkTestBase {
     intercept[Exception] {
       Fixpoint.scope("failing", in) {
         Fixpoint.iterate("failing", "rounds", 5, in, Seq(sum($"v")),
-          _ => 100L, None) { (d, _, i) =>
+          None) { (d, _, i) =>
           // round 2's plan stages fine and fails when measured
           if (i == 1) d.select($"id", raise_error(lit("boom")).as("v"))
           else growing(d)
@@ -101,6 +101,36 @@ class FixpointSpec extends SparkTestBase {
     }
     assert((pinned() -- before).isEmpty)
     assert(spark.conf.get("spark.sql.shuffle.partitions") === parts0)
+  }
+
+  private def statsRows(df: DataFrame): Option[BigInt] =
+    df.queryExecution.optimizedPlan.stats.rowCount
+
+  test("each staged round, and each stageCounted frame, carries its " +
+      "own row count") {
+    val in = input()
+    val seen =
+      scala.collection.mutable.ArrayBuffer.empty[(Option[BigInt], Long)]
+    // each step sees the round just staged, the loop returns the last;
+    // a step keeps the even ids, so every round halves the rows
+    val (last, _) = Fixpoint.scope("halving", in) {
+      Fixpoint.iterate("halving", "rounds", 4, in, Nil, None) {
+        (d, _, _) =>
+          seen += statsRows(d) -> d.count()
+          d.filter($"id" % 2 === 0)
+            .select(($"id" / 2).cast("long").as("id"), $"v")
+      }
+    }
+    seen += statsRows(last) -> last.count()
+    assert(seen.map(_._2) === Seq(100L, 50L, 25L, 13L, 7L))
+    seen.foreach { case (stats, rows) =>
+      assert(stats === Some(BigInt(rows)))
+    }
+    // the same holds outside a loop
+    val (counted, n) = Staging.stageCounted(last.filter($"id" < 3))
+    assert(n === 3L)
+    assert(statsRows(counted) === Some(BigInt(3)))
+    Staging.sweep(spark)
   }
 
   test("Coreness past maxIterations throws IllegalStateException and " +

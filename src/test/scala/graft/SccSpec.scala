@@ -38,6 +38,12 @@ class SccSpec extends SparkTestBase {
     assert(out === Map(5L -> 5L, 6L -> 6L, 7L -> 6L))
   }
 
+  test("a node whose only edge is a self-loop is its own SCC") {
+    // 3 appears only in 3 -> 3; the 1 <-> 2 cycle arrives twice
+    val out = sccs(Seq(3L -> 3L, 1L -> 2L, 2L -> 1L, 1L -> 2L, 2L -> 1L))
+    assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
+  }
+
   test("two disjoint cycles + a bridge keep separate labels") {
     // cycle A {1,2}, cycle B {8,9}, bridge 2 -> 8 (one-way)
     val out = sccs(Seq(1L -> 2L, 2L -> 1L, 8L -> 9L, 9L -> 8L, 2L -> 8L))

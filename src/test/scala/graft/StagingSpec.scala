@@ -100,10 +100,11 @@ class StagingSpec extends SparkTestBase {
 
   private def measuredMatchesAggregate(): Unit =
     frames().foreach { case (label, df) =>
-      val (staged, m) = Staging.stageMeasured(df, measures)
+      val (staged, rows, m) = Staging.stageMeasured(df, measures)
       val direct = staged.agg(measures.head, measures.tail: _*).head()
       assert(m === direct, label)
-      assert(staged.count() === m.getLong(0), label)
+      assert(staged.count() === rows, label)
+      assert(rows === m.getLong(0), label)
       Staging.release(staged)
     }
 
